@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from flow_spark.catalog import load_table
 from flow_spark.queries.registry import register
+from flow_spark.session import _env_int
 
 
 def _drain(q, timeout: int = 1800) -> None:
@@ -56,13 +57,11 @@ def _state_parts(spark: SparkSession, default: int = 8):
     constant (checkpoints are per-invocation scratch dirs, so the width
     is free to change between runs).
     """
-    import os as _os
-
     conf = spark.conf
     prev = conf.get("spark.sql.shuffle.partitions")
     conf.set(
         "spark.sql.shuffle.partitions",
-        _os.environ.get("SPARK_GRAFT_STATE_PARTS", str(default)),
+        str(_env_int("SPARK_GRAFT_STATE_PARTS", default, 1)),
     )
     try:
         yield
@@ -1412,7 +1411,7 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_parts = conf.get("spark.sql.shuffle.partitions")
     conf.set(
         "spark.sql.shuffle.partitions",
-        _os.environ.get("SPARK_GRAFT_SSAJ_STATE_PARTS", "8"),
+        str(_env_int("SPARK_GRAFT_SSAJ_STATE_PARTS", 8, 1)),
     )
     try:
         q = (

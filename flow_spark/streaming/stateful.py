@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from flow_spark.session import _env_int
+
 _NS = 1_000_000_000
 
 OUTPUT_SCHEMA = StructType(
@@ -89,10 +91,8 @@ def throttle_stream(
     event-time order, so GCRA admissions are unchanged row for row.
     Env knob ``SPARK_GRAFT_GCRA_BUCKETS`` (default 32).
     """
-    import os
-
     if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_GCRA_BUCKETS", "32"))
+        n_buckets = _env_int("SPARK_GRAFT_GCRA_BUCKETS", 32, 1)
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     key_expr = (
@@ -214,10 +214,8 @@ def sessionize_stream(
 
     Input must already carry ``withWatermark(ts_col, ...)``.
     """
-    import os
-
     if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_SESSION_BUCKETS", "32"))
+        n_buckets = _env_int("SPARK_GRAFT_SESSION_BUCKETS", 32, 1)
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     gap_us = gap_minutes * 60 * 1_000_000
@@ -362,10 +360,8 @@ def funnel_stream(
     ((-1, -1)) are dropped from state, since an absent key IS the reset
     state.  Env knob ``SPARK_GRAFT_CEP_BUCKETS`` (default 32).
     """
-    import os
-
     if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_CEP_BUCKETS", "32"))
+        n_buckets = _env_int("SPARK_GRAFT_CEP_BUCKETS", 32, 1)
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     prepared = df.select(
@@ -585,10 +581,8 @@ def twa_stream(
     those), so the emitted row set is identical.  Env knob
     ``SPARK_GRAFT_TWA_BUCKETS`` (default 32).
     """
-    import os
-
     if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_TWA_BUCKETS", "32"))
+        n_buckets = _env_int("SPARK_GRAFT_TWA_BUCKETS", 32, 1)
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     prepared = df.select(
@@ -834,10 +828,9 @@ def asof_join_stream(
     is NULL when no right row precedes the left row.
     """
     import bisect
-    import os
 
     if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_SSAJ_BUCKETS", "32"))
+        n_buckets = _env_int("SPARK_GRAFT_SSAJ_BUCKETS", 32, 1)
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
 

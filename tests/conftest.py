@@ -5,7 +5,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import flow_spark (pickled operators, the worker daemon)
+# whatever directory the suite is started from
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

@@ -5,10 +5,12 @@ bridge spool, streaming query, delivered rows."""
 from __future__ import annotations
 
 import socket
+from pathlib import Path
 
 from flow_spark.plans.builder import Pipeline
 
-EXAMPLE = "/root/reference/examples/tcp2stdout-config.yml"
+EXAMPLES = Path(__file__).parent / "fixtures" / "examples"
+EXAMPLE = EXAMPLES / "tcp2stdout-config.yml"
 
 
 def test_reference_tcp_example_runs_live(spark, tmp_path):
@@ -61,7 +63,7 @@ def test_reference_udp2tcp_example_delivers_over_socket(spark, tmp_path):
     from test_streaming import _CaptureServer
 
     srv = _CaptureServer("tcp", ("127.0.0.1", 0))
-    yaml_text = open("/root/reference/examples/udp2tcp-config.yml").read()
+    yaml_text = open(EXAMPLES / "udp2tcp-config.yml").read()
     p = Pipeline.from_yaml(
         spark,
         yaml_text,

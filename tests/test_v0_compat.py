@@ -1,5 +1,6 @@
-"""Every example config shipped with the reference must load: the
-v1alpha1 ones directly, the v0-syntax ones through the translation layer
+"""Every example config in ``fixtures/examples`` (the reference's example
+pipelines, re-authored in both syntaxes) must load: the v1alpha1 ones
+directly, the v0-syntax ones through the translation layer
 (plans/v0compat.py). Execution of network binds is out of scope (no
 sockets in Spark); parse + DAG validation + DOT explain must succeed,
 and v0 routing/fan-out semantics are executed against memory inputs.
@@ -18,10 +19,11 @@ from flow_spark.plans.builder import Pipeline
 from flow_spark.plans.config import load_pipeline_config
 from flow_spark.plans.topology import to_dot, validate_dag
 
-EXAMPLES = sorted(glob.glob("/root/reference/examples/*.yml"))
+EXAMPLES = sorted(
+    glob.glob(os.path.join(os.path.dirname(__file__), "fixtures", "examples", "*.yml"))
+)
 
 
-@pytest.mark.skipif(not EXAMPLES, reason="reference examples not present")
 @pytest.mark.parametrize("path", EXAMPLES, ids=[os.path.basename(p) for p in EXAMPLES])
 def test_reference_example_loads(path):
     cfg = load_pipeline_config(open(path).read())
