@@ -1,0 +1,51 @@
+package flow_spark.jvm;
+
+import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
+
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
+import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
+
+/**
+ * Hadoop's checksummed local FileContext filesystem (LocalFs) over
+ * NioRawLocalFileSystem.
+ */
+public class NioLocalFs extends ChecksumFs {
+  public NioLocalFs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+    super(new Raw(uri, conf));
+  }
+
+  /** org.apache.hadoop.fs.local.RawLocalFs, whose constructor is package-private. */
+  static final class Raw extends DelegateToFileSystem {
+    Raw(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(uri, new NioRawLocalFileSystem(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    @Deprecated
+    public FsServerDefaults getServerDefaults() throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
+    }
+  }
+}

@@ -14,13 +14,35 @@ Spark's archives (pyspark.zip, the spark-core jar) off the workers'
 task stops re-reading their directories; with no matching installed pyspark
 it falls back to plain ``pyspark.daemon``.  A session whose workers cannot
 import ``flow_spark``, or whose master is not local, keeps ``pyspark.daemon``.
+
+Local sessions also get a ``file:`` filesystem that makes permission sets and
+symlink probes syscalls.  With no ``libhadoop`` in the Spark build, Hadoop's
+raw local filesystem forks ``chmod`` on every create and mkdir and
+``readlink`` twice per ``FileContext`` rename, about 6 ms a fork; the offset
+log, commit log and state-store files of every micro-batch pay those forks.
+``get_spark`` compiles the three classes in ``flow_spark/jvm/`` with ``javac``
+against the ``hadoop-client-api`` jar Spark launches with, once per source
+hash under ``tempfile.gettempdir()``, puts them on the driver classpath and
+sets ``fs.file.impl`` and ``fs.AbstractFileSystem.file.impl``.  Checksums
+(``.crc`` sidecars), atomic renames and the umask are Hadoop's own.  It
+applies only to a ``local``/``local[...]`` master, whose executors share the
+driver JVM, because executors in other JVMs lack the classes.  Without
+``javac`` the session keeps Hadoop's default filesystem and logs a warning;
+a failed compile raises with javac's stderr.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import shutil
 import site
+import subprocess
+import tempfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 
@@ -45,6 +67,15 @@ DEFAULT_SHUFFLE_PARTITIONS = _env_int("SPARK_GRAFT_CPUS", 32, 1)
 #: ``spark.driver.memory`` ceiling when SPARK_GRAFT_DRIVER_MEM is unset
 MAX_DRIVER_MEM_GB = 16
 WORKER_DAEMON = "flow_spark.worker_daemon"
+#: Java sources of the fork-free ``file:`` filesystem
+JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+LOCAL_FS_IMPLS = {
+    "spark.hadoop.fs.file.impl": "flow_spark.jvm.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "flow_spark.jvm.NioLocalFs",
+}
+DRIVER_CLASSPATH = "spark.driver.extraClassPath"
+
+log = logging.getLogger(__name__)
 
 
 def default_driver_memory() -> str:
@@ -65,6 +96,60 @@ def workers_import_engine() -> bool:
         *site.getsitepackages(),
     ]
     return any(c and os.path.realpath(c) == os.path.realpath(root) for c in candidates)
+
+
+def local_fs_conf(master: str | None, classes: str | None, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with the fork-free ``file:`` filesystem selected: the
+    compiled ``classes`` directory appended to its driver classpath, and both
+    ``file:`` impl settings unless ``conf`` names its own.  ``conf``
+    unchanged when ``classes`` is None (no ``javac``) or ``master`` runs
+    executors outside the driver JVM (anything but ``local``/``local[...]``,
+    ``local-cluster`` included), where the classes are not on the path."""
+    in_driver = master == "local" or (master or "").startswith("local[")
+    if not in_driver or classes is None:
+        return dict(conf)
+    return {
+        **LOCAL_FS_IMPLS,
+        **conf,
+        DRIVER_CLASSPATH: os.pathsep.join(p for p in (conf.get(DRIVER_CLASSPATH), classes) if p),
+    }
+
+
+def build_local_fs(jars_dir: str, javac: str | None) -> str | None:
+    """Directory of the ``flow_spark/jvm/`` classes compiled against the
+    ``hadoop-client-api`` jar in ``jars_dir``, named by the hash of the
+    sources and that jar under ``tempfile.gettempdir()`` and reused when it
+    is there.  None, with a warning, when ``javac`` is None; a failed
+    compile raises ``RuntimeError`` carrying javac's stderr."""
+    if javac is None:
+        log.warning("no javac on PATH: local file: I/O keeps Hadoop's forking filesystem")
+        return None
+    sources = sorted(glob.glob(os.path.join(JVM_SRC, "*.java")))
+    jars = sorted(glob.glob(os.path.join(jars_dir, "hadoop-client-api-*.jar")))
+    digest = hashlib.sha256()
+    for path in sources:
+        with open(path, "rb") as f:
+            digest.update(os.path.basename(path).encode() + b"\0" + f.read())
+    for jar in jars:
+        digest.update(os.path.basename(jar).encode())
+    out = os.path.join(tempfile.gettempdir(), f"flow_spark-jvm-{digest.hexdigest()[:16]}")
+    if os.path.isdir(out):
+        return out
+    # compile aside, then move into place: a concurrent session either
+    # wins the rename or finds the directory already there
+    tmp = tempfile.mkdtemp(prefix="flow_spark-jvm-build-")
+    cmd = [javac, "--release", "17", "-d", tmp, "-cp", os.pathsep.join(jars), *sources]
+    proc = subprocess.run(cmd, capture_output=True, text=True)
+    if proc.returncode != 0:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(f"{' '.join(cmd)} failed ({proc.returncode}):\n{proc.stderr}")
+    try:
+        os.replace(tmp, out)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(out):
+            raise
+    return out
 
 
 def get_spark(
@@ -116,11 +201,16 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    # executors on other hosts see neither this working directory nor
-    # this PYTHONPATH, so only local workers get the engine's daemon
-    if master and master.startswith("local") and workers_import_engine():
+    # executors on other hosts see neither this working directory, this
+    # PYTHONPATH nor the compiled classes, so only local sessions get the
+    # engine's daemon and (see local_fs_conf) filesystem
+    local = bool(master) and master.startswith("local")
+    if local and workers_import_engine():
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
-    for k, v in (extra_conf or {}).items():
+    classes = None
+    if local:
+        classes = build_local_fs(os.path.join(_find_spark_home(), "jars"), shutil.which("javac"))
+    for k, v in local_fs_conf(master, classes, extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -72,15 +72,21 @@ def test_reference_udp2tcp_example_delivers_over_socket(spark, tmp_path):
             "actors.tcp_sink.params.bind": f"tcp://127.0.0.1:{srv.addr[1]}",
         },
     )
+    staged: list = []
     queries = []
     try:
-        queries = p.run_streaming(checkpoint_dir=str(tmp_path / "ckpt"))
+        # the socket sink head drains once (availableNow): start its query
+        # only after the records are spooled, or a query that starts
+        # sooner than the client sends finds nothing and stops
+        p.run_streaming(sink_writer=lambda name, df: staged.append((name, df)))
         port = p._bridges[0].port
         with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
             s.sendall(b"one\r\ntwo\r\n")
             f = s.makefile("rb")
             assert [f.readline().rstrip(b"\r\n") for _ in range(2)] == [b"OK"] * 2
         p._bridges[0].flush()
+        write = p.default_sink_writer(str(tmp_path / "ckpt"))
+        queries = [write(name, df) for name, df in staged]
         for q in queries:
             q.processAllAvailable()
         deadline = time.time() + 15
