@@ -2,7 +2,9 @@
 
 Mirrors the driver's correctness gate: for each registered query, run the
 Spark builder AND the oracle SQL on the same parquet fixture tables, then
-compare row count, column names, and order-insensitive values.  Used by
+compare row count, column names, and order-insensitive values.  A query
+without oracle SQL is checked by its registered invariant over the same
+tables, and fails when it has none.  Used by
 ``tests/test_parity.py`` so mismatches are caught before the driver runs.
 """
 
@@ -64,12 +66,16 @@ def check_query(spark: SparkSession, q: Query, sf_dir: str) -> ParityResult:
     spark_cols = list(sdf.columns)
     spark_rows = [tuple(r) for r in sdf.collect()]
 
-    if q.oracle is None:
-        ok = len(spark_rows) >= 0
-        return ParityResult(q.name, ok, "rows-only check (no oracle)", len(spark_rows), None)
+    if q.oracle is None and q.invariant is None:
+        return ParityResult(
+            q.name, False, "no oracle and no invariant: result unverifiable", len(spark_rows), None
+        )
 
     con = duckdb_connection(sf_dir)
     try:
+        if q.oracle is None:
+            problem = q.invariant(con, spark_cols, spark_rows)
+            return ParityResult(q.name, problem is None, problem or "invariant holds", len(spark_rows), None)
         cur = con.execute(q.oracle)
         oracle_cols = [d[0] for d in cur.description]
         oracle_rows = [tuple(r) for r in cur.fetchall()]

@@ -9,18 +9,24 @@ views).  The driver hashes sorted result values, so:
   order doesn't flip the last bits;
 - outputs are primitive columns only (no arrays/maps/structs in results).
 
-Queries whose semantics aren't SQL-expressible (custom stateful streaming)
-register with ``oracle=None`` → the driver records a rows-only check.
+A query whose result no SQL can reproduce (an approximate sketch, an
+iteratively trained index) registers with ``oracle=None`` and an
+``invariant`` instead: a check over the same tables that can fail.
+``oracle.check_query`` fails a query that has neither.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
+#: (DuckDB connection with the fixture views, result columns, result rows)
+#: -> why the result is wrong, or None when it holds
+Invariant = Callable[[Any, list[str], list[tuple]], str | None]
 
 
 @dataclass(frozen=True)
@@ -31,6 +37,7 @@ class Query:
     category: str  # SURVEY §2 category tag
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    invariant: Invariant | None = None  # the check when oracle is None
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -43,13 +50,16 @@ def register(
     category: str,
     doc: str = "",
     tags: tuple[str, ...] = (),
+    invariant: Invariant | None = None,
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name, fn, oracle, category, doc or (fn.__doc__ or ""), tags)
+        _REGISTRY[name] = Query(
+            name, fn, oracle, category, doc or (fn.__doc__ or ""), tags, invariant
+        )
         return fn
 
     return deco

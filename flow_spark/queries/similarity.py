@@ -393,6 +393,44 @@ def sim_range_search_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: sim_pq_adc's recall@10 floor against the exact L2 answer.  Uniform-random
+#: 64-dim vectors are PQ's worst case (distance concentration), so the
+#: shortlist re-rank carries the recall; random guessing lands near 10/n.
+PQ_RECALL_FLOOR = 0.75
+
+
+def pq_recall_at_floor(con, cols: list[str], rows: list[tuple]) -> str | None:
+    """Every query vector (``vec_id % 50 == 0``) gets 10 distinct neighbors
+    other than itself, and recall@10 against the exact L2 top 10 (ties by
+    id), brute-forced over the embeddings DuckDB reads, is at least
+    PQ_RECALL_FLOOR."""
+    import numpy as np
+
+    emb = con.execute("SELECT vec_id, embedding FROM embeddings ORDER BY vec_id").fetchall()
+    ids = np.array([r[0] for r in emb])
+    mat = np.array([r[1] for r in emb], dtype=np.float64)
+    qi, ni = cols.index("query_id"), cols.index("neighbor_id")
+    got: dict[int, list[int]] = {}
+    for r in rows:
+        got.setdefault(r[qi], []).append(r[ni])
+    qpos = np.flatnonzero(ids % 50 == 0)
+    if sorted(got) != ids[qpos].tolist():
+        return f"query ids {sorted(got)}, expected {ids[qpos].tolist()}"
+    hits = 0
+    for p in qpos:
+        qid = int(ids[p])
+        mine = got[qid]
+        if len(set(mine)) != 10 or len(mine) != 10 or qid in mine:
+            return f"query {qid}: neighbors {mine}, expected 10 distinct others"
+        order = np.lexsort((ids, ((mat - mat[p]) ** 2).sum(axis=1)))
+        exact = [int(ids[j]) for j in order if j != p][:10]
+        hits += len(set(mine) & set(exact))
+    recall = hits / (10 * len(qpos))
+    if recall < PQ_RECALL_FLOOR:
+        return f"recall@10 {recall:.3f} is below the floor {PQ_RECALL_FLOOR}"
+    return None
+
+
 @register(
     "sim_pq_adc",
     category="similarity",
@@ -403,12 +441,13 @@ def sim_range_search_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "queries scored by element_at lookups against per-query distance "
     "tables built in-plan, then the 100-candidate ADC shortlist "
     "re-ranked by exact L2 (only the shortlist's full vectors are "
-    "read).  Rows-only by design: k-means training is iterative and "
-    "not SQL-expressible; pytest pins recall@10 >= 0.75 against the "
-    "exact answer and determinism across partitionings "
-    "(tests/test_pq.py).  At 100 TB the first-pass scan reads 8-byte "
+    "read).  No oracle SQL: k-means training is iterative and not "
+    "SQL-expressible; the invariant pins recall@10 >= 0.75 against the "
+    "brute-force exact answer, and tests/test_pq.py pins determinism "
+    "across partitionings.  At 100 TB the first-pass scan reads 8-byte "
     "codes instead of 256-byte float32 vectors.",
     oracle=None,
+    invariant=pq_recall_at_floor,
 )
 def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.operators.similarity import pq_adc_topk, pq_train

@@ -12,8 +12,8 @@ Two tiers:
   (``hll_sketch_agg``) — the production path at 100 TB (fixed 2^lgk
   registers per group, mergeable across partitions).  The sketch binary
   and its estimate are implementation-defined, so no cross-engine value
-  oracle exists; accuracy is asserted against exact NDV in
-  ``tests/test_operators.py`` instead (rows-only driver check, by design).
+  oracle exists.  Its registered invariant checks each estimate against the
+  exact NDV DuckDB counts over the same table, within the HLL error bound.
 
 The reference has no sketches (its only probabilistic structure is jump
 hash, `pkg/util/hash/jump.go`); this is north-star engine surface for
@@ -21,6 +21,8 @@ hash, `pkg/util/hash/jump.go`); this is north-star engine surface for
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,17 +101,44 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: DataSketches HLL at lgk=12: three relative standard errors of
+#: 1.04/sqrt(2^12), about 4.9%
+HLL_ERROR_BOUND = 3 * 1.04 / math.sqrt(1 << 12)
+
+
+def hll_within_error_bound(con, cols: list[str], rows: list[tuple]) -> str | None:
+    """Every flag's ``n_exact`` equals DuckDB's exact NDV and its
+    ``ndv_estimate`` lies within HLL_ERROR_BOUND of it."""
+    exact = dict(
+        con.execute(
+            "SELECT l_returnflag, COUNT(DISTINCT l_partkey) FROM lineitem GROUP BY 1"
+        ).fetchall()
+    )
+    flag, est, n_exact = (cols.index(c) for c in ("flag", "ndv_estimate", "n_exact"))
+    if sorted(r[flag] for r in rows) != sorted(exact):
+        return f"flags {[r[flag] for r in rows]}, expected {sorted(exact)}"
+    for r in rows:
+        n = exact[r[flag]]
+        if r[n_exact] != n:
+            return f"flag {r[flag]}: n_exact {r[n_exact]}, exact NDV {n}"
+        if abs(r[est] - n) > HLL_ERROR_BOUND * n:
+            return f"flag {r[flag]}: estimate {r[est]} is more than {HLL_ERROR_BOUND:.1%} off {n}"
+    return None
+
+
 @register(
     "sketch_hll_native",
     category="sketch",
-    oracle=None,  # DataSketches HLL estimates are implementation-defined;
-    # accuracy vs exact NDV asserted in tests/test_operators.py
+    # DataSketches HLL estimates are implementation-defined: no oracle SQL
+    oracle=None,
+    invariant=hll_within_error_bound,
     doc="Spark-native DataSketches HLL (hll_sketch_agg, lgk=12) NDV per "
     "l_returnflag — the mergeable production sketch: partial sketches "
     "combine associatively across partitions (map-side), so the shuffle "
-    "carries 4 KB per group instead of every distinct key. Rows-only "
-    "driver check by design (no cross-engine value oracle exists for "
-    "the sketch binary); tests assert <5% error against exact NDV.",
+    "carries 4 KB per group instead of every distinct key. No "
+    "cross-engine value oracle exists for the sketch binary; the "
+    "invariant holds each estimate within 3 standard errors (4.9%) of "
+    "the exact NDV.",
 )
 def sketch_hll_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")

@@ -29,6 +29,13 @@ applies only to a ``local``/``local[...]`` master, whose executors share the
 driver JVM, because executors in other JVMs lack the classes.  Without
 ``javac`` the session keeps Hadoop's default filesystem and logs a warning;
 a failed compile raises with javac's stderr.
+
+Spark's static codegen cache (``spark.sql.codegen.cache.maxEntries``, keyed
+by generated code text) holds ``CODEGEN_CACHE_ENTRIES`` classes instead of
+Spark's 100: the six stateful drains alone generate about 100 distinct
+classes, so at 100 entries a session evicted and recompiled them with Janino
+on every round.  The setting is static, so a session built outside
+``get_spark`` and handed to ``__spark_entry__._configure`` keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -74,6 +81,9 @@ LOCAL_FS_IMPLS = {
     "spark.hadoop.fs.AbstractFileSystem.file.impl": "flow_spark.jvm.NioLocalFs",
 }
 DRIVER_CLASSPATH = "spark.driver.extraClassPath"
+#: ``spark.sql.codegen.cache.maxEntries``: the engine's working set of
+#: generated classes, with room to spare
+CODEGEN_CACHE_ENTRIES = 1000
 
 log = logging.getLogger(__name__)
 
@@ -190,6 +200,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Optional connector bootstrap: point SPARK_GRAFT_EXTRA_JARS at local
     # jar paths (comma-separated) to un-gate kafka/avro/jdbc without any

@@ -1,29 +1,54 @@
-"""Stateful streaming operators: the GCRA throttler.
+"""Stateful streaming operators over ``applyInPandasWithState``: the GCRA
+throttler, sessionization, funnel CEP, Misra-Gries heavy hitters, the
+time-weighted average, the exact quantile monitor and the stream-stream
+as-of join.
 
-Reference: /root/reference/pkg/corev1alpha1/actor/throttler.go:126-147 —
-GCRA admission via CAS on the theoretical-arrival-time (TAT): per message
-cost = 1e9/rps ns, burst capacity = 1e9 - cost ns (throttler.go:36-38);
-a message is admitted iff TAT hasn't run more than the burst ahead of now,
-and admission advances TAT by the cost.
+GCRA follows flow's throttler (``pkg/corev1alpha1/actor/throttler.go``
+126-147): admission via CAS on the theoretical-arrival-time (TAT), per
+message cost = 1e9/rps ns, burst capacity = 1e9 - cost ns; a message is
+admitted iff TAT hasn't run more than the burst ahead of now, and admission
+advances TAT by the cost.  "Now" is EVENT time (deterministic, replay-safe)
+rather than the reference's wall clock, so the admission rate is identical
+in steady state and testable.  Keys partition the state: the global bucket
+(``''`` key) serializes through one state partition (SURVEY.md §7).
 
-Spark mapping: per-key state in the state store via applyInPandasWithState;
-"now" is EVENT time (deterministic, replay-safe) rather than the
-reference's wall clock — the admission rate is identical in steady state
-and testable.  Keys partition the state: the global bucket ('' key)
-serializes through one state partition, documented cap (SURVEY.md §7).
+State codec.  Every operator here keeps its group's state in the one
+Spark state schema ``STATE_SCHEMA``: a single ``BinaryType`` column holding
+one Arrow IPC stream with one record batch.  Each operator declares that
+batch's ``pyarrow`` schema beside itself (``GCRA_STATE``, ``ASOF_STATE``,
+...), and ``pack_state``/``unpack_state`` write and read it.  A bucketed
+operator's batch has one row per key: row i of every column belongs to the
+key in row i of the first column, which ``load_keyed``/``save_keyed`` turn
+into a ``key -> [other columns]`` dict and back.  The codec is Arrow, never
+pickle, because state is read back from checkpoints and unpickling runs
+code; an int outside int64 raises instead of wrapping.
+
+Why binary: the state serializer Spark generates for an array-valued state
+struct names its fields after global ``MapObjects`` lambda ids, so its code
+text (the codegen cache key) differed for every query and every drain
+recompiled it with Janino.  The binary column's serializer is the same code
+in every query, so it compiles once per JVM.
+
+The state FORMAT changed with this codec: a checkpoint written with the
+earlier array-valued state structs is rejected by Spark's state schema
+compatibility check on restart (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``).
+Restart such a query from a fresh checkpoint.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import itertools
+from collections.abc import Iterator, Sequence
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
+    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -34,6 +59,74 @@ from flow_spark.session import _env_int
 
 _NS = 1_000_000_000
 
+#: the Spark state schema of every operator in this module: one Arrow IPC
+#: stream (one record batch, the operator's declared Arrow schema)
+STATE_SCHEMA = StructType([StructField("batch", BinaryType())])
+
+
+def _to_arrow(values: Sequence, typ: pa.DataType) -> pa.Array:
+    if pa.types.is_list(typ):
+        offsets = np.zeros(len(values) + 1, dtype=np.int32)
+        np.cumsum([len(v) for v in values], out=offsets[1:])
+        flat = list(itertools.chain.from_iterable(values))
+        return pa.ListArray.from_arrays(pa.array(offsets), _to_arrow(flat, typ.value_type))
+    if typ == pa.int64():
+        # numpy converts a Python int list far faster than pa.array, and
+        # raises OverflowError for an int outside int64
+        return pa.array(np.array(values, dtype=np.int64))
+    return pa.array(values, type=typ)
+
+
+def _to_python(arr: pa.Array) -> list:
+    if pa.types.is_list(arr.type):
+        flat = _to_python(arr.values)
+        offsets = arr.offsets.to_numpy().tolist()
+        return [flat[a:b] for a, b in zip(offsets, offsets[1:])]
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
+def pack_state(schema: pa.Schema, columns: Sequence[Sequence]) -> bytes:
+    """One Arrow IPC stream holding ``columns`` (Python lists, in
+    ``schema``'s field order) as one record batch."""
+    arrays = [_to_arrow(c, f.type) for c, f in zip(columns, schema, strict=True)]
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, schema) as writer:
+        writer.write_batch(pa.record_batch(arrays, schema=schema))
+    return sink.getvalue().to_pybytes()
+
+
+def unpack_state(schema: pa.Schema, blob: bytes) -> list[list]:
+    """The columns of a ``pack_state`` stream as Python lists; raises
+    ``ValueError`` when it was written with another schema."""
+    with pa.ipc.open_stream(blob) as reader:
+        if not reader.schema.equals(schema):
+            raise ValueError(f"state written as {reader.schema}, expected {schema}")
+        batch = reader.read_next_batch()
+    return [_to_python(c) for c in batch.columns]
+
+
+def load_state(state, schema: pa.Schema) -> list[list]:
+    """The group's state columns; empty columns when it has no state."""
+    if not state.exists:
+        return [[] for _ in schema]
+    return unpack_state(schema, state.get[0])
+
+
+def save_state(state, schema: pa.Schema, columns: Sequence[Sequence]) -> None:
+    state.update((pack_state(schema, columns),))
+
+
+def load_keyed(state, schema: pa.Schema) -> dict[Any, list]:
+    """The group's per-key sub-states: first column -> [other columns]."""
+    return {k: rest for k, *rest in zip(*load_state(state, schema))}
+
+
+def save_keyed(state, schema: pa.Schema, sub: dict[Any, Sequence]) -> None:
+    """Store ``sub`` (the ``load_keyed`` shape) as the group's state."""
+    rows = list(sub.values())
+    save_state(state, schema, [list(sub), *([r[i] for r in rows] for i in range(len(schema) - 1))])
+
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -43,14 +136,9 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: bucketed per-key TATs (element i of tat_ns belongs to keys[i]) — see
-#: ASOF_STATE_SCHEMA for why stateful operators group on a key BUCKET.
-STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("tat_ns", ArrayType(LongType())),
-    ]
-)
+#: per-key TATs of a key bucket — see ``asof_join_stream`` for why
+#: stateful operators group on a key BUCKET
+GCRA_STATE = pa.schema([("keys", pa.string()), ("tat_ns", pa.int64())])
 
 
 def gcra_admit(
@@ -108,11 +196,7 @@ def throttle_stream(
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         # per-key TATs of this bucket
-        if state.exists:
-            keys, tats = state.get
-            sub = dict(zip(list(keys), list(tats)))
-        else:
-            sub = {}
+        sub = dict(zip(*load_state(state, GCRA_STATE)))
         # buffer the whole group before sorting: a >maxRecordsPerBatch group
         # arrives as SEVERAL Arrow chunks in shuffle order, and GCRA is
         # order-sensitive — per-chunk sorting with cross-chunk TAT carry
@@ -138,7 +222,7 @@ def throttle_stream(
             throttle_status=["admitted" if a else "throttled" for a in admits]
         )
         yield pdf[["event_id", "throttle_key", "ts_ns", "throttle_status"]]
-        state.update((list(sub.keys()), list(sub.values())))
+        save_state(state, GCRA_STATE, [list(sub), list(sub.values())])
 
     return prepared.groupBy("bkey").applyInPandasWithState(
         fn,
@@ -161,17 +245,9 @@ SESSION_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: bucketed per-key open sessions (element i of every array belongs to
-#: keys[i]) — see ASOF_STATE_SCHEMA for why stateful operators group on
-#: a key BUCKET.
-SESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(LongType())),
-        StructField("start_us", ArrayType(LongType())),
-        StructField("last_us", ArrayType(LongType())),
-        StructField("n", ArrayType(LongType())),
-        StructField("total", ArrayType(LongType())),
-    ]
+#: per-key open sessions of a key bucket
+SESSION_STATE = pa.schema(
+    [(c, pa.int64()) for c in ("keys", "start_us", "last_us", "n", "total")]
 )
 
 
@@ -212,6 +288,16 @@ def sessionize_stream(
     min deadline (never later than any member key's own arm point).
     Env knob ``SPARK_GRAFT_SESSION_BUCKETS`` (default 32).
 
+    One-ms re-arm edge: the API takes a timeout strictly above the current
+    watermark, so a bucket call at a watermark EQUAL to a kept key's
+    deadline D (which does not close it: closing needs wm > D) re-arms at
+    D + 1, where the key's own per-key timer, armed at D earlier, fires
+    once wm > D.  The bucket's timer then fires only once wm > D + 1.  A
+    stream whose watermark ends exactly at D + 1 with no later call for
+    that bucket therefore never emits the session, where per-key grouping
+    would.  Any later call for the bucket (its data or another key's
+    timeout) sweeps and closes it as usual.
+
     Input must already carry ``withWatermark(ts_col, ...)``.
     """
     if n_buckets is None:
@@ -232,11 +318,7 @@ def sessionize_stream(
         wm_ms = state.getCurrentWatermarkMs()
         # per-key open sessions of this bucket:
         # skey -> [start_us, last_us, n, total]
-        sub: dict[int, list[int]] = {}
-        if state.exists:
-            keys, sts, lts, ns, tots = state.get
-            for i, k in enumerate(keys):
-                sub[k] = [sts[i], lts[i], ns[i], tots[i]]
+        sub: dict[int, list[int]] = load_keyed(state, SESSION_STATE)
         closed: list[tuple[int, int, int, int, int]] = []
         if not state.hasTimedOut:
             # key-major sort keeps each key's rows in event-time order
@@ -262,30 +344,22 @@ def sessionize_stream(
         # data row can never rescue a swept session: late rows older
         # than the watermark are filtered before the operator, so any
         # row for this key has ts >= wm > last + gap — an inline break.
-        nkeys: list[int] = []
-        nst: list[int] = []
-        nlt: list[int] = []
-        nn: list[int] = []
-        ntot: list[int] = []
+        kept: dict[int, list[int]] = {}
         min_deadline = None
         for skey, cur in sub.items():
             deadline_ms = cur[1] // 1000 + gap_ms
             if wm_ms > deadline_ms:
                 closed.append((skey, cur[0], cur[1], cur[2], cur[3]))
             else:
-                nkeys.append(skey)
-                nst.append(cur[0])
-                nlt.append(cur[1])
-                nn.append(cur[2])
-                ntot.append(cur[3])
+                kept[skey] = cur
                 if min_deadline is None or deadline_ms < min_deadline:
                     min_deadline = deadline_ms
-        if nkeys:
-            state.update((nkeys, nst, nlt, nn, ntot))
+        if kept:
+            save_keyed(state, SESSION_STATE, kept)
             # re-arm at the bucket's min deadline; the API needs a ts
             # strictly above the current watermark — a kept deadline can
             # EQUAL wm (close needs wm strictly greater), so clamp to
-            # wm+1 (same one-ms-edge note as asof_join_stream).
+            # wm+1 (the one-ms edge in the docstring).
             state.setTimeoutTimestamp(max(wm_ms + 1, min_deadline))
         elif state.exists:
             state.remove()
@@ -296,7 +370,7 @@ def sessionize_stream(
     return prepared.groupBy("bkey").applyInPandasWithState(
         fn,
         outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
@@ -312,16 +386,8 @@ FUNNEL_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: bucketed per-key funnel progress (element i of every array belongs to
-#: keys[i]) — see ASOF_STATE_SCHEMA for why stateful operators group on
-#: a key BUCKET.
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(LongType())),
-        StructField("view_us", ArrayType(LongType())),
-        StructField("click_us", ArrayType(LongType())),
-    ]
-)
+#: per-key funnel progress of a key bucket
+FUNNEL_STATE = pa.schema([(c, pa.int64()) for c in ("keys", "view_us", "click_us")])
 
 
 def funnel_stream(
@@ -373,11 +439,7 @@ def funnel_stream(
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         # per-key funnel progress of this bucket: fkey -> [view, click]
-        if state.exists:
-            keys, views, clicks = state.get
-            sub = {k: [v, c] for k, v, c in zip(keys, views, clicks)}
-        else:
-            sub = {}
+        sub = load_keyed(state, FUNNEL_STATE)
         out: list[tuple[int, int, int, int, int]] = []
         # key-major sort keeps each key's rows in (ts, id) order — the
         # per-key state-machine order — while one pass walks key runs
@@ -404,13 +466,7 @@ def funnel_stream(
                     s[1] = -1
         kept = {k: s for k, s in sub.items() if s[0] >= 0 or s[1] >= 0}
         if kept:
-            state.update(
-                (
-                    list(kept.keys()),
-                    [s[0] for s in kept.values()],
-                    [s[1] for s in kept.values()],
-                )
-            )
+            save_keyed(state, FUNNEL_STATE, kept)
         elif state.exists:
             state.remove()
         yield pd.DataFrame(
@@ -421,7 +477,7 @@ def funnel_stream(
     return prepared.groupBy("bkey").applyInPandasWithState(
         fn,
         outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
     )
@@ -436,12 +492,9 @@ MG_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-MG_STATE_SCHEMA = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("items", ArrayType(StringType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
+#: one row per shard: the emission counter and the (item, count) summary
+MG_STATE = pa.schema(
+    [("seq", pa.int64()), ("items", pa.list_(pa.string())), ("counts", pa.list_(pa.int64()))]
 )
 
 
@@ -481,7 +534,7 @@ def heavy_hitters_stream(
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.exists:
-            seq, items, counts = state.get
+            [seq], [items], [counts] = load_state(state, MG_STATE)
             summary = dict(zip(items, counts))
         else:
             seq, summary = 0, {}
@@ -495,7 +548,7 @@ def heavy_hitters_stream(
                 summary = {i: c - dec for i, c in summary.items() if c > dec}
         seq += 1
         items = sorted(summary)
-        state.update((seq, items, [int(summary[i]) for i in items]))
+        save_state(state, MG_STATE, [[seq], [items], [[int(summary[i]) for i in items]]])
         yield pd.DataFrame(
             {
                 "shard": key[0],
@@ -508,7 +561,7 @@ def heavy_hitters_stream(
     return prepared.groupBy("shard").applyInPandasWithState(
         fn,
         outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=MG_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
     )
@@ -526,18 +579,9 @@ TWA_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: bucketed per-key TWA edges and running totals (element i of every
-#: array belongs to keys[i]) — see ASOF_STATE_SCHEMA for why stateful
-#: operators group on a key BUCKET.
-TWA_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(LongType())),
-        StructField("last_us", ArrayType(LongType())),
-        StructField("last_v", ArrayType(LongType())),
-        StructField("n", ArrayType(LongType())),
-        StructField("held_us", ArrayType(LongType())),
-        StructField("acc_num", ArrayType(LongType())),
-    ]
+#: per-key TWA edges and running totals of a key bucket
+TWA_STATE = pa.schema(
+    [(c, pa.int64()) for c in ("keys", "last_us", "last_v", "n", "held_us", "acc_num")]
 )
 
 
@@ -595,17 +639,7 @@ def twa_stream(
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         # per-key TWA sub-states of this bucket:
         # tkey -> [last_us, last_v, n, held, acc]
-        sub: dict[int, list[int]] = {}
-        if state.exists:
-            keys, lus, lvs, ns, helds, accs = state.get
-            for i, k in enumerate(keys):
-                sub[k] = [
-                    int(lus[i]),
-                    int(lvs[i]),
-                    int(ns[i]),
-                    int(helds[i]),
-                    int(accs[i]),
-                ]
+        sub: dict[int, list[int]] = load_keyed(state, TWA_STATE)
         # key-major sort keeps each key's rows in (ts, ord) order — the
         # per-key fold order — while one pass walks key runs
         pdf = pd.concat(list(pdfs)).sort_values(["tkey", "ts_us", "ord"])
@@ -637,16 +671,7 @@ def twa_stream(
             # emit ONLY keys with input this batch (matches per-key form)
             out.append((k, n, held, acc, acc // held if held > 0 else last_v))
             i = j
-        state.update(
-            (
-                list(sub.keys()),
-                [s[0] for s in sub.values()],
-                [s[1] for s in sub.values()],
-                [s[2] for s in sub.values()],
-                [s[3] for s in sub.values()],
-                [s[4] for s in sub.values()],
-            )
-        )
+        save_keyed(state, TWA_STATE, sub)
         yield pd.DataFrame(
             out,
             columns=["tkey", "n_events", "held_us", "acc_num", "twa_cents"],
@@ -655,7 +680,7 @@ def twa_stream(
     return prepared.groupBy("bkey").applyInPandasWithState(
         fn,
         outputStructType=TWA_OUTPUT_SCHEMA,
-        stateStructType=TWA_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf="NoTimeout",
     )
@@ -672,12 +697,8 @@ QM_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-QM_STATE_SCHEMA = StructType(
-    [
-        StructField("vals", ArrayType(LongType())),
-        StructField("cnts", ArrayType(LongType())),
-    ]
-)
+#: the key's (value, count) histogram, one row per distinct value
+QM_STATE = pa.schema([("vals", pa.int64()), ("cnts", pa.int64())])
 
 
 def quantile_monitor_stream(
@@ -705,16 +726,12 @@ def quantile_monitor_stream(
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         batch = pd.concat(list(pdfs))
-        if state.exists:
-            vals, cnts = state.get
-            hist = dict(zip((int(v) for v in vals), (int(c) for c in cnts)))
-        else:
-            hist = {}
+        hist = dict(zip(*load_state(state, QM_STATE)))
         for v, c in batch.groupby("v").size().items():
             v = int(v)
             hist[v] = hist.get(v, 0) + int(c)
         items = sorted(hist.items())
-        state.update(([v for v, _ in items], [c for _, c in items]))
+        save_state(state, QM_STATE, [[v for v, _ in items], [c for _, c in items]])
         n = sum(c for _, c in items)
 
         def rank_value(num: int, den: int) -> int:
@@ -734,7 +751,7 @@ def quantile_monitor_stream(
     return prepared.groupBy("qkey").applyInPandasWithState(
         fn,
         outputStructType=QM_OUTPUT_SCHEMA,
-        stateStructType=QM_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf="NoTimeout",
     )
@@ -749,23 +766,16 @@ ASOF_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: bucketed state: one state-store entry per KEY BUCKET, holding the
-#: parallel per-key sub-states (element i of every array belongs to
-#: keys[i]).  Bucketing exists because applyInPandasWithState pays a
-#: fixed JVM->Python protocol round trip PER GROUP PER BATCH (~0.9 ms
-#: measured) — grouped per key, that term scales with key count;
-#: grouped per bucket it is capped at n_buckets calls per batch
-#: (guide §4: you cannot remove the boundary, but you control how many
-#: times you cross it).
-ASOF_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(LongType())),
-        StructField("pend_ts", ArrayType(ArrayType(LongType()))),
-        StructField("pend_id", ArrayType(ArrayType(LongType()))),
-        StructField("hist_ts", ArrayType(ArrayType(LongType()))),
-        StructField("hist_val", ArrayType(ArrayType(LongType()))),
-        StructField("hist_id", ArrayType(ArrayType(LongType()))),
-    ]
+#: one state-store entry per KEY BUCKET, holding its keys' pending lefts
+#: and right histories.  Bucketing exists because applyInPandasWithState
+#: pays a fixed JVM->Python protocol round trip PER GROUP PER BATCH
+#: (~0.9 ms measured) — grouped per key, that term scales with key count;
+#: grouped per bucket it is capped at n_buckets calls per batch (guide §4:
+#: you cannot remove the boundary, but you control how many times you
+#: cross it).
+ASOF_STATE = pa.schema(
+    [("keys", pa.int64())]
+    + [(c, pa.list_(pa.int64())) for c in ("pend_ts", "pend_id", "hist_ts", "hist_val", "hist_id")]
 )
 
 
@@ -867,17 +877,7 @@ def asof_join_stream(
         wm_us = wm_ms * 1000
         # per-key sub-states of this bucket:
         # akey -> [pend_ts, pend_id, hist_ts, hist_val, hist_id]
-        sub: dict[int, list[list[int]]] = {}
-        if state.exists:
-            keys, pts, pid, hts, hval, hid = state.get
-            for i, k in enumerate(keys):
-                sub[k] = [
-                    list(pts[i]),
-                    list(pid[i]),
-                    list(hts[i]),
-                    list(hval[i]),
-                    list(hid[i]),
-                ]
+        sub: dict[int, list[list[int]]] = load_keyed(state, ASOF_STATE)
         if not state.hasTimedOut:
             # NO cross-chunk sort needed (r08, guide §1.2 per-task work —
             # the concat+sort here was vestigial from the order-sensitive
@@ -919,12 +919,7 @@ def asof_join_stream(
         # moves their emission EARLIER than a per-key timeout would
         # (never later) — the emitted set is unchanged.
         out: list[tuple[int, int, int, "int | None"]] = []
-        nkeys: list[int] = []
-        npts: list[list[int]] = []
-        npid: list[list[int]] = []
-        nhts: list[list[int]] = []
-        nhval: list[list[int]] = []
-        nhid: list[list[int]] = []
+        kept: dict[int, list[list[int]]] = {}
         min_keep = None
         for akey, (pend_ts, pend_id, hist_ts, hist_val, hist_id) in sub.items():
             keep_ts: list[int] = []
@@ -951,18 +946,13 @@ def asof_join_stream(
                     hist_id[drop:],
                 )
             if keep_ts or hist_ts:
-                nkeys.append(akey)
-                npts.append(keep_ts)
-                npid.append(keep_id)
-                nhts.append(hist_ts)
-                nhval.append(hist_val)
-                nhid.append(hist_id)
+                kept[akey] = [keep_ts, keep_id, hist_ts, hist_val, hist_id]
                 # keep_ts came out of the sorted() sweep ascending, so
                 # its head is this key's min pending
                 if keep_ts and (min_keep is None or keep_ts[0] < min_keep):
                     min_keep = keep_ts[0]
-        if nkeys:
-            state.update((nkeys, npts, npid, nhts, nhval, nhid))
+        if kept:
+            save_keyed(state, ASOF_STATE, kept)
             if min_keep is not None:
                 # timeouts fire when the watermark STRICTLY exceeds the
                 # set timestamp, and a left at ms L is sealed once
@@ -995,7 +985,7 @@ def asof_join_stream(
     return prepared.groupBy("bkey").applyInPandasWithState(
         fn,
         outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
