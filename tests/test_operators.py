@@ -157,6 +157,17 @@ def test_approx_count_distinct_error_bound(spark, sf_dir):
     assert abs(row.approx - row.exact) <= 4 * rsd * row.exact
 
 
+def test_hll_sketch_accuracy(spark, sf_dir):
+    """DataSketches HLL at lgk=12 must land within 5% of exact NDV (its
+    theoretical RSE is ~1.04/sqrt(2^12) ≈ 1.6%)."""
+    from flow_spark.queries.registry import get
+
+    rows = get("sketch_hll_native").builder(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert abs(r.ndv_estimate - r.n_exact) <= 0.05 * r.n_exact, r
+
+
 def test_kmv_sketch_accuracy(spark, sf_dir):
     """KMV with k=64 has RSE ~ 1/sqrt(k-2) ≈ 13%; assert within 40% to
     stay flake-free while still catching estimator bugs (off-by-2^n in

@@ -1,7 +1,7 @@
-"""Product-quantization ANN: determinism, code-domain invariants and IVF-PQ
-recall.  (sim_pq_adc's recall against the exact answer is its registered
-invariant, which ``test_parity`` runs: k-means training is not
-SQL-expressible, so it has no oracle SQL.)
+"""Product-quantization ANN: recall against the exact answer, determinism,
+code-domain invariants and IVF-PQ recall.  (k-means training is not
+SQL-expressible, so sim_pq_adc has no oracle SQL; its registered invariant,
+which ``test_parity`` runs, checks the same recall floor.)
 """
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from flow_spark.catalog import load_table
-from flow_spark.operators.similarity import pq_encode, pq_train
+from flow_spark.operators.similarity import pq_adc_topk, pq_encode, pq_train
 from flow_spark.queries.registry import get
 
 SF = "/root/testdata/sf0.001"
@@ -25,6 +25,27 @@ def _exact_l2_topk(vecs: dict[int, np.ndarray], query_ids, k):
         order = np.lexsort((ids, d2))
         out[qid] = [int(ids[j]) for j in order if ids[j] != qid][:k]
     return out
+
+
+def test_pq_recall_beats_random(spark):
+    emb = load_table(spark, SF, "embeddings")
+    rows = emb.collect()
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in rows}
+    sample = [list(vecs[i]) for i in sorted(vecs)[:256]]
+    books = pq_train(sample, n_subspaces=16, n_centroids=16)
+    qids = [i for i in sorted(vecs) if i % 50 == 0]
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    approx = pq_adc_topk(queries, emb, books, k=10, rerank=100).collect()
+    got = {}
+    for r in approx:
+        got.setdefault(r.query_id, []).append(r.neighbor_id)
+    exact = _exact_l2_topk(vecs, qids, 10)
+    hits = sum(len(set(got[q]) & set(exact[q])) for q in qids)
+    recall = hits / (10 * len(qids))
+    # uniform-random 64-dim vectors are PQ's worst case (distance
+    # concentration), so the shortlist re-rank carries the recall:
+    # measured 0.90 on the fixture; random guessing would land ~10/n.
+    assert recall >= 0.75, f"recall@10 = {recall}"
 
 
 def test_pq_codes_in_domain_and_deterministic(spark):
