@@ -12,6 +12,11 @@ timeouts (receiver_tcp.go:18-22). Windows are north-star engine surface.
 
 from __future__ import annotations
 
+import tempfile
+import threading
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,19 +29,25 @@ def _drain(q, timeout: int = 1800) -> None:
     """Wait for an availableNow drain; RAISE if it outlives ``timeout``
     seconds instead of silently reading a partial sink table (a 300 s
     cap returned False under heavy-load sf1 sweeps and the query kept
-    running -> empty memory table -> bogus row-count mismatch)."""
+    running -> empty memory table -> bogus row-count mismatch).  The
+    error names the query and carries its last batch id and phase
+    durations from ``recentProgress``."""
     if not q.awaitTermination(timeout):
+        progress = q.recentProgress
         q.stop()
+        last = progress[-1] if progress else {}
         raise RuntimeError(
-            f"streaming drain exceeded {timeout}s - aborted rather than "
-            "reading a partial sink"
+            f"streaming drain {q.name!r} exceeded {timeout}s - aborted rather "
+            f"than reading a partial sink (last batch {last.get('batchId')}, "
+            f"durationMs {last.get('durationMs')})"
         )
 
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-from contextlib import contextmanager  # noqa: E402
+#: held by ``_state_parts`` from narrowing the session to restoring it
+_STATE_PARTS_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -56,17 +67,43 @@ def _state_parts(spark: SparkSession, default: int = 8):
     overhead x width vs per-partition state size, not a local[32]
     constant (checkpoints are per-invocation scratch dirs, so the width
     is free to change between runs).
+
+    One lock spans narrow -> start -> restore: two overlapping starts
+    could otherwise restore in the wrong order and leave the session
+    narrowed.  A batch query another thread plans inside that window still
+    gets the narrow width.
     """
+    width = str(_env_int("SPARK_GRAFT_STATE_PARTS", default, 1))
     conf = spark.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_env_int("SPARK_GRAFT_STATE_PARTS", default, 1)),
-    )
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
+    with _STATE_PARTS_LOCK:
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", width)
+        try:
+            yield
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
+    """Drain the stateful streaming ``df`` into a memory sink and return
+    the sink table: the query starts at ``_state_parts``' width with a
+    fresh checkpoint (a reused one would replay as "no new data" and drain
+    zero rows) and ``trigger(availableNow)``.  The sink name carries a
+    uuid suffix, so concurrent drains in one session never share a
+    ``queryName`` or a temp view."""
+    spark = df.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    with _state_parts(spark):
+        q = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"flow-spark-ckpt-{prefix}-"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    _drain(q)
+    return spark.table(name)
 
 
 def _segment_spool(
@@ -88,7 +125,6 @@ def _segment_spool(
     """
     import glob as _glob
     import os as _os
-    import tempfile
     import time as _time
 
     staging = tempfile.mkdtemp(prefix=prefix + "stage_")
@@ -282,9 +318,6 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_gcra_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from flow_spark.streaming.sources import stream_events
     from flow_spark.streaming.stateful import throttle_stream
 
@@ -294,19 +327,8 @@ def stream_gcra_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros((F.unix_micros("ingest_ts") / 100_000).cast("long")),
     )
     throttled = throttle_stream(compressed, rps=5, key_col="user")
-    name = f"gcra_{uuid.uuid4().hex[:8]}"
-    with _state_parts(spark):
-        q = (
-            throttled.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="gcra_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
     return (
-        spark.table(name)
+        _drain_stateful(throttled, "gcra")
         .groupBy("throttle_status")
         .agg(
             F.count("*").alias("n"),
@@ -459,23 +481,7 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = sessionize_stream(
         prepared, gap_minutes=10, key_col="user_id", ts_col="ts", val_col="vc"
     )
-    import tempfile
-
-    name = "stream_sessionize_stateful_sink"
-    # fresh scratch checkpoint per invocation: a reused one would replay
-    # as "no new data" and drain zero rows
-    ckpt = tempfile.mkdtemp(prefix="flow-spark-ckpt-sessionize-")
-    with _state_parts(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
-    return spark.table(name).orderBy("skey", "start_us")
+    return _drain_stateful(sessions, "sessionize").orderBy("skey", "start_us")
 
 
 @register(
@@ -513,8 +519,6 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.operators.asof import asof_join
 
@@ -629,9 +633,6 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from flow_spark.streaming.sources import stream_events
     from flow_spark.streaming.stateful import funnel_stream
 
@@ -648,20 +649,7 @@ def stream_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepared, key_col="user", ts_col="ingest_ts", type_col="etype",
         id_col="event_id",
     )
-    name = f"funnel_{uuid.uuid4().hex[:8]}"
-    with _state_parts(spark):
-        q = (
-            funnels.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="funnel_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
-    return spark.table(name).agg(
+    return _drain_stateful(funnels, "funnel").agg(
         F.count("*").cast("bigint").alias("n_funnels"),
         F.countDistinct("fkey").cast("bigint").alias("n_users"),
         F.sum("purchase_id").cast("bigint").alias("purchase_id_sum"),
@@ -707,9 +695,6 @@ def stream_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from flow_spark.catalog import table_path
     from flow_spark.operators.text import tokens
     from flow_spark.streaming.sources import _as_stream_dir
@@ -721,20 +706,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks_stream = stream.select(F.explode(tokens(F.col("text"))).alias("item"))
     summaries = heavy_hitters_stream(toks_stream, "item", n_shards=4, capacity=64)
-    name = f"mg_{uuid.uuid4().hex[:8]}"
-    with _state_parts(spark):
-        q = (
-            summaries.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="mg_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
     from pyspark.sql.window import Window as W
 
-    res = spark.table(name)
+    res = _drain_stateful(summaries, "mg")
     # final summary = the max-seq emission per shard (windowed, no
     # self-join: the memory view's attributes would conflict)
     wmax = W.partitionBy("shard")
@@ -881,8 +855,6 @@ def stream_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.streaming.stateful import twa_stream
 
@@ -902,19 +874,7 @@ def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = twa_stream(
         prepared, key_col="user_id", ts_col="ts", val_col="vc"
     )
-    name = "stream_twa_sink"
-    ckpt = tempfile.mkdtemp(prefix="flow-spark-ckpt-twa-")
-    with _state_parts(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
-    return spark.table(name).orderBy("tkey")
+    return _drain_stateful(out, "twa", "update").orderBy("tkey")
 
 
 @register(
@@ -962,8 +922,6 @@ def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.operators.snapshots import snapshot_read, snapshot_write
     from flow_spark.streaming.sinks import upsert_sink
 
@@ -1099,8 +1057,6 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.streaming.stateful import quantile_monitor_stream
 
@@ -1119,19 +1075,7 @@ def stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
     )
     out = quantile_monitor_stream(prepared, key_col="event_type", val_col="vc")
-    name = "stream_quantile_monitor_sink"
-    ckpt = tempfile.mkdtemp(prefix="flow-spark-ckpt-qm-")
-    with _state_parts(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    _drain(q)
-    return spark.table(name).orderBy("qkey")
+    return _drain_stateful(out, "qm", "update").orderBy("qkey")
 
 
 @register(
@@ -1183,8 +1127,6 @@ def stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.operators.snapshots import snapshot_read, snapshot_write
     from flow_spark.streaming.sinks import upsert_sink
 
@@ -1317,7 +1259,6 @@ _SSAJ_SPOOL_CACHE: dict = {}
 )
 def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from flow_spark.streaming.stateful import asof_join_stream
 
@@ -1397,36 +1338,8 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_id_col="event_id",
         delay="5 minutes",
     )
-    name = "stream_stream_asof_join_sink"
-    ckpt = tempfile.mkdtemp(prefix="flow-spark-ckpt-ssaj-")
-    # right-size the STATE STORE partition count for this drain: the
-    # stateful operator's cost is (partitions x micro-batches) Python
-    # state workers, and the store count is pinned from
-    # spark.sql.shuffle.partitions at query START (checkpoint
-    # property), independent of the batch shuffle width.  A real
-    # deployment sizes this to state volume, not to the batch-shuffle
-    # default — parameterised here (env) with the local default that
-    # r7/r8 interleaved A/Bs measured fastest for this drain.
-    conf = spark.conf
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_env_int("SPARK_GRAFT_SSAJ_STATE_PARTS", 8, 1)),
-    )
-    try:
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _drain(q)
     return (
-        spark.table(name)
+        _drain_stateful(out, "ssaj")
         .select(
             F.col("left_id").cast("bigint").alias("left_id"),
             F.col("akey").cast("bigint").alias("akey"),
@@ -1473,8 +1386,6 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_changefeed_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from flow_spark.operators.snapshots import (
         snapshot_append,
         snapshot_delete,

@@ -12,6 +12,16 @@ rather than the reference's wall clock, so the admission rate is identical
 in steady state and testable.  Keys partition the state: the global bucket
 (``''`` key) serializes through one state partition (SURVEY.md §7).
 
+Bucketed state.  The five keyed operators (GCRA, sessionize, funnel, TWA
+and the as-of join) run on one kernel, ``Bucketed``.  It groups rows on a
+key BUCKET, sorts each bucket's rows key-major and hands every key's run to
+the operator's per-key ``step``; an operator whose state expires with the
+watermark adds a ``sweep`` that applies its timer rule to every key of the
+bucket.  Each of those operators is thus an Arrow state schema, a step and
+an optional sweep; ``Bucketed`` says why state is bucketed.  Heavy hitters
+(a handful of hash shards) and the quantile monitor (a handful of keys)
+group on their own key.
+
 State codec.  Every operator here keeps its group's state in the one
 Spark state schema ``STATE_SCHEMA``: a single ``BinaryType`` column holding
 one Arrow IPC stream with one record batch.  Each operator declares that
@@ -37,8 +47,9 @@ Restart such a query from a fresh checkpoint.
 
 from __future__ import annotations
 
+import bisect
 import itertools
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
 import numpy as np
@@ -55,13 +66,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from flow_spark.session import _env_int
-
 _NS = 1_000_000_000
+
+#: key buckets per keyed operator (see ``Bucketed``)
+STATE_BUCKETS = 32
 
 #: the Spark state schema of every operator in this module: one Arrow IPC
 #: stream (one record batch, the operator's declared Arrow schema)
 STATE_SCHEMA = StructType([StructField("batch", BinaryType())])
+
+
+def _longs(*names: str) -> StructType:
+    return StructType([StructField(n, LongType()) for n in names])
 
 
 def _to_arrow(values: Sequence, typ: pa.DataType) -> pa.Array:
@@ -127,6 +143,126 @@ def save_keyed(state, schema: pa.Schema, sub: dict[Any, Sequence]) -> None:
     save_state(state, schema, [list(sub), *([r[i] for r in rows] for i in range(len(schema) - 1))])
 
 
+class Bucketed:
+    """The kernel of the keyed operators: one ``applyInPandasWithState``
+    group per KEY BUCKET, with the per-key logic inside the group function.
+
+    Why buckets: ``applyInPandasWithState`` pays a fixed JVM->Python round
+    trip per group per batch (~0.9 ms measured), so grouping per key scales
+    a drain with its key count (1,500 keys at sf0.1).  Grouping on
+    ``pmod(key, n_buckets)`` (``pmod(xxhash64(key), n_buckets)`` for a
+    string key) caps that at ``n_buckets`` calls per batch, and state-store
+    rows at ``n_buckets``.  On the sf0.1 as-of drain this measured 1.27x
+    over per-key grouping, with 8, 32 and 64 buckets within noise of each
+    other.  The trade-off is per-call state width: a called bucket reads
+    and writes all its keys.
+
+    A call of ``group``:
+
+    - loads the bucket's per-key sub-states (``load_keyed``);
+    - buffers every chunk of the group, then sorts the rows by
+      ``(key, *order)``.  A group larger than ``maxRecordsPerBatch``
+      arrives as several Arrow chunks in shuffle order; the key-major sort
+      gives each key one contiguous run in its own event order, so every
+      per-key result is the one per-key grouping computes;
+    - calls ``step(key, sub_state, *runs) -> (sub_state | None, out_rows)``
+      once per key run, where ``runs`` are the run's ``cols`` as lists and
+      ``sub_state`` is None for a key without state.  A returned None drops
+      the key: an absent key is the operator's initial state;
+    - with a ``sweep``, calls ``sweep(key, sub_state, wm_ms) ->
+      (sub_state | None, out_rows, deadline_ms | None)`` for EVERY key of
+      the bucket, with input or not.  The sweep applies the key's own timer
+      rule, so no key is swept later than its per-key timeout would have
+      fired, and the bucket's event-time timeout is armed at
+      ``max(wm_ms + 1, min deadline)``: the API needs a timestamp strictly
+      above the current watermark;
+    - saves the kept keys as ONE state row, or removes the state when no
+      key is left.
+
+    ``n_buckets`` (default ``STATE_BUCKETS``) only changes which keys
+    share a call; tests set it to 1 to put every key in one bucket.
+    """
+
+    def __init__(
+        self,
+        key: str,
+        order: Sequence[str],
+        cols: Sequence[str],
+        schema: pa.Schema,
+        output: StructType,
+        step: Callable,
+        sweep: Callable | None = None,
+        mode: str = "append",
+    ):
+        self.key, self.order, self.cols = key, tuple(order), tuple(cols)
+        self.schema, self.output, self.mode = schema, output, mode
+        self.step, self.sweep = step, sweep
+
+    def apply(self, prepared: DataFrame, n_buckets: int | None = None) -> DataFrame:
+        """Run the operator over ``prepared``, which holds ``key``,
+        ``order`` and ``cols``."""
+        n_buckets = STATE_BUCKETS if n_buckets is None else n_buckets
+        if n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+        key = F.col(self.key)
+        if isinstance(prepared.schema[self.key].dataType, StringType):
+            key = F.xxhash64(key)
+        return (
+            prepared.withColumn("bkey", F.pmod(key, F.lit(n_buckets)))
+            .groupBy("bkey")
+            .applyInPandasWithState(
+                self.group,
+                outputStructType=self.output,
+                stateStructType=STATE_SCHEMA,
+                outputMode=self.mode,
+                timeoutConf="EventTimeTimeout" if self.sweep else "NoTimeout",
+            )
+        )
+
+    def group(self, _bkey: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        """The ``applyInPandasWithState`` function of one bucket."""
+        sub = load_keyed(state, self.schema)
+        out: list[tuple] = []
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            sort = (self.key, *self.order)
+            arrays = {
+                c: np.concatenate([pdf[c].to_numpy() for pdf in chunks])
+                for c in {*sort, *self.cols}
+            }
+            idx = np.lexsort([arrays[c] for c in reversed(sort)])
+            keys = arrays[self.key][idx]
+            starts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()]
+            runs = [arrays[c][idx].tolist() for c in self.cols]
+            for k, a, b in zip(keys[starts].tolist(), starts, [*starts[1:], len(keys)]):
+                s, rows = self.step(k, sub.get(k), *(r[a:b] for r in runs))
+                if s is None:
+                    sub.pop(k, None)
+                else:
+                    sub[k] = s
+                out += rows
+        deadline = None
+        if self.sweep is not None:
+            wm_ms = state.getCurrentWatermarkMs()
+            kept = {}
+            for k, s in sub.items():
+                s, rows, d = self.sweep(k, s, wm_ms)
+                out += rows
+                if s is not None:
+                    kept[k] = s
+                if d is not None and (deadline is None or d < deadline):
+                    deadline = d
+            sub = kept
+        if sub:
+            save_keyed(state, self.schema, sub)
+            if deadline is not None:
+                state.setTimeoutTimestamp(max(wm_ms + 1, deadline))
+        elif state.exists:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=self.output.names)
+
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -136,14 +272,11 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-#: per-key TATs of a key bucket — see ``asof_join_stream`` for why
-#: stateful operators group on a key BUCKET
+#: per-key TATs of a key bucket
 GCRA_STATE = pa.schema([("keys", pa.string()), ("tat_ns", pa.int64())])
 
 
-def gcra_admit(
-    ts_ns: list[int], tat_ns: int, rps: int
-) -> tuple[list[bool], int]:
+def gcra_admit(ts_ns: list[int], tat_ns: int, rps: int) -> tuple[list[bool], int]:
     """Pure GCRA over a sorted timestamp sequence; returns (admits, tat)."""
     cost = _NS // rps
     burst = _NS - cost  # throttler.go:36-38
@@ -157,6 +290,20 @@ def gcra_admit(
     return out, tat_ns
 
 
+def gcra_kernel(rps: int) -> Bucketed:
+    """GCRA per key over its rows in (ts, id) order."""
+
+    def step(k, s, ids, ts):
+        admits, tat = gcra_admit(ts, s[0] if s else 0, rps)
+        status = ["admitted" if a else "throttled" for a in admits]
+        return [tat], list(zip(ids, [k] * len(ids), ts, status))
+
+    return Bucketed(
+        "throttle_key", ("ts_ns", "event_id"), ("event_id", "ts_ns"),
+        GCRA_STATE, OUTPUT_SCHEMA, step,
+    )
+
+
 def throttle_stream(
     df: DataFrame,
     rps: int,
@@ -167,22 +314,9 @@ def throttle_stream(
     """Streaming throttler: emits (event_id, throttle_key, ts_ns, status).
 
     Must be applied to a streaming DataFrame with event_id/meta/ts columns;
-    joins back on event_id to recover full rows if needed.
-
-    The stateful operator groups on ``pmod(xxhash64(key), n_buckets)``,
-    not on the key itself (r08, guide §4 — same rationale and measured
-    basis as ``asof_join_stream``): applyInPandasWithState pays a fixed
-    JVM->Python group round trip per group per batch, so per-key
-    grouping scales the drain with key count (1500 keys at sf0.1);
-    bucketing caps it at ``n_buckets`` calls per batch.  The bucket's
-    rows are sorted by (key, ts, id) — each key's subsequence keeps
-    event-time order, so GCRA admissions are unchanged row for row.
-    Env knob ``SPARK_GRAFT_GCRA_BUCKETS`` (default 32).
+    joins back on event_id to recover full rows if needed.  Each key's
+    rows pass GCRA in (ts, id) order, the bucketed kernel's key runs.
     """
-    if n_buckets is None:
-        n_buckets = _env_int("SPARK_GRAFT_GCRA_BUCKETS", 32, 1)
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     key_expr = (
         F.coalesce(F.col("meta").getItem(key_col), F.lit("")) if key_col else F.lit("")
     )
@@ -190,65 +324,51 @@ def throttle_stream(
         "event_id",
         key_expr.alias("throttle_key"),
         (F.unix_micros(F.col(ts_col)) * 1000).alias("ts_ns"),
-    ).withColumn(
-        "bkey", F.pmod(F.xxhash64(F.col("throttle_key")), F.lit(n_buckets))
     )
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        # per-key TATs of this bucket
-        sub = dict(zip(*load_state(state, GCRA_STATE)))
-        # buffer the whole group before sorting: a >maxRecordsPerBatch group
-        # arrives as SEVERAL Arrow chunks in shuffle order, and GCRA is
-        # order-sensitive — per-chunk sorting with cross-chunk TAT carry
-        # would admit by chunk-local order, not event time.  Sorting by
-        # key FIRST groups each key's rows contiguously while keeping
-        # their (ts, id) order, so one pass over the frame runs GCRA per
-        # key run.
-        pdf = pd.concat(list(pdfs)).sort_values(["throttle_key", "ts_ns", "event_id"])
-        tks = pdf["throttle_key"].tolist()
-        tss = pdf["ts_ns"].tolist()
-        admits: list[bool] = []
-        i, n = 0, len(tks)
-        while i < n:
-            k = tks[i]
-            j = i
-            while j < n and tks[j] == k:
-                j += 1
-            adm, tat = gcra_admit(tss[i:j], sub.get(k, 0), rps)
-            admits.extend(adm)
-            sub[k] = tat
-            i = j
-        pdf = pdf.assign(
-            throttle_status=["admitted" if a else "throttled" for a in admits]
-        )
-        yield pdf[["event_id", "throttle_key", "ts_ns", "throttle_status"]]
-        save_state(state, GCRA_STATE, [list(sub), list(sub.values())])
-
-    return prepared.groupBy("bkey").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return gcra_kernel(rps).apply(prepared, n_buckets)
 
 
 # --- event-time-timeout sessionization --------------------------------------
 
-SESSION_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("skey", LongType()),
-        StructField("start_us", LongType()),
-        StructField("end_us", LongType()),
-        StructField("n", LongType()),
-        StructField("total", LongType()),
-    ]
-)
+SESSION_OUTPUT_SCHEMA = _longs("skey", "start_us", "end_us", "n", "total")
 
 #: per-key open sessions of a key bucket
 SESSION_STATE = pa.schema(
     [(c, pa.int64()) for c in ("keys", "start_us", "last_us", "n", "total")]
 )
+
+
+def session_kernel(gap_minutes: int) -> Bucketed:
+    """Per key: an open session [start_us, last_us, n, total]."""
+    gap_us = gap_minutes * 60 * 1_000_000
+    gap_ms = gap_minutes * 60 * 1000
+
+    def step(k, cur, ts, vs):
+        closed = []
+        for ts_us, v in zip(ts, vs):
+            if cur is not None and ts_us - cur[1] > gap_us:
+                closed.append((k, *cur))
+                cur = None
+            if cur is None:
+                cur = [ts_us, ts_us, 0, 0]
+            cur[1] = ts_us
+            cur[2] += 1
+            cur[3] += v
+        return cur, closed
+
+    def sweep(k, cur, wm_ms):
+        # the per-key timer rule: close iff the watermark ms strictly
+        # exceeds last_ms + gap_ms.  A data row can never rescue a swept
+        # session: rows older than the watermark are dropped before the
+        # operator, so any row for this key has ts >= wm > last + gap.
+        deadline_ms = cur[1] // 1000 + gap_ms
+        if wm_ms > deadline_ms:
+            return None, [(k, *cur)], None
+        return cur, (), deadline_ms
+
+    return Bucketed(
+        "skey", ("ts_us",), ("ts_us", "v"), SESSION_STATE, SESSION_OUTPUT_SCHEMA, step, sweep
+    )
 
 
 def sessionize_stream(
@@ -267,26 +387,16 @@ def sessionize_stream(
     built-in) the way the GCRA throttler complements window ranking.
 
     Emits one row per CLOSED session (skey, start_us, end_us, n, total);
-    in-batch gaps close sessions inline, cross-batch gaps close via
-    ``state.hasTimedOut`` when the watermark crosses last_us + gap.  All
-    arithmetic is integer microseconds — replay-deterministic.  At scale
-    state is per-key in the state store, one shuffle on the key, and the
-    watermark bounds state size exactly as the built-in operator's.
+    in-batch gaps close sessions inline, cross-batch gaps close when the
+    watermark crosses last_us + gap.  All arithmetic is integer
+    microseconds — replay-deterministic.  At scale state is per-key in the
+    state store, one shuffle on the key, and the watermark bounds state
+    size exactly as the built-in operator's.
 
-    The stateful operator groups on ``pmod(key, n_buckets)``, not on the
-    key itself (r08, guide §4 — same rationale and measured basis as
-    ``asof_join_stream``): applyInPandasWithState pays a fixed
-    JVM->Python group round trip per group per batch, so per-key
-    grouping scales the drain with key count; bucketing caps it at
-    ``n_buckets`` calls per batch (and state-store rows at n_buckets)
-    while the per-key sessions move inside the fn.  The closed-session
-    SET is unchanged: every call sweeps the bucket with the per-key
-    timer rule itself (close iff watermark ms STRICTLY exceeds
-    last_ms + gap_ms), so a session closes in the first batch whose
-    watermark passes its deadline — exactly when its own per-key timer
-    would have fired — and the bucket timeout re-arms at the bucket's
-    min deadline (never later than any member key's own arm point).
-    Env knob ``SPARK_GRAFT_SESSION_BUCKETS`` (default 32).
+    Every bucket call sweeps all its keys with the per-key timer rule
+    (close iff watermark ms STRICTLY exceeds last_ms + gap_ms), so a
+    session closes in the first batch whose watermark passes its deadline,
+    exactly when its own per-key timer would have fired.
 
     One-ms re-arm edge: the API takes a timeout strictly above the current
     watermark, so a bucket call at a watermark EQUAL to a kept key's
@@ -300,94 +410,42 @@ def sessionize_stream(
 
     Input must already carry ``withWatermark(ts_col, ...)``.
     """
-    if n_buckets is None:
-        n_buckets = _env_int("SPARK_GRAFT_SESSION_BUCKETS", 32, 1)
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    gap_us = gap_minutes * 60 * 1_000_000
-    gap_ms = gap_minutes * 60 * 1000
-
     prepared = df.select(
         F.col(key_col).cast("long").alias("skey"),
         F.col(ts_col).alias("ts"),
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(val_col).cast("long").alias("v"),
-    ).withColumn("bkey", F.pmod(F.col("skey"), F.lit(n_buckets)))
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        wm_ms = state.getCurrentWatermarkMs()
-        # per-key open sessions of this bucket:
-        # skey -> [start_us, last_us, n, total]
-        sub: dict[int, list[int]] = load_keyed(state, SESSION_STATE)
-        closed: list[tuple[int, int, int, int, int]] = []
-        if not state.hasTimedOut:
-            # key-major sort keeps each key's rows in event-time order
-            # (the per-key semantics) while one pass walks key runs
-            pdf = pd.concat(list(pdfs)).sort_values(["skey", "ts_us"])
-            for skey, ts_us, v in zip(
-                pdf["skey"].tolist(), pdf["ts_us"].tolist(), pdf["v"].tolist()
-            ):
-                cur = sub.get(skey)
-                if cur is not None and ts_us - cur[1] > gap_us:
-                    closed.append((skey, cur[0], cur[1], cur[2], cur[3]))
-                    cur = None
-                if cur is None:
-                    cur = sub[skey] = [ts_us, ts_us, 0, 0]
-                cur[1] = ts_us
-                cur[2] += 1
-                cur[3] += v
-        # sweep EVERY key in the bucket with the per-key timer rule:
-        # a session closes iff the watermark ms strictly exceeds
-        # last_ms + gap_ms — the exact condition under which its own
-        # per-key EventTimeTimeout would have fired, so the closed set
-        # (and each closed row) is identical to per-key grouping.  A
-        # data row can never rescue a swept session: late rows older
-        # than the watermark are filtered before the operator, so any
-        # row for this key has ts >= wm > last + gap — an inline break.
-        kept: dict[int, list[int]] = {}
-        min_deadline = None
-        for skey, cur in sub.items():
-            deadline_ms = cur[1] // 1000 + gap_ms
-            if wm_ms > deadline_ms:
-                closed.append((skey, cur[0], cur[1], cur[2], cur[3]))
-            else:
-                kept[skey] = cur
-                if min_deadline is None or deadline_ms < min_deadline:
-                    min_deadline = deadline_ms
-        if kept:
-            save_keyed(state, SESSION_STATE, kept)
-            # re-arm at the bucket's min deadline; the API needs a ts
-            # strictly above the current watermark — a kept deadline can
-            # EQUAL wm (close needs wm strictly greater), so clamp to
-            # wm+1 (the one-ms edge in the docstring).
-            state.setTimeoutTimestamp(max(wm_ms + 1, min_deadline))
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            closed, columns=["skey", "start_us", "end_us", "n", "total"]
-        )
-
-    return prepared.groupBy("bkey").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
     )
+    return session_kernel(gap_minutes).apply(prepared, n_buckets)
 
 
-FUNNEL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("fkey", LongType()),
-        StructField("view_us", LongType()),
-        StructField("click_us", LongType()),
-        StructField("purchase_us", LongType()),
-        StructField("purchase_id", LongType()),
-    ]
-)
+FUNNEL_OUTPUT_SCHEMA = _longs("fkey", "view_us", "click_us", "purchase_us", "purchase_id")
 
 #: per-key funnel progress of a key bucket
 FUNNEL_STATE = pa.schema([(c, pa.int64()) for c in ("keys", "view_us", "click_us")])
+
+
+def _funnel_step(k, s, ts, etypes, eids):
+    view, click = s or (-1, -1)
+    out = []
+    for ts_us, etype, eid in zip(ts, etypes, eids):
+        if etype == "view":
+            if view < 0:
+                view = ts_us
+        elif etype == "click":
+            if view >= 0 and click < 0:
+                click = ts_us
+        elif etype == "purchase" and click >= 0:
+            out.append((k, view, click, ts_us, eid))
+            view = click = -1
+    # a fully reset funnel is the absent key
+    return ([view, click] if view >= 0 or click >= 0 else None), out
+
+
+FUNNEL_KERNEL = Bucketed(
+    "fkey", ("ts_us", "eid"), ("ts_us", "etype", "eid"),
+    FUNNEL_STATE, FUNNEL_OUTPUT_SCHEMA, _funnel_step,
+)
 
 
 def funnel_stream(
@@ -407,80 +465,20 @@ def funnel_stream(
     the funnel, the first click after an armed view advances it, a
     purchase after a click EMITS (key, view_us, click_us, purchase_us,
     purchase_id) and resets; events that don't advance the pattern are
-    ignored.  State is exactly two longs per key — O(keys) total, no
-    timeout needed (contrast sessionize_stream, whose correctness
-    depends on event-time expiry).  One shuffle on the key; the same
-    recurrence replays as a recursive CTE, so the registry entry is
-    VALUE-checked, and multi-batch == single-batch equivalence is
-    runtime-tested.
-
-    The stateful operator groups on ``pmod(key, n_buckets)``, not on
-    the key itself (r08, guide §4 — same rationale and measured basis
-    as ``asof_join_stream``): applyInPandasWithState pays a fixed
-    JVM->Python group round trip per group per batch, so per-key
-    grouping scales the drain with key count; bucketing caps it at
-    ``n_buckets`` calls per batch (and state-store rows at n_buckets).
-    The bucket's rows are sorted by (key, ts, id) — each key's
-    subsequence keeps (ts, id) order, so the state machine's emissions
-    are unchanged row for row; keys whose funnel is fully reset
-    ((-1, -1)) are dropped from state, since an absent key IS the reset
-    state.  Env knob ``SPARK_GRAFT_CEP_BUCKETS`` (default 32).
+    ignored.  State is at most two longs per key, and a reset key is
+    dropped from state — O(keys) total, no timeout needed (contrast
+    sessionize_stream, whose correctness depends on event-time expiry).
+    One shuffle on the key; the same recurrence replays as a recursive
+    CTE, so the registry entry is VALUE-checked, and multi-batch ==
+    single-batch equivalence is runtime-tested.
     """
-    if n_buckets is None:
-        n_buckets = _env_int("SPARK_GRAFT_CEP_BUCKETS", 32, 1)
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     prepared = df.select(
         F.col(key_col).cast("long").alias("fkey"),
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(type_col).alias("etype"),
         F.col(id_col).cast("long").alias("eid"),
-    ).withColumn("bkey", F.pmod(F.col("fkey"), F.lit(n_buckets)))
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        # per-key funnel progress of this bucket: fkey -> [view, click]
-        sub = load_keyed(state, FUNNEL_STATE)
-        out: list[tuple[int, int, int, int, int]] = []
-        # key-major sort keeps each key's rows in (ts, id) order — the
-        # per-key state-machine order — while one pass walks key runs
-        pdf = pd.concat(list(pdfs)).sort_values(["fkey", "ts_us", "eid"])
-        for fkey, ts_us, etype, eid in zip(
-            pdf["fkey"].tolist(),
-            pdf["ts_us"].tolist(),
-            pdf["etype"].tolist(),
-            pdf["eid"].tolist(),
-        ):
-            s = sub.get(fkey)
-            if s is None:
-                s = sub[fkey] = [-1, -1]
-            if etype == "view":
-                if s[0] < 0:
-                    s[0] = ts_us
-            elif etype == "click":
-                if s[0] >= 0 and s[1] < 0:
-                    s[1] = ts_us
-            elif etype == "purchase":
-                if s[1] >= 0:
-                    out.append((fkey, s[0], s[1], ts_us, eid))
-                    s[0] = -1
-                    s[1] = -1
-        kept = {k: s for k, s in sub.items() if s[0] >= 0 or s[1] >= 0}
-        if kept:
-            save_keyed(state, FUNNEL_STATE, kept)
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(
-            out,
-            columns=["fkey", "view_us", "click_us", "purchase_us", "purchase_id"],
-        )
-
-    return prepared.groupBy("bkey").applyInPandasWithState(
-        fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
     )
+    return FUNNEL_KERNEL.apply(prepared, n_buckets)
 
 
 MG_OUTPUT_SCHEMA = StructType(
@@ -569,19 +567,32 @@ def heavy_hitters_stream(
 
 # --- streaming time-weighted average -----------------------------------------
 
-TWA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("tkey", LongType()),
-        StructField("n_events", LongType()),
-        StructField("held_us", LongType()),
-        StructField("acc_num", LongType()),
-        StructField("twa_cents", LongType()),
-    ]
-)
+TWA_OUTPUT_SCHEMA = _longs("tkey", "n_events", "held_us", "acc_num", "twa_cents")
 
 #: per-key TWA edges and running totals of a key bucket
 TWA_STATE = pa.schema(
     [(c, pa.int64()) for c in ("keys", "last_us", "last_v", "n", "held_us", "acc_num")]
+)
+
+
+def _twa_step(k, s, ts, vs):
+    last_us, last_v, n, held, acc = s or (0, 0, 0, 0, 0)
+    for ts_us, v in zip(ts, vs):
+        if n == 0:
+            last_us, last_v = ts_us, v
+        elif ts_us >= last_us:
+            dur = ts_us - last_us
+            held += dur
+            acc += last_v * dur
+            last_us, last_v = ts_us, v
+        # else: late row older than the carried edge — count only
+        n += 1
+    return [last_us, last_v, n, held, acc], [(k, n, held, acc, acc // held if held > 0 else last_v)]
+
+
+TWA_KERNEL = Bucketed(
+    "tkey", ("ts_us", "ord"), ("ts_us", "v"),
+    TWA_STATE, TWA_OUTPUT_SCHEMA, _twa_step, mode="update",
 )
 
 
@@ -599,91 +610,26 @@ def twa_stream(
     (last_us, last_v) edge carried in the state store — the batch
     ``ts_time_weighted_avg`` semantics made incremental.
 
-    Emits one UPDATE row per key per batch with the running totals; all
-    arithmetic is integer cents x microseconds, so replay, retry, and a
-    different batch slicing all yield the same final row (the
-    multi-batch == single-batch equivalence is runtime-tested).  A late
-    row older than the carried edge is counted in ``n_events`` but
-    contributes zero duration AND leaves the (last_us, last_v) edge
-    untouched — otherwise a stale value would weight every subsequent
-    hold interval (cross-batch late-arrival test covers this).  "Have we
-    seen a row" is tracked by ``n > 0``, not a ``last_us`` sentinel,
-    because unix_micros is legitimately negative for pre-1970
-    timestamps.  State is two longs + three counters per key, one
-    shuffle on the key.
-
-    The stateful operator groups on ``pmod(key, n_buckets)``, not on
-    the key itself (r08, guide §4 — same rationale and measured basis
-    as ``asof_join_stream``): applyInPandasWithState pays a fixed
-    JVM->Python group round trip per group per batch, so per-key
-    grouping scales the drain with key count; bucketing caps it at
-    ``n_buckets`` calls per batch (and state-store rows at n_buckets).
-    The bucket's rows are sorted by (key, ts, ord) — each key's
-    subsequence keeps (ts, ord) order, so every TWA fold is unchanged —
-    and a bucket call emits the running row for exactly the keys that
-    HAD INPUT this batch (per-key grouping only invoked the fn for
-    those), so the emitted row set is identical.  Env knob
-    ``SPARK_GRAFT_TWA_BUCKETS`` (default 32).
+    Emits one UPDATE row per key per batch with the running totals, for
+    exactly the keys that had input in the batch; all arithmetic is
+    integer cents x microseconds, so replay, retry, and a different batch
+    slicing all yield the same final row (the multi-batch == single-batch
+    equivalence is runtime-tested).  A late row older than the carried
+    edge is counted in ``n_events`` but contributes zero duration AND
+    leaves the (last_us, last_v) edge untouched — otherwise a stale value
+    would weight every subsequent hold interval (cross-batch late-arrival
+    test covers this).  "Have we seen a row" is tracked by ``n > 0``, not
+    a ``last_us`` sentinel, because unix_micros is legitimately negative
+    for pre-1970 timestamps.  State is two longs + three counters per key,
+    one shuffle on the key; each key folds its rows in (ts, ord) order.
     """
-    if n_buckets is None:
-        n_buckets = _env_int("SPARK_GRAFT_TWA_BUCKETS", 32, 1)
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     prepared = df.select(
         F.col(key_col).cast("long").alias("tkey"),
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(order_col).cast("long").alias("ord"),
         F.col(val_col).cast("long").alias("v"),
-    ).withColumn("bkey", F.pmod(F.col("tkey"), F.lit(n_buckets)))
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        # per-key TWA sub-states of this bucket:
-        # tkey -> [last_us, last_v, n, held, acc]
-        sub: dict[int, list[int]] = load_keyed(state, TWA_STATE)
-        # key-major sort keeps each key's rows in (ts, ord) order — the
-        # per-key fold order — while one pass walks key runs
-        pdf = pd.concat(list(pdfs)).sort_values(["tkey", "ts_us", "ord"])
-        tks = pdf["tkey"].tolist()
-        tss = pdf["ts_us"].tolist()
-        vs = pdf["v"].tolist()
-        out: list[tuple[int, int, int, int, int]] = []
-        i, nrow = 0, len(tks)
-        while i < nrow:
-            k = tks[i]
-            s = sub.get(k)
-            if s is None:
-                s = sub[k] = [0, 0, 0, 0, 0]
-            last_us, last_v, n, held, acc = s
-            j = i
-            while j < nrow and tks[j] == k:
-                ts_us, v = tss[j], vs[j]
-                if n == 0:
-                    last_us, last_v = ts_us, v
-                elif ts_us >= last_us:
-                    dur = ts_us - last_us
-                    held += dur
-                    acc += last_v * dur
-                    last_us, last_v = ts_us, v
-                # else: late row older than the carried edge — count only
-                n += 1
-                j += 1
-            s[0], s[1], s[2], s[3], s[4] = last_us, last_v, n, held, acc
-            # emit ONLY keys with input this batch (matches per-key form)
-            out.append((k, n, held, acc, acc // held if held > 0 else last_v))
-            i = j
-        save_keyed(state, TWA_STATE, sub)
-        yield pd.DataFrame(
-            out,
-            columns=["tkey", "n_events", "held_us", "acc_num", "twa_cents"],
-        )
-
-    return prepared.groupBy("bkey").applyInPandasWithState(
-        fn,
-        outputStructType=TWA_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
     )
+    return TWA_KERNEL.apply(prepared, n_buckets)
 
 
 # --- streaming exact quantile monitor -----------------------------------------
@@ -757,25 +703,70 @@ def quantile_monitor_stream(
     )
 
 
-ASOF_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("left_id", LongType()),
-        StructField("akey", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("asof_val", LongType()),
-    ]
-)
+ASOF_OUTPUT_SCHEMA = _longs("left_id", "akey", "ts_us", "asof_val")
 
-#: one state-store entry per KEY BUCKET, holding its keys' pending lefts
-#: and right histories.  Bucketing exists because applyInPandasWithState
-#: pays a fixed JVM->Python protocol round trip PER GROUP PER BATCH
-#: (~0.9 ms measured) — grouped per key, that term scales with key count;
-#: grouped per bucket it is capped at n_buckets calls per batch (guide §4:
-#: you cannot remove the boundary, but you control how many times you
-#: cross it).
+#: per-key pending lefts and right histories of a key bucket
 ASOF_STATE = pa.schema(
     [("keys", pa.int64())]
     + [(c, pa.list_(pa.int64())) for c in ("pend_ts", "pend_id", "hist_ts", "hist_val", "hist_id")]
+)
+
+
+def _asof_step(k, s, ts, eids, vals, sides):
+    # inserts are order-independent (bisect with a greatest-id tie rule;
+    # pending lefts are sorted at emission), so the kernel sorts on the
+    # key alone
+    s = s or [[], [], [], [], []]
+    pend_ts, pend_id, hist_ts, hist_val, hist_id = s
+    for ts_us, eid, val, side in zip(ts, eids, vals, sides):
+        if side == 0:
+            pend_ts.append(ts_us)
+            pend_id.append(eid)
+            continue
+        v = int(val)
+        i = bisect.bisect_left(hist_ts, ts_us)
+        if i < len(hist_ts) and hist_ts[i] == ts_us:
+            if eid > hist_id[i]:  # same-ts tie: greatest id
+                hist_val[i], hist_id[i] = v, eid
+        else:
+            hist_ts.insert(i, ts_us)
+            hist_val.insert(i, v)
+            hist_id.insert(i, eid)
+    return s, ()
+
+
+def _asof_sweep(k, s, wm_ms):
+    # a left at ms L is sealed iff wm > L, i.e. ts_us < wm_ms*1000
+    # (non-negative integers): no right with event time <= it can still
+    # arrive, so its match is final
+    wm_us = wm_ms * 1000
+    pend_ts, pend_id, hist_ts, hist_val, hist_id = s
+    out, keep_ts, keep_id = [], [], []
+    for ts_us, eid in sorted(zip(pend_ts, pend_id)):
+        if ts_us < wm_us:
+            j = bisect.bisect_right(hist_ts, ts_us) - 1
+            out.append((eid, k, ts_us, hist_val[j] if j >= 0 else None))
+        else:
+            keep_ts.append(ts_us)
+            keep_id.append(eid)
+    # trim sealed rights, keeping the newest sealed one: it is still the
+    # as-of match for future (>= watermark) lefts
+    drop = max(0, bisect.bisect_left(hist_ts, wm_us) - 1)
+    if drop:
+        hist_ts, hist_val, hist_id = hist_ts[drop:], hist_val[drop:], hist_id[drop:]
+    if not (keep_ts or hist_ts):
+        return None, out, None
+    # a timeout fires once wm > the armed ms, and the min pending left L
+    # seals once wm > L: arm at L itself (L + 1 would drop a left whose
+    # seal equals the final watermark)
+    return [keep_ts, keep_id, hist_ts, hist_val, hist_id], out, (
+        keep_ts[0] // 1000 if keep_ts else None
+    )
+
+
+ASOF_KERNEL = Bucketed(
+    "akey", (), ("ts_us", "eid", "val", "side"),
+    ASOF_STATE, ASOF_OUTPUT_SCHEMA, _asof_step, _asof_sweep,
 )
 
 
@@ -815,35 +806,14 @@ def asof_join_stream(
     whose event-time ms lies strictly below the final watermark
     (global max event-time ms across BOTH streams minus the delay) —
     an exact, batching-independent contract the DuckDB oracle replays.
-
-    The stateful operator groups on ``pmod(key, n_buckets)``, NOT on
-    the key itself (r08, guide §4): applyInPandasWithState pays a fixed
-    JVM->Python group-protocol round trip per GROUP per batch (~0.9 ms
-    measured), so per-key grouping makes the drain cost scale with key
-    count — bucketing caps it at n_buckets calls per batch while the
-    per-key logic moves inside the fn (a dict of per-key sub-states).
-    The emitted SET is unchanged: a bucket call sweeps every key it
-    holds, so a sealed left emits no later than the batch in which its
-    per-key timeout would have fired, and timeouts arm at the bucket's
-    min pending ms (never later than any member key's own arm point;
-    one firing sweeps all sealed lefts at the current watermark, so no
-    extra micro-batches are needed).  The trade-off is per-call state
-    width: a called bucket rehydrates all its keys, so a deployment
-    with sparse per-batch key activity sizes ``n_buckets`` up (env
-    ``SPARK_GRAFT_SSAJ_BUCKETS``; default 32 — measured 1.27x over
-    per-key grouping on the sf0.1 drain, where batches touch most
-    keys; 8/32/64 were within noise of each other).
+    A bucket call sweeps every key it holds, so a sealed left emits no
+    later than the batch in which its per-key timeout would have fired;
+    the only gap is a stream whose watermark ends EXACTLY one ms past a
+    left that was pending when the watermark equalled its ms.
 
     Returns (left_id, akey, ts_us, asof_val) in append mode; asof_val
     is NULL when no right row precedes the left row.
     """
-    import bisect
-
-    if n_buckets is None:
-        n_buckets = _env_int("SPARK_GRAFT_SSAJ_BUCKETS", 32, 1)
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-
     tagged = left.select(
         F.col(key_col).cast("long").alias("akey"),
         F.col(ts_col).alias("ts"),
@@ -860,132 +830,6 @@ def asof_join_stream(
         )
     )
     prepared = tagged.withWatermark("ts", delay).select(
-        F.pmod(F.col("akey"), F.lit(n_buckets)).alias("bkey"),
-        "akey",
-        "ts",
-        F.unix_micros("ts").alias("ts_us"),
-        "eid",
-        "val",
-        "side",
+        "akey", "ts", F.unix_micros("ts").alias("ts_us"), "eid", "val", "side"
     )
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        wm_ms = state.getCurrentWatermarkMs()
-        # a left at ms L is sealed iff wm > L, i.e. wm_ms > ts_us//1000,
-        # i.e. ts_us < wm_ms*1000 (non-negative integers) — precomputed
-        # so the per-row checks below are one comparison, no division
-        wm_us = wm_ms * 1000
-        # per-key sub-states of this bucket:
-        # akey -> [pend_ts, pend_id, hist_ts, hist_val, hist_id]
-        sub: dict[int, list[list[int]]] = load_keyed(state, ASOF_STATE)
-        if not state.hasTimedOut:
-            # NO cross-chunk sort needed (r08, guide §1.2 per-task work —
-            # the concat+sort here was vestigial from the order-sensitive
-            # GCRA template): right-side inserts go through bisect with a
-            # greatest-id tie rule, both order-independent, and pending
-            # lefts are sorted at emission below.  .tolist() converts the
-            # Arrow-backed columns to plain Python ints once instead of
-            # yielding numpy scalars element-wise.
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                for akey, ts_us, eid, val, side in zip(
-                    pdf["akey"].tolist(),
-                    pdf["ts_us"].tolist(),
-                    pdf["eid"].tolist(),
-                    pdf["val"].tolist(),
-                    pdf["side"].tolist(),
-                ):
-                    s = sub.get(akey)
-                    if s is None:
-                        s = sub[akey] = [[], [], [], [], []]
-                    if side == 1:
-                        hist_ts, hist_val, hist_id = s[2], s[3], s[4]
-                        v = int(val)
-                        i = bisect.bisect_left(hist_ts, ts_us)
-                        if i < len(hist_ts) and hist_ts[i] == ts_us:
-                            if eid > hist_id[i]:  # same-ts tie: greatest id
-                                hist_val[i], hist_id[i] = v, eid
-                        else:
-                            hist_ts.insert(i, ts_us)
-                            hist_val.insert(i, v)
-                            hist_id.insert(i, eid)
-                    else:
-                        s[0].append(ts_us)
-                        s[1].append(eid)
-        # emit, for EVERY key in the bucket, the pending lefts the
-        # watermark has sealed: no right with event time <= them can
-        # still arrive.  Sweeping keys without input this batch only
-        # moves their emission EARLIER than a per-key timeout would
-        # (never later) — the emitted set is unchanged.
-        out: list[tuple[int, int, int, "int | None"]] = []
-        kept: dict[int, list[list[int]]] = {}
-        min_keep = None
-        for akey, (pend_ts, pend_id, hist_ts, hist_val, hist_id) in sub.items():
-            keep_ts: list[int] = []
-            keep_id: list[int] = []
-            for ts_us, eid in sorted(zip(pend_ts, pend_id)):
-                if ts_us < wm_us:
-                    j = bisect.bisect_right(hist_ts, ts_us) - 1
-                    out.append(
-                        (eid, akey, ts_us, hist_val[j] if j >= 0 else None)
-                    )
-                else:
-                    keep_ts.append(ts_us)
-                    keep_id.append(eid)
-            # trim sealed rights, keeping the newest sealed one — it is
-            # still the as-of match for future (>= watermark) lefts.
-            # t//1000 < wm_ms == t < wm_us for non-negative t, so the
-            # cut bisects hist_ts directly, no divided copy.
-            cut = bisect.bisect_left(hist_ts, wm_us)
-            drop = max(0, cut - 1)
-            if drop:
-                hist_ts, hist_val, hist_id = (
-                    hist_ts[drop:],
-                    hist_val[drop:],
-                    hist_id[drop:],
-                )
-            if keep_ts or hist_ts:
-                kept[akey] = [keep_ts, keep_id, hist_ts, hist_val, hist_id]
-                # keep_ts came out of the sorted() sweep ascending, so
-                # its head is this key's min pending
-                if keep_ts and (min_keep is None or keep_ts[0] < min_keep):
-                    min_keep = keep_ts[0]
-        if kept:
-            save_keyed(state, ASOF_STATE, kept)
-            if min_keep is not None:
-                # timeouts fire when the watermark STRICTLY exceeds the
-                # set timestamp, and a left at ms L is sealed once
-                # wm > L — so arm at the bucket's min pending L itself
-                # (wm > L fires exactly at the seal point; L+1 would
-                # silently drop a left whose seal equals the final
-                # watermark).  Arming at the bucket min is never LATER
-                # than any member key's own arm point, and one firing
-                # sweeps every sealed left in the bucket, so no key
-                # waits on a second firing.  The API requires a
-                # timestamp strictly above the current watermark: when
-                # wm == L already (the left seals at the very next
-                # advance), wm+1 is the closest legal arm point; the
-                # only gap left is a stream whose watermark ends
-                # EXACTLY one ms past such a left — vanishingly narrow
-                # and batching-dependent, unlike the +1 bug this
-                # replaces, which dropped at every exact-boundary seal.
-                # A stale armed timeout from an earlier batch (pendings
-                # since emitted by a data-triggered sweep) fires into
-                # an empty sweep and re-arms or lapses — harmless.
-                state.setTimeoutTimestamp(max(wm_ms + 1, min_keep // 1000))
-        else:
-            state.remove()
-        if out:  # constructing an empty DataFrame per silent bucket
-            # costs more than the whole emission path
-            yield pd.DataFrame(
-                out, columns=["left_id", "akey", "ts_us", "asof_val"]
-            )
-
-    return prepared.groupBy("bkey").applyInPandasWithState(
-        fn,
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
-    )
+    return ASOF_KERNEL.apply(prepared, n_buckets)

@@ -32,3 +32,19 @@ def test_concurrent_queries_match_serial(spark):
         concurrent = {n: f.result(timeout=300) for n, f in futures.items()}
     for n in NAMES:
         assert concurrent[n] == serial[n], f"{n} diverged under concurrency"
+
+
+#: stateful drains: the same drain twice, plus another one
+STATEFUL = ["stream_twa", "stream_twa", "stream_funnel_cep"]
+
+
+def test_concurrent_stateful_drains_match_serial(spark):
+    """Overlapping stateful drains in one session each get their own memory
+    sink and leave the session's shuffle width as they found it."""
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    serial = {n: _run(spark, n) for n in set(STATEFUL)}
+    with ThreadPoolExecutor(max_workers=len(STATEFUL)) as pool:
+        futures = [(n, pool.submit(_run, spark, n)) for n in STATEFUL]
+        for n, f in futures:
+            assert f.result(timeout=300) == serial[n], f"{n} diverged under concurrency"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts

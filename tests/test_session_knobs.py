@@ -40,31 +40,57 @@ def test_state_parts_knob_fails_by_name(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_overlapping_state_parts_restore_the_session(spark):
+    """A second stateful start waits for the first one's restore, so the
+    two restores cannot run out of order and leave the session narrowed."""
+    import threading
+
+    from flow_spark.queries.streaming_windows import _state_parts
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    inside = threading.Event()
+
+    def second():
+        with _state_parts(spark):
+            inside.set()
+
+    with _state_parts(spark):
+        t = threading.Thread(target=second)
+        t.start()
+        # the second start must not get in while the first is narrowed
+        assert not inside.wait(0.5)
+    t.join(10)
+    assert inside.is_set()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+@pytest.fixture(scope="module")
+def any_input(spark):
+    """An empty frame with every column the keyed operators read."""
+    return spark.createDataFrame(
+        [], "k long, ts timestamp, v long, t string, id long, event_id long, "
+        "ingest_ts timestamp, meta map<string, string>"
+    )
+
+
 @pytest.mark.parametrize(
-    "knob, call",
+    "call",
     [
-        ("SPARK_GRAFT_GCRA_BUCKETS", lambda st: st.throttle_stream(None, rps=1)),
-        (
-            "SPARK_GRAFT_SESSION_BUCKETS",
-            lambda st: st.sessionize_stream(None, 30, "k", "ts", "v"),
-        ),
-        ("SPARK_GRAFT_CEP_BUCKETS", lambda st: st.funnel_stream(None, "k", "ts", "t", "id")),
-        ("SPARK_GRAFT_TWA_BUCKETS", lambda st: st.twa_stream(None, "k", "ts", "v")),
-        (
-            "SPARK_GRAFT_SSAJ_BUCKETS",
-            lambda st: st.asof_join_stream(None, None, "k", "ts", "id", "v", "rid"),
-        ),
+        lambda st, df: st.throttle_stream(df, rps=1, key_col="k", n_buckets=0),
+        lambda st, df: st.sessionize_stream(df, 30, "k", "ts", "v", n_buckets=0),
+        lambda st, df: st.funnel_stream(df, "k", "ts", "t", "id", n_buckets=0),
+        lambda st, df: st.twa_stream(df, "k", "ts", "v", n_buckets=0),
+        lambda st, df: st.asof_join_stream(df, df, "k", "ts", "id", "v", "id", n_buckets=0),
     ],
+    ids=["gcra", "session", "funnel", "twa", "asof"],
 )
-@pytest.mark.parametrize("value", ["x", "0"])
-def test_bucket_knobs_fail_by_name(monkeypatch, knob, call, value):
-    """Each operator reads its knob before it touches its input, so a bad
-    value fails by name before any plan is built."""
+def test_zero_buckets_fail_by_name(any_input, call):
+    """The bucket count is a parameter, not an env knob; a width below one
+    fails by the parameter's name before the stateful operator is planned."""
     from flow_spark.streaming import stateful
 
-    monkeypatch.setenv(knob, value)
-    with pytest.raises(ValueError, match=knob):
-        call(stateful)
+    with pytest.raises(ValueError, match="n_buckets"):
+        call(stateful, any_input)
 
 
 def test_default_driver_memory_fits_physical_ram():

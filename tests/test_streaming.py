@@ -8,6 +8,42 @@ import pytest
 from pyspark.sql import functions as F
 
 
+class _StuckQuery:
+    """A drain that never terminates, after ``progress`` batches."""
+
+    name = "stuck_drain"
+
+    def __init__(self, progress):
+        self.recentProgress = progress
+        self.stopped = False
+
+    def awaitTermination(self, timeout):
+        return False
+
+    def stop(self):
+        self.stopped = True
+
+
+@pytest.mark.parametrize(
+    "progress, detail",
+    [
+        ([{"batchId": 0, "durationMs": {"triggerExecution": 9}},
+          {"batchId": 1, "durationMs": {"addBatch": 4, "triggerExecution": 7}}],
+         "last batch 1, durationMs {'addBatch': 4, 'triggerExecution': 7}"),
+        ([], "last batch None, durationMs None"),
+    ],
+)
+def test_drain_timeout_names_query_and_last_batch(progress, detail):
+    from flow_spark.queries.streaming_windows import _drain
+
+    q = _StuckQuery(progress)
+    with pytest.raises(RuntimeError) as err:
+        _drain(q, timeout=1)
+    assert q.stopped
+    assert "'stuck_drain' exceeded 1s" in str(err.value)
+    assert detail in str(err.value)
+
+
 def test_streaming_windowed_agg(spark, sf_dir, tmp_path):
     from flow_spark.streaming.sources import stream_events
 
@@ -1234,22 +1270,24 @@ def test_stateful_session_event_time_timeout(spark, tmp_path, n_buckets):
     assert got == expected
 
 
-def test_gcra_tat_persists_across_micro_batches(spark, tmp_path):
+@pytest.mark.parametrize("n_buckets", [1, 32])
+def test_gcra_tat_persists_across_micro_batches(spark, tmp_path, n_buckets):
     """Cross-batch GCRA: the TAT stored in the state store must carry into
     the next micro-batch (pins the GroupState.get-is-a-property fix — a
     single-batch run never reads existing state, so only a multi-batch
     schedule exercises it).  Two files -> two batches, same key, all ten
     messages inside one burst window: batch 1 admits the burst, batch 2's
     five messages 100ms later must be throttled BECAUSE the TAT survived;
-    a fresh (lost-state) GCRA would re-admit."""
+    a fresh (lost-state) GCRA would re-admit.  n_buckets=1 also puts a
+    second key's rows into the same bucket: its own TAT must not leak."""
     from flow_spark.streaming.stateful import throttle_stream
 
     src = tmp_path / "gcra_src"
     src.mkdir()
 
-    def write_file(name, t0_ms, n, base_id):
+    def write_file(name, t0_ms, n, base_id, user="u"):
         rows = [
-            (base_id + i, "u", "2024-01-01 00:00:00.%03d" % (t0_ms + i))
+            (base_id + i, user, "2024-01-01 00:00:00.%03d" % (t0_ms + i))
             for i in range(n)
         ]
         spark.createDataFrame(
@@ -1264,6 +1302,7 @@ def test_gcra_tat_persists_across_micro_batches(spark, tmp_path):
 
     write_file("a", 0, 5, 0)
     write_file("b", 100, 5, 100)
+    write_file("b", 100, 2, 200, user="w")
 
     static_schema = spark.read.parquet(str(src / "a")).schema
     msgs = (
@@ -1271,11 +1310,12 @@ def test_gcra_tat_persists_across_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    out = throttle_stream(msgs, rps=2, key_col="user")
+    out = throttle_stream(msgs, rps=2, key_col="user", n_buckets=n_buckets)
+    sink = f"gcra_cross_b{n_buckets}"
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName("gcra_cross")
+        .queryName(sink)
         .option("checkpointLocation", str(tmp_path / "gcra_ckpt"))
         .start()
     )
@@ -1285,9 +1325,9 @@ def test_gcra_tat_persists_across_micro_batches(spark, tmp_path):
         q.stop()
 
     rows = spark.sql(
-        "SELECT event_id, throttle_status FROM gcra_cross ORDER BY event_id"
+        f"SELECT event_id, throttle_status FROM {sink} ORDER BY event_id"
     ).collect()
-    assert len(rows) == 10
+    assert len(rows) == 12
     by_id = {r.event_id: r.throttle_status for r in rows}
     # batch 1 (t=0ms x5 at rps=2, burst 0.5s): first two admitted
     assert [by_id[i] for i in range(5)] == [
@@ -1295,6 +1335,8 @@ def test_gcra_tat_persists_across_micro_batches(spark, tmp_path):
     ]
     # batch 2 (t=100..104ms): TAT is already 1.0s ahead -> ALL throttled
     assert all(by_id[100 + i] == "throttled" for i in range(5))
+    # a fresh key in the same batch starts from its own (empty) TAT
+    assert [by_id[200], by_id[201]] == ["admitted", "admitted"]
 
 
 def test_foreachbatch_idempotent_replay(spark, tmp_path):
