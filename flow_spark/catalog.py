@@ -1,10 +1,21 @@
-"""Fixture-table catalog.
+"""Fixture-table catalog: batch tables and file streams.
 
 Loads the driver-generated TPC-H-ish parquet tables (TESTDATA.md) and
 registers them as temp views.  All reads go through ``spark.read.parquet``
 so Catalyst gets predicate pushdown / column pruning / partition pruning
 for free; at 100 TB these would be partitioned external tables and the same
 code path applies.
+
+Streams come from here too.  :func:`stream_table` turns a fixture table
+into a file stream whose schema is the memoized batch relation's, so a
+stream never pays the one-job ``parquet`` schema inference that the
+batch read already did in this session; ``events.ts`` is normalized the
+same way on both paths.  :func:`stream_parquet` is the one file->stream
+rule: Spark's file-stream source monitors a directory, so a directory
+streams as it is and a single file streams through its parent with
+``pathGlobFilter`` set to the file's name (the source lists no
+subdirectories, so a same-name file deeper down is not picked up).
+Paths are made absolute against the driver's working directory first.
 """
 
 from __future__ import annotations
@@ -12,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -38,28 +50,62 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: per-session DataFrame memo: re-listing the files and re-inferring the
-#: schema for every query adds a fixed per-query cost (the dominant
-#: overhead at small SF; at 100 TB the listing of a large partitioned
-#: table is ALSO worth doing once).  A DataFrame is a lazy plan — reusing
-#: it shares the resolved relation + file index across queries while every
-#: execution still scans fresh.  Keyed by applicationId so a new session
-#: (tests spin several) never sees another session's plans.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+#: per-session memo, (raw relation, normalized DataFrame) per table:
+#: re-listing the files and re-inferring the schema for every query adds
+#: a fixed per-query cost (one Spark job, the dominant overhead at small
+#: SF; at 100 TB the listing of a large partitioned table is ALSO worth
+#: doing once).  A DataFrame is a lazy plan — reusing it shares the
+#: resolved relation + file index across queries while every execution
+#: still scans fresh; the raw relation's schema is what streams declare.
+#: Keyed by applicationId so a new session (tests spin several) never sees
+#: another session's plans.
+_TABLE_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
+
+
+def _memo(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, DataFrame]:
+    if name not in TABLES:
+        raise KeyError(f"unknown fixture table: {name!r} (have {TABLES})")
+    sf_dir = os.path.abspath(sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    hit = _TABLE_MEMO.get(key)
+    if hit is None:
+        raw = spark.read.parquet(table_path(sf_dir, name))
+        hit = _TABLE_MEMO[key] = (raw, _normalize(raw, name))
+    return hit
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown fixture table: {name!r} (have {TABLES})")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _TABLE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        df = normalize_events_ts(df)
-    _TABLE_MEMO[key] = df
-    return df
+    """The fixture table ``name``; the same DataFrame object on every
+    call in a session."""
+    return _memo(spark, sf_dir, name)[1]
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture table ``name`` as an unbounded file stream, with the
+    batch table's columns and types.  After the table's first batch or
+    stream read in a session this runs no Spark job."""
+    raw = _memo(spark, sf_dir, name)[0]
+    return _normalize(stream_parquet(spark, table_path(sf_dir, name), raw.schema), name)
+
+
+def stream_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """A parquet file or directory as a file stream.  Without ``schema``
+    it is inferred from the files (one Spark job)."""
+    path = os.path.abspath(path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(path):
+        return reader.parquet(path)
+    return reader.option("pathGlobFilter", os.path.basename(path)).parquet(
+        os.path.dirname(path)
+    )
+
+
+def _normalize(df: DataFrame, name: str) -> DataFrame:
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -67,7 +113,8 @@ def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     generations have varied — timestamp[ns] (surfaced as nanos-long via
     spark.sql.legacy.parquet.nanosAsLong) and timestamp[us] without tz
     metadata (surfaced as TIMESTAMP_NTZ) — normalize both.  The ONE
-    definition, shared by the batch catalog and every streaming reader.
+    definition: :func:`load_table` and :func:`stream_table` apply it to
+    the batch and the stream read of ``events``.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType

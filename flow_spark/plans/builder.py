@@ -344,23 +344,14 @@ class Pipeline:
                 raise ConfigError(f"receiver {name!r}: no input named {rest!r} provided")
             return inputs[rest]
         if scheme == "events":
-            from flow_spark.catalog import load_table
+            from flow_spark.catalog import load_table, stream_table
 
-            if streaming:
-                from flow_spark.streaming.sources import stream_events
-
-                return stream_events(self.spark, rest)
-            return events_to_messages(load_table(self.spark, rest, "events"))
+            read = stream_table if streaming else load_table
+            return events_to_messages(read(self.spark, rest, "events"))
         if scheme == "parquet":
-            if streaming:
-                import os
+            from flow_spark.catalog import stream_parquet
 
-                from flow_spark.streaming.sources import _as_stream_dir
-
-                static = self.spark.read.parquet(rest)
-                path = rest if os.path.isdir(rest) else _as_stream_dir(rest)
-                return self.spark.readStream.schema(static.schema).parquet(path)
-            return self.spark.read.parquet(rest)
+            return stream_parquet(self.spark, rest) if streaming else self.spark.read.parquet(rest)
         if scheme == "rate" and streaming:
             rows = int(params.get("rows_per_second", 100))
             return (

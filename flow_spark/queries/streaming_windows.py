@@ -20,7 +20,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flow_spark.catalog import load_table
+from flow_spark.catalog import load_table, stream_table
 from flow_spark.queries.registry import register
 from flow_spark.session import _env_int
 
@@ -84,15 +84,21 @@ def _state_parts(spark: SparkSession, default: int = 8):
             conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _query_name(prefix: str) -> str:
+    """A uuid-suffixed ``queryName``: concurrent drains in one session
+    never share one, and the timeout error, ``/streams`` and the event
+    log can name every drain."""
+    return f"{prefix}_{uuid.uuid4().hex[:8]}"
+
+
 def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
     """Drain the stateful streaming ``df`` into a memory sink and return
     the sink table: the query starts at ``_state_parts``' width with a
     fresh checkpoint (a reused one would replay as "no new data" and drain
-    zero rows) and ``trigger(availableNow)``.  The sink name carries a
-    uuid suffix, so concurrent drains in one session never share a
-    ``queryName`` or a temp view."""
+    zero rows) and ``trigger(availableNow)``.  The sink is named by
+    ``_query_name``, so concurrent drains never share a temp view."""
     spark = df.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    name = _query_name(prefix)
     with _state_parts(spark):
         q = (
             df.writeStream.outputMode(mode)
@@ -121,7 +127,7 @@ def _segment_spool(
     parquet file for a rowless segment, keeping multi-source streams in
     lockstep (their watermark contract needs aligned batches); without
     it an empty segment simply contributes no micro-batch.  Returns the
-    spool directory (read it with ``spool/b*`` + maxFilesPerTrigger=1).
+    spool directory (stream it with ``_spool_stream``).
     """
     import glob as _glob
     import os as _os
@@ -149,6 +155,17 @@ def _segment_spool(
             _os.replace(part, dst)
             _os.utime(dst, (base + i, base + i))
     return spool_dir
+
+
+def _spool_stream(spark: SparkSession, spool_dir: str, schema: str) -> DataFrame:
+    """A ``_segment_spool`` directory as a file stream of one segment per
+    micro-batch, in segment order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{spool_dir}/b*")
+    )
 
 
 @register(
@@ -457,20 +474,11 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.streaming.stateful import sessionize_stream
 
-    path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema
-    # the file source wants a directory: stream the sf dir, globbed to the
-    # one fixture file
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     prepared = (
-        stream.filter(F.col("user_id") % 10 == 0)
+        stream_table(spark, sf_dir, "events")
+        .filter(F.col("user_id") % 10 == 0)
         .select(
             "user_id",
             "ts",
@@ -482,6 +490,11 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepared, gap_minutes=10, key_col="user_id", ts_col="ts", val_col="vc"
     )
     return _drain_stateful(sessions, "sessionize").orderBy("skey", "start_us")
+
+
+#: the columns ``stream_asof_enrich`` reads back from its foreachBatch
+#: output; declared, so the read runs no ``parquet`` inference job
+ASOF_ENRICH_OUT = "event_id long, user_id long, ts timestamp, asof_value double"
 
 
 @register(
@@ -519,23 +532,15 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")
     history = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value", "event_id"
     )
-
-    path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     probe = (
-        stream.withWatermark("ts", "10 minutes")
+        stream_table(spark, sf_dir, "events")
+        .withWatermark("ts", "10 minutes")
         .filter((F.col("event_type") == "click") & (F.col("event_id") % 7 == 0))
         .select("event_id", "user_id", "ts")
     )
@@ -554,13 +559,15 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         probe.writeStream.foreachBatch(enrich)
+        .queryName(_query_name("asof_enrich"))
         .option("checkpointLocation", tempfile.mkdtemp(prefix="asof_enrich_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
     _drain(q)
     return (
-        spark.read.parquet(out_dir)
+        spark.read.schema(ASOF_ENRICH_OUT)
+        .parquet(out_dir)
         .select(
             "event_id",
             "user_id",
@@ -695,15 +702,10 @@ def stream_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flow_spark.catalog import table_path
     from flow_spark.operators.text import tokens
-    from flow_spark.streaming.sources import _as_stream_dir
     from flow_spark.streaming.stateful import heavy_hitters_stream
 
-    static = spark.read.parquet(table_path(sf_dir, "documents"))
-    stream = spark.readStream.schema(static.schema).parquet(
-        _as_stream_dir(table_path(sf_dir, "documents"))
-    )
+    stream = stream_table(spark, sf_dir, "documents")
     toks_stream = stream.select(F.explode(tokens(F.col("text"))).alias("item"))
     summaries = heavy_hitters_stream(toks_stream, "item", n_shards=4, capacity=64)
     from pyspark.sql.window import Window as W
@@ -855,16 +857,9 @@ def stream_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.streaming.stateful import twa_stream
 
-    path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     prepared = stream.filter(F.col("user_id") % 10 == 0).select(
         "user_id",
         "ts",
@@ -963,20 +958,15 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix="stream_upsert_cdc_",
         n_segments=3,
     )
-    stream = (
-        spark.readStream.schema("k long, cents long, ord long")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{spool}/b*")
-    )
     q = (
         upsert_sink(
-            stream,
+            _spool_stream(spark, spool, "k long, cents long, ord long"),
             table_dir,
             key_col="k",
             checkpoint_dir=tempfile.mkdtemp(prefix="stream_upsert_ckpt_"),
             order_col="ord",
         )
+        .queryName(_query_name("upsert_cdc"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1057,17 +1047,9 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flow_spark.catalog import normalize_events_ts, table_path
     from flow_spark.streaming.stateful import quantile_monitor_stream
 
-    path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    prepared = stream.filter(
+    prepared = stream_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
         & F.col("event_type").isin("view", "click", "purchase")
     ).select(
@@ -1161,21 +1143,16 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("k", "cents", "ord", "op", "seg"),
         prefix="stream_cdc_del_spool_",
     )
-    stream = (
-        spark.readStream.schema("k long, cents long, ord long, op string")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{spool}/b*")
-    )
     q = (
         upsert_sink(
-            stream,
+            _spool_stream(spark, spool, "k long, cents long, ord long, op string"),
             table_dir,
             key_col="k",
             checkpoint_dir=tempfile.mkdtemp(prefix="stream_cdc_del_ckpt_"),
             order_col="ord",
             op_col="op",
         )
+        .queryName(_query_name("cdc_deletes"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1314,23 +1291,9 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ssaj_r_",
         )
         _SSAJ_SPOOL_CACHE[key] = (lspool, rspool)
-    lstream = (
-        spark.readStream.schema("user_id long, ts timestamp, event_id long")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{lspool}/b*")
-    )
-    rstream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, vc long"
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{rspool}/b*")
-    )
     out = asof_join_stream(
-        lstream,
-        rstream,
+        _spool_stream(spark, lspool, "user_id long, ts timestamp, event_id long"),
+        _spool_stream(spark, rspool, "user_id long, ts timestamp, event_id long, vc long"),
         key_col="user_id",
         ts_col="ts",
         left_id_col="event_id",
@@ -1440,6 +1403,7 @@ def stream_changefeed_replication(spark: SparkSession, sf_dir: str) -> DataFrame
             order_col="_commit_version",
             op_col="op",
         )
+        .queryName(_query_name("changefeed"))
         .trigger(availableNow=True)
         .start()
     )

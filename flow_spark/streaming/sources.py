@@ -11,38 +11,16 @@ feeding Kafka), which plugs in here unchanged.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flow_spark.catalog import table_path
+from flow_spark.catalog import stream_table
 from flow_spark.operators.message import events_to_messages
-
-
-def _as_stream_dir(file_path: str) -> str:
-    """Spark's file-stream source monitors a DIRECTORY; the fixtures are
-    single parquet files, so expose each through a symlink dir (no copy).
-
-    The target must be ABSOLUTE: a relative ``sf_dir`` (legal for batch
-    reads, which resolve against the driver cwd) would otherwise produce
-    a symlink that resolves relative to the TEMP dir — dangling, so the
-    stream source lists zero files and the query silently emits nothing
-    (bit us as a bogus sf1 parity failure)."""
-    file_path = os.path.abspath(file_path)
-    d = tempfile.mkdtemp(prefix="flow_spark_stream_")
-    os.symlink(file_path, os.path.join(d, os.path.basename(file_path)))
-    return d
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events fixture as an unbounded stream of canonical messages."""
-    static = spark.read.parquet(table_path(sf_dir, "events"))
-    raw = spark.readStream.schema(static.schema).parquet(
-        _as_stream_dir(table_path(sf_dir, "events"))
-    )
-    from flow_spark.catalog import normalize_events_ts
-
-    return events_to_messages(normalize_events_ts(raw))
+    return events_to_messages(stream_table(spark, sf_dir, "events"))
 
 
 def changefeed_drain(

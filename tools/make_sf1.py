@@ -70,7 +70,7 @@ def ensure_sf1(
         groups; the small corpus tables (documents/embeddings/supplier/
         customer/part) need an explicit smaller size.  Tables stay ONE
         FILE each: the DuckDB oracle (read_parquet) and the file-stream
-        sources (_as_stream_dir symlink) address single files, and
+        sources (``catalog.stream_parquet``) address single files, and
         Spark's byte-range splitting parallelizes within a file at
         row-group granularity anyway — multi-file adds nothing those
         contracts don't lose."""
