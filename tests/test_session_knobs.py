@@ -23,6 +23,13 @@ def test_env_int_default_value_and_errors(monkeypatch):
         _env_int("SPARK_GRAFT_TEST_KNOB", 7, 1)
 
 
+def test_cpus_default_is_the_affinity_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.local_cpus() == 3
+
+
 def test_cpus_knob_fails_by_name(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):

@@ -19,20 +19,6 @@ from flow_spark.catalog import load_table, stream_table
 from flow_spark.plans.builder import Pipeline
 
 
-def _count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted by a job group."""
-    sc = spark.sparkContext
-    group = f"count_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _drain_rows(spark, df, tmp_path):
     name = f"src_{uuid.uuid4().hex[:8]}"
     q = (
@@ -46,7 +32,7 @@ def _drain_rows(spark, df, tmp_path):
     return spark.table(name).collect()
 
 
-def test_warm_stream_runs_no_job(spark, sf_dir, tmp_path):
+def test_warm_stream_runs_no_job(spark, sf_dir, tmp_path, count_jobs):
     from flow_spark.streaming.sources import stream_events
 
     # a directory this session has never read: the first read must infer
@@ -55,12 +41,12 @@ def test_warm_stream_runs_no_job(spark, sf_dir, tmp_path):
     shutil.copy(os.path.join(sf_dir, "events.parquet"), fresh / "events.parquet")
     sf = str(fresh)
 
-    first, n_first = _count_jobs(spark, lambda: stream_table(spark, sf, "events"))
+    first, n_first = count_jobs(spark, lambda: stream_table(spark, sf, "events"))
     assert n_first >= 1  # the schema inference: proves the count can see a job
     batch = load_table(spark, sf, "events")
 
-    second, n_second = _count_jobs(spark, lambda: stream_table(spark, sf, "events"))
-    msgs, n_msgs = _count_jobs(spark, lambda: stream_events(spark, sf))
+    second, n_second = count_jobs(spark, lambda: stream_table(spark, sf, "events"))
+    msgs, n_msgs = count_jobs(spark, lambda: stream_events(spark, sf))
     assert (n_second, n_msgs) == (0, 0)
     assert load_table(spark, sf, "events") is batch
     assert first.isStreaming and second.isStreaming and msgs.isStreaming
