@@ -105,11 +105,27 @@ def _query_name(prefix: str) -> str:
     return f"{prefix}_{uuid.uuid4().hex[:8]}"
 
 
-def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
-    """Drain the stateful streaming ``df`` into a memory sink and return
-    the sink table: the query starts at ``_state_parts``' width with a
-    fresh checkpoint (a reused one would replay as "no new data" and drain
-    zero rows) and ``trigger(availableNow)``.  The sink is named by
+def _drain_stateful(
+    spark: SparkSession,
+    sf_dir: str,
+    drain: str,
+    build,
+    prefix: str,
+    mode: str = "append",
+    spools: tuple = (),
+) -> DataFrame:
+    """Drain the stateful stream ``build()`` returns into a memory sink and
+    return the sink table.
+
+    ``build()`` runs once per (registry name ``drain``, the ``spools`` the
+    stream reads, session, sf_dir) through ``_memo``, so a rebuilt spool
+    gets a new plan.  Building a drain's plan costs hundreds of py4j round
+    trips, 80-150 ms warm (sessionize: 340 calls, 65% of its build in
+    socket ``recv``).  Only the unstarted plan is memoized, never rows or
+    state: each start gets a fresh checkpoint (a reused one would replay
+    as "no new data" and drain zero rows), so it re-reads all of its
+    input, and it takes ``_state_parts``' width at start time.  The query
+    runs with ``trigger(availableNow)``; its sink is named by
     ``_query_name``, so concurrent drains never share a temp view.
 
     The table comes back as ONE partition.  The memory sink keeps its
@@ -118,6 +134,7 @@ def _drain_stateful(df: DataFrame, prefix: str, mode: str = "append") -> DataFra
     shuffled them back together in three jobs.  A single partition
     already satisfies clustered and ordered distributions: the read-back
     plans no exchange and runs as one job."""
+    df = _memo(spark, sf_dir, ("plan", drain, *spools), build)
     spark = df.sparkSession
     name = _query_name(prefix)
     with _state_parts(spark):
@@ -181,23 +198,33 @@ def _segment_spool(
     return spool_dir
 
 
-#: (drain, applicationId, abs sf_dir) -> that drain's spool directories
-_SPOOL_CACHE: dict = {}
+#: (what, applicationId, abs sf_dir) -> what ``build`` made for it
+_MEMO: dict = {}
 
 
-def _memo_spools(spark: SparkSession, sf_dir: str, drain: str, build) -> tuple:
-    """The spool directories ``build()`` writes for ``drain``, memoized
-    per (session, sf_dir).  A spool is a deterministic function of the
-    fixture, and a file-source drain only reads it, so a warm drain
-    re-runs its stream (with a fresh checkpoint) but not the spool's
-    scan and write jobs.  A memo whose directories are gone is rebuilt."""
+def _memo(spark: SparkSession, sf_dir: str, what, build, valid=None):
+    """``build()``, memoized per (``what``, session, abs ``sf_dir``): the
+    key rule of ``catalog._memo``.  ``what`` names the value: ``("plan",
+    drain, *spools)`` for a stateful drain's unstarted stream
+    (``_drain_stateful``), ``("spools", drain)`` for the spool directories
+    a drain streams.  A spool is a deterministic function of the fixture,
+    and a file-source drain only reads it, so a warm drain re-runs its
+    stream (with a fresh checkpoint) but not the spool's scan and write
+    jobs.  A value ``valid`` rejects (spools whose directories are gone:
+    ``_dirs_exist``) is rebuilt."""
     import os as _os
 
-    key = (drain, spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    spools = _SPOOL_CACHE.get(key)
-    if spools is None or not all(_os.path.isdir(p) for p in spools):
-        spools = _SPOOL_CACHE[key] = build()
-    return spools
+    key = (what, spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
+    value = _MEMO.get(key)
+    if value is None or (valid is not None and not valid(value)):
+        value = _MEMO[key] = build()
+    return value
+
+
+def _dirs_exist(dirs: tuple) -> bool:
+    import os as _os
+
+    return all(_os.path.isdir(p) for p in dirs)
 
 
 def _spool_stream(spark: SparkSession, spool_dir: str, schema: str) -> DataFrame:
@@ -381,14 +408,15 @@ def stream_gcra_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.sources import stream_events
     from flow_spark.streaming.stateful import throttle_stream
 
-    msgs = stream_events(spark, sf_dir)
-    compressed = msgs.withColumn(
-        "ingest_ts",
-        F.timestamp_micros((F.unix_micros("ingest_ts") / 100_000).cast("long")),
-    )
-    throttled = throttle_stream(compressed, rps=5, key_col="user")
+    def build():
+        compressed = stream_events(spark, sf_dir).withColumn(
+            "ingest_ts",
+            F.timestamp_micros((F.unix_micros("ingest_ts") / 100_000).cast("long")),
+        )
+        return throttle_stream(compressed, rps=5, key_col="user")
+
     return (
-        _drain_stateful(throttled, "gcra")
+        _drain_stateful(spark, sf_dir, "stream_gcra_throttle", build, "gcra")
         .groupBy("throttle_status")
         .agg(
             F.count("*").alias("n"),
@@ -519,20 +547,24 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.stateful import sessionize_stream
 
-    prepared = (
-        stream_table(spark, sf_dir, "events")
-        .filter(F.col("user_id") % 10 == 0)
-        .select(
-            "user_id",
-            "ts",
-            F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
+    def build():
+        prepared = (
+            stream_table(spark, sf_dir, "events")
+            .filter(F.col("user_id") % 10 == 0)
+            .select(
+                "user_id",
+                "ts",
+                F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
+            )
+            .withWatermark("ts", "1 minute")
         )
-        .withWatermark("ts", "1 minute")
-    )
-    sessions = sessionize_stream(
-        prepared, gap_minutes=10, key_col="user_id", ts_col="ts", val_col="vc"
-    )
-    return _drain_stateful(sessions, "sessionize").orderBy("skey", "start_us")
+        return sessionize_stream(
+            prepared, gap_minutes=10, key_col="user_id", ts_col="ts", val_col="vc"
+        )
+
+    return _drain_stateful(
+        spark, sf_dir, "stream_sessionize_stateful", build, "sessionize"
+    ).orderBy("skey", "start_us")
 
 
 #: the columns ``stream_asof_enrich`` reads back from its foreachBatch
@@ -686,20 +718,22 @@ def stream_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.sources import stream_events
     from flow_spark.streaming.stateful import funnel_stream
 
-    msgs = stream_events(spark, sf_dir).filter(
-        F.col("meta")["sendto"].isin("view", "click", "purchase")
-    )
-    prepared = msgs.select(
-        F.col("meta")["user"].alias("user"),
-        F.col("ingest_ts"),
-        F.col("meta")["sendto"].alias("etype"),
-        F.col("event_id"),
-    )
-    funnels = funnel_stream(
-        prepared, key_col="user", ts_col="ingest_ts", type_col="etype",
-        id_col="event_id",
-    )
-    return _drain_stateful(funnels, "funnel").agg(
+    def build():
+        msgs = stream_events(spark, sf_dir).filter(
+            F.col("meta")["sendto"].isin("view", "click", "purchase")
+        )
+        prepared = msgs.select(
+            F.col("meta")["user"].alias("user"),
+            F.col("ingest_ts"),
+            F.col("meta")["sendto"].alias("etype"),
+            F.col("event_id"),
+        )
+        return funnel_stream(
+            prepared, key_col="user", ts_col="ingest_ts", type_col="etype",
+            id_col="event_id",
+        )
+
+    return _drain_stateful(spark, sf_dir, "stream_funnel_cep", build, "funnel").agg(
         F.count("*").cast("bigint").alias("n_funnels"),
         F.countDistinct("fkey").cast("bigint").alias("n_users"),
         F.sum("purchase_id").cast("bigint").alias("purchase_id_sum"),
@@ -748,12 +782,14 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.operators.text import tokens
     from flow_spark.streaming.stateful import heavy_hitters_stream
 
-    stream = stream_table(spark, sf_dir, "documents")
-    toks_stream = stream.select(F.explode(tokens(F.col("text"))).alias("item"))
-    summaries = heavy_hitters_stream(toks_stream, "item", n_shards=4, capacity=64)
     from pyspark.sql.window import Window as W
 
-    res = _drain_stateful(summaries, "mg")
+    def build():
+        stream = stream_table(spark, sf_dir, "documents")
+        toks_stream = stream.select(F.explode(tokens(F.col("text"))).alias("item"))
+        return heavy_hitters_stream(toks_stream, "item", n_shards=4, capacity=64)
+
+    res = _drain_stateful(spark, sf_dir, "stream_heavy_hitters", build, "mg")
     # final summary = the max-seq emission per shard (windowed, no
     # self-join: the memory view's attributes would conflict)
     wmax = W.partitionBy("shard")
@@ -902,17 +938,17 @@ def stream_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
 def stream_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.stateful import twa_stream
 
-    stream = stream_table(spark, sf_dir, "events")
-    prepared = stream.filter(F.col("user_id") % 10 == 0).select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
-    )
-    out = twa_stream(
-        prepared, key_col="user_id", ts_col="ts", val_col="vc"
-    )
-    return _drain_stateful(out, "twa", "update").orderBy("tkey")
+    def build():
+        stream = stream_table(spark, sf_dir, "events")
+        prepared = stream.filter(F.col("user_id") % 10 == 0).select(
+            "user_id",
+            "ts",
+            "event_id",
+            F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
+        )
+        return twa_stream(prepared, key_col="user_id", ts_col="ts", val_col="vc")
+
+    return _drain_stateful(spark, sf_dir, "stream_twa", build, "twa", "update").orderBy("tkey")
 
 
 def _cdc_segment(date_col: str):
@@ -999,16 +1035,17 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-batch last-writer-wins == global argmax by (day, orderkey).
     # The snapshot table above is per drain (the MERGE mutates it); the
     # spool is only read, so it is memoized.
-    (spool,) = _memo_spools(
+    (spool,) = _memo(
         spark,
         sf_dir,
-        "stream_upsert_cdc",
+        ("spools", "stream_upsert_cdc"),
         lambda: (
             _segment_spool(
                 upd.select("k", "cents", "ord", _cdc_segment("odate")),
                 prefix="stream_upsert_cdc_",
             ),
         ),
+        _dirs_exist,
     )
     q = (
         upsert_sink(
@@ -1101,15 +1138,19 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.stateful import quantile_monitor_stream
 
-    prepared = stream_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-        & F.col("event_type").isin("view", "click", "purchase")
-    ).select(
-        "event_type",
-        F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
-    )
-    out = quantile_monitor_stream(prepared, key_col="event_type", val_col="vc")
-    return _drain_stateful(out, "qm", "update").orderBy("qkey")
+    def build():
+        prepared = stream_table(spark, sf_dir, "events").filter(
+            F.col("value").isNotNull()
+            & F.col("event_type").isin("view", "click", "purchase")
+        ).select(
+            "event_type",
+            F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
+        )
+        return quantile_monitor_stream(prepared, key_col="event_type", val_col="vc")
+
+    return _drain_stateful(
+        spark, sf_dir, "stream_quantile_monitor", build, "qm", "update"
+    ).orderBy("qkey")
 
 
 @register(
@@ -1186,16 +1227,17 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_dir = tempfile.mkdtemp(prefix="stream_cdc_del_tbl_")
     snapshot_write(initial, table_dir, stats_col="k")
-    (spool,) = _memo_spools(
+    (spool,) = _memo(
         spark,
         sf_dir,
-        "stream_cdc_deletes",
+        ("spools", "stream_cdc_deletes"),
         lambda: (
             _segment_spool(
                 ev.select("k", "cents", "ord", "op", _cdc_segment("odate")),
                 prefix="stream_cdc_del_spool_",
             ),
         ),
+        _dirs_exist,
     )
     q = (
         upsert_sink(
@@ -1287,7 +1329,7 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flow_spark.streaming.stateful import asof_join_stream
 
-    def build():
+    def build_spools():
         ev = load_table(spark, sf_dir, "events")
         lo, hi = ev.agg(
             F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
@@ -1331,19 +1373,27 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return lspool, rspool
 
-    lspool, rspool = _memo_spools(spark, sf_dir, "stream_stream_asof_join", build)
-    out = asof_join_stream(
-        _spool_stream(spark, lspool, "user_id long, ts timestamp, event_id long"),
-        _spool_stream(spark, rspool, "user_id long, ts timestamp, event_id long, vc long"),
-        key_col="user_id",
-        ts_col="ts",
-        left_id_col="event_id",
-        right_val_col="vc",
-        right_id_col="event_id",
-        delay="5 minutes",
+    spools = _memo(
+        spark, sf_dir, ("spools", "stream_stream_asof_join"), build_spools, _dirs_exist
     )
+
+    def build():
+        lspool, rspool = spools
+        return asof_join_stream(
+            _spool_stream(spark, lspool, "user_id long, ts timestamp, event_id long"),
+            _spool_stream(spark, rspool, "user_id long, ts timestamp, event_id long, vc long"),
+            key_col="user_id",
+            ts_col="ts",
+            left_id_col="event_id",
+            right_val_col="vc",
+            right_id_col="event_id",
+            delay="5 minutes",
+        )
+
     return (
-        _drain_stateful(out, "ssaj")
+        _drain_stateful(
+            spark, sf_dir, "stream_stream_asof_join", build, "ssaj", spools=spools
+        )
         .select(
             F.col("left_id").cast("bigint").alias("left_id"),
             F.col("akey").cast("bigint").alias("akey"),

@@ -19,6 +19,21 @@ a millisecond.  When the installed pyspark is missing or is another version
 than the one in pyspark.zip, ``sys.path`` is restored exactly and the daemon
 is plain ``pyspark.daemon``.
 
+The daemon also freezes its heap before it forks.  A reused worker runs a
+full ``gc.collect()`` after every task (in ``pyspark.daemon.manager``'s fork
+branch, between tasks), and with the modules every pandas-UDF worker loads
+that walk covers about 73k objects: 31-75 ms per collect inside a real
+worker on the box above, paid while the JVM waits for the worker's next
+Python runner.  ``preload`` imports those modules (``PRELOAD``) in the
+daemon, collects once and calls ``gc.freeze()``.  Forked workers inherit the
+imported modules and a frozen generation that their own collections skip:
+the per-task collect walks only the few hundred objects the worker made
+after the fork (0.2-0.5 ms), and a new worker no longer imports pandas or
+pyarrow itself.  In a live ``stateful_drain`` run a worker's gap between
+two tasks fell from 50-130 ms to 1-7 ms.  The daemon reports its port about
+0.33 s later, after the imports.  A module that fails to import is skipped;
+the daemon still freezes and serves.
+
 ``flow_spark.session.get_spark`` selects this module through
 ``spark.python.daemon.module`` when Python workers can import ``flow_spark``.
 Run by Spark as ``python -m flow_spark.worker_daemon [worker_module]``.
@@ -26,6 +41,8 @@ Run by Spark as ``python -m flow_spark.worker_daemon [worker_module]``.
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import re
 import sys
@@ -34,6 +51,8 @@ import zipfile
 #: modules the archives provide; purged again when the daemon falls back
 _ARCHIVED_PACKAGES = ("pyspark", "py4j")
 _VERSION_RE = re.compile(r"""__version__\b[^=]*=\s*['"]([^'"]+)['"]""")
+#: what every pandas-UDF worker imports; loaded once, in the daemon
+PRELOAD = ("numpy", "pandas", "pyarrow", "pyspark.sql.pandas.serializers")
 
 
 def select_path(
@@ -104,8 +123,26 @@ def drop_archives() -> bool:
     return False
 
 
+def preload() -> list[str]:
+    """Import ``PRELOAD``, skipping any module that fails to import, then
+    collect once and freeze everything alive into the permanent generation
+    that later collections (here and in forked workers) never walk.
+    Returns the modules that imported."""
+    loaded = []
+    for name in PRELOAD:
+        try:
+            importlib.import_module(name)
+        except Exception:  # missing or broken: the worker imports it itself
+            continue
+        loaded.append(name)
+    gc.collect()
+    gc.freeze()
+    return loaded
+
+
 if __name__ == "__main__":
     drop_archives()
     from pyspark.daemon import manager
 
+    preload()
     manager()

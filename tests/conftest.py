@@ -17,6 +17,10 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: a long-running test; it still runs in Tier-1")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from flow_spark.session import get_spark

@@ -1,6 +1,7 @@
 """The fixed shape of a registry stateful drain: its state runs in one wave
-of tasks (``streaming_windows._state_parts``) and its memory sink is read
-back in one Spark job (``streaming_windows._drain_stateful``)."""
+of tasks (``streaming_windows._state_parts``), its memory sink is read
+back in one Spark job, and a warm drain starts the plan the first one built
+(``streaming_windows._drain_stateful``)."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pytest
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from flow_spark.catalog import load_table
 from flow_spark.queries import streaming_windows
 from flow_spark.queries.registry import all_queries
 
@@ -78,3 +80,23 @@ def test_read_back_runs_one_job(spark, sf_dir, count_jobs, monkeypatch, name):
     monkeypatch.setattr(streaming_windows, "_drain_stateful", lambda *a, **k: sink)
     plain = build(spark, sf_dir).collect()
     assert collections.Counter(rows) == collections.Counter(plain)
+
+
+def test_plan_memo_holds_no_data(spark, sf_dir, monkeypatch):
+    """A second drain in the session starts the same DataFrame object, and
+    still reads the whole table and returns the same rows."""
+    started = []
+    cls = type(spark.range(1))
+    write_stream = cls.writeStream
+    monkeypatch.setattr(
+        cls, "writeStream", property(lambda df: started.append(df) or write_stream.fget(df))
+    )
+    runs = []
+    for _ in range(2):
+        with _recording(spark) as rec:
+            rows = streaming_windows.stream_twa(spark, sf_dir).collect()
+        runs.append((rows, sum(p.numInputRows for p in rec.progress)))
+    assert len(started) == 2 and started[0] is started[1]
+    n_events = load_table(spark, sf_dir, "events").count()
+    assert runs[0][1] == runs[1][1] == n_events
+    assert runs[0][0] == runs[1][0] and runs[0][0]
