@@ -50,28 +50,48 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: per-session memo, (raw relation, normalized DataFrame) per table:
-#: re-listing the files and re-inferring the schema for every query adds
-#: a fixed per-query cost (one Spark job, the dominant overhead at small
-#: SF; at 100 TB the listing of a large partitioned table is ALSO worth
-#: doing once).  A DataFrame is a lazy plan — reusing it shares the
-#: resolved relation + file index across queries while every execution
-#: still scans fresh; the raw relation's schema is what streams declare.
-#: Keyed by applicationId so a new session (tests spin several) never sees
-#: another session's plans.
-_TABLE_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
+#: (applicationId, abs sf_dir, what) -> what ``build`` made for it.  A
+#: process has one live SparkContext, so the first lookup under a new
+#: applicationId drops every entry of the stopped ones
+#: (:func:`session_memo`).
+_MEMO: dict[tuple, object] = {}
+_MEMO_APP: list[str | None] = [None]
+
+
+def session_memo(spark: SparkSession, sf_dir: str, what, build, valid=None):
+    """``build()``, memoized per (session, abs ``sf_dir``, ``what``).
+
+    A value is a lazy plan or a spool directory, never rows: reusing it
+    shares the resolved relation across queries while every execution
+    still scans fresh.  A value ``valid`` rejects is rebuilt.  Plans and
+    spools of a stopped session are useless to a new one, and keeping
+    them would grow the memo with every session a process starts."""
+    app = spark.sparkContext.applicationId
+    if app != _MEMO_APP[0]:
+        # list(): drains on other threads of this session may insert
+        for key in [k for k in list(_MEMO) if k[0] != app]:
+            _MEMO.pop(key, None)
+        _MEMO_APP[0] = app
+    key = (app, os.path.abspath(sf_dir), what)
+    value = _MEMO.get(key)
+    if value is None or (valid is not None and not valid(value)):
+        value = _MEMO[key] = build()
+    return value
 
 
 def _memo(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, DataFrame]:
+    """(raw relation, normalized DataFrame) of fixture table ``name``:
+    re-listing the files and re-inferring the schema for every query
+    adds a fixed per-query cost (one Spark job, the dominant overhead
+    at small SF); the raw relation's schema is what streams declare."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table: {name!r} (have {TABLES})")
-    sf_dir = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _TABLE_MEMO.get(key)
-    if hit is None:
-        raw = spark.read.parquet(table_path(sf_dir, name))
-        hit = _TABLE_MEMO[key] = (raw, _normalize(raw, name))
-    return hit
+
+    def build():
+        raw = spark.read.parquet(table_path(os.path.abspath(sf_dir), name))
+        return raw, _normalize(raw, name)
+
+    return session_memo(spark, sf_dir, ("table", name), build)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -54,13 +54,3 @@ def sql_dot(vec_sql: str, lit_array_sql: str) -> str:
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-
-
-def sql_sq_l2(vec_sql: str, lit_array_sql: str) -> str:
-    """SQL fragment: squared L2 distance to a literal vector."""
-    return (
-        f"aggregate(zip_with({vec_sql}, {lit_array_sql}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )

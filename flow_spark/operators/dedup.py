@@ -369,75 +369,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_band_keys(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """(doc_id, bucket) LSH band keys of each document — the unit the
-    band store persists for incremental (streaming) near-dup."""
-    sig = minhash_signatures(word_shingles(docs, text_col=text_col, distinct=False))
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(b)),
-                *[
-                    F.col(f"mh{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_keys).alias("bucket"))
-
-
-def incremental_neardup_batch(
-    batch_df: DataFrame, store_path: str, text_col: str = "text"
-) -> DataFrame:
-    """One micro-batch of continuous-ingestion near-dup: returns the kept
-    rows of `batch_df` and appends their band keys to the store.
-
-    Drop rule (deterministic, first-writer-wins): a doc is dropped iff any
-    of its band buckets (a) already exists in the persistent store — i.e.
-    an earlier batch kept a near-duplicate — or (b) is claimed by a
-    smaller doc_id within the same batch.  Only KEPT docs' bands enter the
-    store, so a dropped doc never blocks a later distinct doc.
-
-    Scale shape: the store is parquet partition-pruned by bucket on a real
-    deployment (or a Delta/key-value store); the probe is one left-semi
-    join batch-bands |x| store-buckets — shuffle volume is the batch's
-    band keys (4 small strings per doc), never the corpus.  State grows
-    O(kept docs * n_bands), the minimal sketch that still recalls
-    near-dups; full signatures/shingles are never re-read.
-    """
-    spark = batch_df.sparkSession
-    bands = minhash_band_keys(batch_df, text_col=text_col)
-    bands.cache()
-    try:
-        store_buckets = spark.read.parquet(store_path).select("bucket").distinct()
-    except Exception:  # first batch: store not created yet
-        store_buckets = spark.createDataFrame([], "bucket string")
-    hit_store = (
-        bands.join(store_buckets, "bucket", "left_semi").select("doc_id").distinct()
-    )
-    bucket_min = bands.groupBy("bucket").agg(F.min("doc_id").alias("bmin"))
-    hit_batch = (
-        bands.join(bucket_min, "bucket")
-        .filter(F.col("bmin") < F.col("doc_id"))
-        .select("doc_id")
-        .distinct()
-    )
-    dropped = hit_store.unionByName(hit_batch).distinct()
-    kept = batch_df.join(dropped, "doc_id", "left_anti")
-    kept_bands = bands.join(dropped, "doc_id", "left_anti")
-    kept_bands.write.mode("append").parquet(store_path)
-    bands.unpersist()
-    return kept
-
-
 def verify_pairs_jaccard(
     pairs: DataFrame, shingles: DataFrame, threshold: float = 0.5
 ) -> DataFrame:

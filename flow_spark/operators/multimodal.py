@@ -39,11 +39,6 @@ def decode_image(payload: bytes):  # pragma: no cover - stub
     )
 
 
-def decode_audio(payload: bytes):  # pragma: no cover - stub
-    """Decode audio to PCM frames. STUB: soundfile/ffmpeg not in image."""
-    raise NotImplementedError("audio decode requires soundfile/ffmpeg")
-
-
 def fake_decode_frames(payload: bytes, frame_size: int = 1000) -> int:
     """Deterministic stand-in for a video frame-sampler: number of
     frame_size-byte 'frames' the payload would yield (ceil)."""

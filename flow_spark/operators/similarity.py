@@ -22,21 +22,16 @@ Embedding-cosine near-dup (dedup flavor) reuses the same primitives.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window as W
 
-from flow_spark.functions.hashing import portable_hash64
 from flow_spark.functions.vectors import (
-    cosine_similarity,
     dot,
     l2_norm,
     sql_dot,
     sql_double_array,
-    sql_sq_l2,
 )
 
 
@@ -79,16 +74,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("cos", 4).alias("cos"))
     )
-
-
-def hyperplane_weight(plane: int, dim_idx: Column) -> Column:
-    """Deterministic pseudo-random weight in [-1, 1) for (plane, dim) —
-    the column form (kept as the SQL-mirror documentation; the signature
-    path below uses the precomputed Python form)."""
-    h = portable_hash64(
-        F.concat(F.lit(f"hp{plane}_"), dim_idx.cast("string")), salt="lsh"
-    )
-    return (F.pmod(h, F.lit(2001)) - 1000).cast("double") / 1000.0
 
 
 def _hyperplane_weights(plane: int, dim: int) -> list[float]:
@@ -313,17 +298,6 @@ def cosine_neardup_pairs(
     )
 
 
-@F.pandas_udf(DoubleType())
-def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-    """Arrow-batched numpy cosine — the wide-vector alternative to the
-    codegen fold; same semantics, batched BLAS throughput."""
-    av = np.stack(a.to_numpy())
-    bv = np.stack(b.to_numpy())
-    num = (av * bv).sum(axis=1)
-    den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-    return pd.Series(num / den)
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) + asymmetric distance computation (ADC)
 # ---------------------------------------------------------------------------
@@ -372,11 +346,6 @@ def pq_train(
     return books
 
 
-def _subspace_slice_sql(vec_col: str, m: int, dsub: int) -> str:
-    # slice() is 1-indexed
-    return f"slice(CAST({vec_col} AS ARRAY<DOUBLE>), {m * dsub + 1}, {dsub})"
-
-
 def _sq_l2(a: Column, b: Column) -> Column:
     """Squared L2 distance between two array columns (JVM fold)."""
     return F.aggregate(
@@ -407,8 +376,8 @@ def _encode_expr(vec_col: str, cb_col: str, m_count: int, dsub: int) -> str:
     argmin over the k codebook entries.  argmin runs as array_min over
     (distance, code) structs — struct ordering is field-by-field, so ties
     resolve to the lower code id, deterministically.  The distance is the
-    same zip_with/aggregate left-fold as sql_sq_l2 (bit-identical to the
-    oracle's list_sum of squared diffs)."""
+    zip_with/aggregate left-fold of squared differences (bit-identical to
+    the oracle's list_sum of squared diffs)."""
     return (
         f"transform(sequence(0, {m_count - 1}), m -> "
         f"array_min(transform({cb_col}[m], (cent, c) -> "

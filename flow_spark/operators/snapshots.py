@@ -54,6 +54,19 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, MANIFEST_DIR, f"v{version}.json")
 
 
+def _read_manifest(table_dir: str, version: int) -> dict:
+    """The committed manifest of ``version``."""
+    with open(_manifest_path(table_dir, version)) as fh:
+        return json.load(fh)
+
+
+def _schema_of(manifest: dict):
+    """The schema a manifest records, as a ``StructType``."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(manifest["schema"]))
+
+
 def _commit_manifest(manifest: dict, final: str) -> None:
     """Atomically publish a manifest, FAILING if the version exists.
 
@@ -217,8 +230,7 @@ def snapshot_write(
     prev_version = current_version(table_dir)
     prev_manifest: "dict | None" = None
     if prev_version >= 1:
-        with open(_manifest_path(table_dir, prev_version)) as fh:
-            prev_manifest = json.load(fh)
+        prev_manifest = _read_manifest(table_dir, prev_version)
     # column mapping (snapshot_rename_column): a mapped table's FILES
     # carry physical names forever, so new files must be written with
     # physical names too — one global logical->physical map stays valid
@@ -235,11 +247,7 @@ def snapshot_write(
     # not — leaves its PHYSICAL name behind in reused files
     prev_schema_cols: "list[str]" = []
     if prev_manifest is not None:
-        from pyspark.sql.types import StructType as _ST
-
-        prev_schema_cols = _ST.fromJson(
-            json.loads(prev_manifest["schema"])
-        ).fieldNames()
+        prev_schema_cols = _schema_of(prev_manifest).fieldNames()
     pruned_phys = {
         mapping.get(c, c) for c in prev_schema_cols if c not in df.columns
     }
@@ -392,61 +400,24 @@ def snapshot_write(
     return version
 
 
-def snapshot_version_at(table_dir: str, timestamp: float) -> int:
-    """Version visible at ``timestamp`` (unix seconds) — Delta's
-    ``TIMESTAMP AS OF``: the highest version whose commit time is <= the
-    timestamp.  Raises if the table had no committed version yet at that
-    time (or the early manifests were vacuumed away — time travel only
-    works within retention).
-    """
-    mdir = os.path.join(table_dir, MANIFEST_DIR)
-    best = 0
-    if os.path.isdir(mdir):
-        for f in os.listdir(mdir):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
-            v = int(f[1:-5])
-            with open(os.path.join(mdir, f)) as fh:
-                if json.load(fh).get("committed_at", 0) <= timestamp:
-                    best = max(best, v)
-    if best < 1:
-        raise FileNotFoundError(
-            f"no version committed at or before {timestamp} in {table_dir}"
-        )
-    return best
-
-
 def snapshot_files(table_dir: str, version: int) -> list[str]:
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh)["files"]
+    return _read_manifest(table_dir, version)["files"]
 
 
 def snapshot_stats(table_dir: str, version: int) -> "dict[str, list]":
     """Per-file [min, max] of the stats column, as recorded at write."""
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh).get("stats", {})
+    return _read_manifest(table_dir, version).get("stats", {})
 
 
 def snapshot_stats_col(table_dir: str, version: int) -> "str | None":
     """Which column the manifest's per-file stats describe (or None)."""
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh).get("stats_col")
+    return _read_manifest(table_dir, version).get("stats_col")
 
 
 def snapshot_col_stats(table_dir: str, version: int) -> "dict[str, dict]":
     """Multi-column per-file [min, max] stats ({col: {file: [mn, mx]}}),
     written by :func:`snapshot_optimize_zorder`; {} when absent."""
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh).get("col_stats", {})
-
-
-def _manifest_schema(table_dir: str, version: int):
-    """The version's recorded schema (the read authority, see
-    snapshot_read) as a StructType."""
-    from pyspark.sql.types import StructType
-
-    with open(_manifest_path(table_dir, version)) as fh:
-        return StructType.fromJson(json.loads(json.load(fh)["schema"]))
+    return _read_manifest(table_dir, version).get("col_stats", {})
 
 
 def _read_manifest_subset(
@@ -523,9 +494,7 @@ def _read_manifest_subset(
     decl_fields = (
         {
             f.name: f.dataType
-            for f in StructType.fromJson(
-                json.loads(manifest["schema"])
-            ).fields
+            for f in _schema_of(manifest).fields
         }
         if defaults
         else {}
@@ -628,8 +597,7 @@ def _current_manifest(table_dir: str) -> "dict | None":
     v = current_version(table_dir)
     if v < 1:
         return None
-    with open(_manifest_path(table_dir, v)) as fh:
-        return json.load(fh)
+    return _read_manifest(table_dir, v)
 
 
 def _inherited_layout(
@@ -682,15 +650,12 @@ def snapshot_read(
     without the all-footers cost of mergeSchema — the manifest is the
     schema authority, exactly as in lakehouse formats.
     """
-    from pyspark.sql.types import StructType
-
     version = snapshot_resolve(table_dir, version)
     v = version if version is not None else current_version(table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed versions in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    manifest = _read_manifest(table_dir, v)
+    schema = _schema_of(manifest)
     files = manifest["files"]
     if key_range is not None:
         if key_col is None:
@@ -833,12 +798,9 @@ def snapshot_upsert(
             batch.dropDuplicates([key_col]), table_dir, stats_col=key_col
         )
 
-    from pyspark.sql.types import StructType
-
-    with open(_manifest_path(table_dir, cur_v)) as fh:
-        cur_manifest = json.load(fh)
+    cur_manifest = _read_manifest(table_dir, cur_v)
     cur_files = cur_manifest["files"]
-    cur_schema = StructType.fromJson(json.loads(cur_manifest["schema"]))
+    cur_schema = _schema_of(cur_manifest)
     del_list = sorted(set(delete_keys or ()))
     if any(k is None for k in del_list):
         raise ValueError("MERGE delete key must be non-null")
@@ -956,12 +918,9 @@ def snapshot_changes(
     versions touches megabytes, not the table.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    with open(_manifest_path(table_dir, from_version)) as fh:
-        from_manifest = json.load(fh)
-    with open(_manifest_path(table_dir, to_version)) as fh:
-        to_manifest = json.load(fh)
+    from_manifest = _read_manifest(table_dir, from_version)
+    to_manifest = _read_manifest(table_dir, to_version)
     old_files = set(from_manifest["files"])
     new_files = set(to_manifest["files"])
     old_only = sorted(old_files - new_files)
@@ -989,7 +948,7 @@ def snapshot_changes(
     # inference when a requested column predates from_version.  Each
     # side's basePath grouping comes from ITS OWN manifest, so partition
     # columns of partitioned files diff as real values, not NULLs.
-    to_schema = StructType.fromJson(json.loads(to_manifest["schema"]))
+    to_schema = _schema_of(to_manifest)
     empty = spark.createDataFrame(
         [], spark.createDataFrame([], to_schema).select(*cols).schema
     )
@@ -1088,11 +1047,8 @@ def snapshot_compact(
     # the narrower schema and lose the evolved column's data.  Partitioned
     # files read through the manifest's basePath grouping, so their path
     # columns land in the compacted files' PAYLOAD with real values.
-    with open(_manifest_path(table_dir, v)) as fh:
-        cur_manifest = json.load(fh)
-    from pyspark.sql.types import StructType
-
-    cur_schema = StructType.fromJson(json.loads(cur_manifest["schema"]))
+    cur_manifest = _read_manifest(table_dir, v)
+    cur_schema = _schema_of(cur_manifest)
     for gi, gfiles in sorted(groups.items()):
         _physicalize(
             _read_manifest_subset(spark, cur_manifest, sorted(gfiles), cur_schema),
@@ -1293,8 +1249,7 @@ def snapshot_vacuum(
 
         live_dv: set[str] = set()
         for v in keep:
-            with open(_manifest_path(table_dir, v)) as fh:
-                live_dv.update(json.load(fh).get("dv_dirs") or [])
+            live_dv.update(_read_manifest(table_dir, v).get("dv_dirs") or [])
         for sub in os.listdir(dvroot):
             subdir = os.path.join(dvroot, sub)
             if subdir in live_dv or not os.path.isdir(subdir):
@@ -1378,8 +1333,7 @@ def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
     prev = current_version(table_dir)
     prev_manifest: "dict | None" = None
     if prev >= 1:
-        with open(_manifest_path(table_dir, prev)) as fh:
-            prev_manifest = json.load(fh)
+        prev_manifest = _read_manifest(table_dir, prev)
     prev_files = prev_manifest["files"] if prev_manifest else []
     # inherited files keep their partition metadata (staged files are
     # written plain by snapshot_stage and need none)
@@ -1405,13 +1359,9 @@ def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
     # and a publish that narrows the schema while keeping prev files
     # retires the narrowed-out physical names.
     if prev_manifest is not None:
-        from pyspark.sql.types import StructType as _ST
-
-        new_cols = _ST.fromJson(json.loads(marker["schema"])).fieldNames()
+        new_cols = _schema_of(marker).fieldNames()
         mapping = dict(prev_manifest.get("column_mapping") or {})
-        prev_cols = _ST.fromJson(
-            json.loads(prev_manifest["schema"])
-        ).fieldNames()
+        prev_cols = _schema_of(prev_manifest).fieldNames()
         retired: set = set()
         if prev_files:  # no inherited files -> no stale bytes to guard
             retired = set(prev_manifest.get("retired_physical") or []) | {
@@ -1454,8 +1404,7 @@ def snapshot_rollback(table_dir: str, to_version: int) -> int:
     ``FileNotFoundError`` if ``to_version`` was never committed.
     """
     cur = current_version(table_dir)
-    with open(_manifest_path(table_dir, to_version)) as fh:
-        target = json.load(fh)
+    target = _read_manifest(table_dir, to_version)
     version = cur + 1
     manifest = {
         **target,
@@ -1552,18 +1501,16 @@ def snapshot_optimize_zorder(
     physical names) — full-rewrite first on mapped tables.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from flow_spark.functions.layout import morton_interleave16
 
     v = current_version(table_dir)
-    with open(_manifest_path(table_dir, v)) as fh:
-        cur_manifest = json.load(fh)
+    cur_manifest = _read_manifest(table_dir, v)
     if not cur_manifest["files"]:
         raise ValueError(
             f"snapshot_optimize_zorder: version {v} of {table_dir} is empty"
         )
-    schema = StructType.fromJson(json.loads(cur_manifest["schema"]))
+    schema = _schema_of(cur_manifest)
     reuse: "list[str]" = []
     if incremental:
         if cur_manifest.get("column_mapping"):
@@ -2057,16 +2004,11 @@ def snapshot_write_partitioned(
     dv_dirs = None
     retired: list = []
     if prev_version >= 1 and reuse_files:
-        with open(_manifest_path(table_dir, prev_version)) as fh:
-            prev_manifest = json.load(fh)
+        prev_manifest = _read_manifest(table_dir, prev_version)
         prev_parts = prev_manifest.get("partitions", {})
         prev_bases = prev_manifest.get("bases", {})
         dv_dirs = prev_manifest.get("dv_dirs")
-        from pyspark.sql.types import StructType as _ST
-
-        prev_cols = _ST.fromJson(
-            json.loads(prev_manifest["schema"])
-        ).fieldNames()
+        prev_cols = _schema_of(prev_manifest).fieldNames()
         retired = sorted(
             set(prev_manifest.get("retired_physical") or [])
             | {c for c in prev_cols if c not in df.columns}
@@ -2124,8 +2066,7 @@ def snapshot_read_pruned(
     partition columns from the paths; groups union by name (specs agree
     on the logical schema, they differ only in what is path vs payload).
     """
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, version)
     parts = manifest.get("partitions", {})
     selected = [
         f
@@ -2139,11 +2080,7 @@ def snapshot_read_pruned(
         # recorded schema — a footer read of files[0] would MISS the
         # partition columns (they live in the path, not the payload) and
         # crash on an empty file list
-        from pyspark.sql.types import StructType
-
-        df = spark.createDataFrame(
-            [], StructType.fromJson(json.loads(manifest["schema"]))
-        )
+        df = spark.createDataFrame([], _schema_of(manifest))
     return df, len(selected), len(manifest["files"])
 
 
@@ -2170,7 +2107,6 @@ def snapshot_diff(
     struct).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     # the diff speaks the TO version's vocabulary: the from side reads
     # under the TO logical schema resolved through the TO mapping
@@ -2179,11 +2115,9 @@ def snapshot_diff(
     # compares real values instead of failing on the old name.  Columns
     # dropped by v_to leave the comparison; columns added NULL-fill on
     # the old side and surface as updates.
-    with open(_manifest_path(table_dir, v_from)) as fh:
-        from_manifest = json.load(fh)
-    with open(_manifest_path(table_dir, v_to)) as fh:
-        to_manifest = json.load(fh)
-    to_schema = StructType.fromJson(json.loads(to_manifest["schema"]))
+    from_manifest = _read_manifest(table_dir, v_from)
+    to_manifest = _read_manifest(table_dir, v_to)
+    to_schema = _schema_of(to_manifest)
     a = _read_manifest_subset(
         spark,
         _from_read_under_to_mapping(from_manifest, to_manifest),
@@ -2235,8 +2169,7 @@ def snapshot_clone(source_dir: str, target_dir: str) -> int:
     src_v = current_version(source_dir)
     if src_v < 1:
         raise FileNotFoundError(f"no committed versions in {source_dir}")
-    with open(_manifest_path(source_dir, src_v)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(source_dir, src_v)
     os.makedirs(os.path.join(target_dir, MANIFEST_DIR), exist_ok=True)
     manifest = dict(manifest)
     manifest["version"] = 1
@@ -2281,9 +2214,7 @@ def _rename_meta_commit(table_dir: str, mutate) -> int:
     v = current_version(table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed versions in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
-    manifest = dict(manifest)
+    manifest = dict(_read_manifest(table_dir, v))
     mutate(manifest)
     manifest["version"] = v + 1
     manifest["committed_at"] = time.time()
@@ -2325,7 +2256,7 @@ def snapshot_rename_column(table_dir: str, old: str, new: str) -> int:
     from pyspark.sql.types import StructType
 
     def mutate(manifest: dict) -> None:
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        schema = _schema_of(manifest)
         names = schema.fieldNames()
         if old not in names:
             raise ValueError(f"rename: no column {old!r} in {names}")
@@ -2400,7 +2331,7 @@ def snapshot_drop_column(table_dir: str, col: str) -> int:
     from pyspark.sql.types import StructType
 
     def mutate(manifest: dict) -> None:
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        schema = _schema_of(manifest)
         names = schema.fieldNames()
         if col not in names:
             raise ValueError(f"drop: no column {col!r} in {names}")
@@ -2491,7 +2422,7 @@ def snapshot_add_column(
     dt = ddl[dtype.lower()] if isinstance(dtype, str) else dtype
 
     def mutate(manifest: dict) -> None:
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        schema = _schema_of(manifest)
         names = schema.fieldNames()
         if name in names:
             raise ValueError(f"add: column {name!r} already exists")
@@ -2619,8 +2550,7 @@ def snapshot_build_bloom(
     from flow_spark.operators.dedup import MH_P, mh_coeffs
 
     v = version if version is not None else current_version(table_dir)
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, v)
     all_files = manifest["files"]
     # the driver-side probe hashes Python str(value) and MUST render
     # identically to the executor-side CAST(col AS STRING): true for
@@ -2628,16 +2558,9 @@ def snapshot_build_bloom(
     # '1e+16'), booleans ('true' vs 'True'), timestamps... — a silent
     # divergence would PRUNE FILES THAT CONTAIN THE KEY, so refuse to
     # index anything else
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-        StructType as _St,
-    )
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
-    schema = _St.fromJson(json.loads(manifest["schema"]))
+    schema = _schema_of(manifest)
     if col in schema.fieldNames():
         dt = schema[col].dataType
         if not isinstance(
@@ -2657,8 +2580,7 @@ def snapshot_build_bloom(
     prev_bloom: "dict | None" = None
     for pv in range(v - 1, 0, -1):
         try:
-            with open(_manifest_path(table_dir, pv)) as fh:
-                pb = json.load(fh).get("bloom")
+            pb = _read_manifest(table_dir, pv).get("bloom")
         except FileNotFoundError:  # vacuumed away
             break
         if pb and pb.get("col") == col and pb.get("k") == k:
@@ -2840,8 +2762,7 @@ def snapshot_bloom_candidates(
     import base64
 
     v = version if version is not None else current_version(table_dir)
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, v)
     bloom = manifest.get("bloom")
     if not bloom:
         raise ValueError(f"version {v} of {table_dir} has no bloom index")
@@ -2868,14 +2789,12 @@ def snapshot_read_point(
     with the row filter on the indexed column applied (false positives
     are eliminated here — the index can only over-scan, never miss)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     v = version if version is not None else current_version(table_dir)
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, v)
     col = manifest["bloom"]["col"]  # KeyError if unindexed: same contract
     files, _total = snapshot_bloom_candidates(table_dir, value, v)
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    schema = _schema_of(manifest)
     if not files:
         return spark.createDataFrame([], schema)
     df = _read_manifest_subset(spark, manifest, files, schema)
@@ -2918,11 +2837,8 @@ def snapshot_delete(
     cur_v = current_version(table_dir)
     if cur_v < 1:
         raise FileNotFoundError(f"no committed versions in {table_dir}")
-    with open(_manifest_path(table_dir, cur_v)) as fh:
-        manifest = json.load(fh)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    manifest = _read_manifest(table_dir, cur_v)
+    schema = _schema_of(manifest)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     dv_dir = os.path.join(table_dir, "_dv", uuid.uuid4().hex[:12])
     (
@@ -2944,100 +2860,6 @@ def snapshot_delete(
     # it carries forward with the files it was built from.
     _commit_manifest(new_manifest, _manifest_path(table_dir, new_version))
     return new_version
-
-
-def snapshot_purge_deletes(spark: SparkSession, table_dir: str) -> int:
-    """Materialize accumulated deletion vectors (Delta's ``REORG TABLE
-    ... APPLY (PURGE)``): rewrite ONLY the files the vectors reference,
-    DV-filtered, and commit a vector-free version; files no vector
-    touches are reused by reference.  Run when read-side anti-join cost
-    or tombstone retention (the deleted bytes still live in the old
-    files until vacuum) makes merge-on-read worth converting back to
-    copy-on-write.  Returns the current version unchanged when there is
-    nothing to purge.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    v = current_version(table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as fh:
-        manifest = json.load(fh)
-    dv_dirs = manifest.get("dv_dirs") or []
-    if not dv_dirs:
-        return v
-    touched = _dv_touched_files(spark, dv_dirs)
-    affected = sorted(set(manifest["files"]) & touched)
-    untouched = [f for f in manifest["files"] if f not in touched]
-    if not affected:  # vectors only reference already-dropped files
-        new_manifest = dict(manifest)
-        new_manifest["version"] = v + 1
-        new_manifest["committed_at"] = time.time()
-        new_manifest.pop("dv_dirs", None)
-        _commit_manifest(new_manifest, _manifest_path(table_dir, v + 1))
-        return v + 1
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    survivors = _read_manifest_subset(spark, manifest, affected, schema)
-    # snapshot_write inherits dv_dirs when reuse_files is set — correct
-    # for partial rewrites, but a purge rewrites EVERY vectored file, so
-    # the committed manifest must drop them; strip after the commit via
-    # a manifest rewrite would break immutability, so commit manually.
-    write_dir = os.path.join(table_dir, DATA_DIR, uuid.uuid4().hex[:12])
-    _physicalize(survivors, manifest).write.mode("error").parquet(write_dir)
-    new_files = sorted(
-        os.path.join(write_dir, f)
-        for f in os.listdir(write_dir)
-        if f.endswith(".parquet")
-    )
-    partitions, bases = _inherited_layout(manifest, untouched)
-    # untouched files are byte-identical and reused by reference, so
-    # their data-skipping stats stay valid and carry forward; the
-    # rewritten files get fresh stats for the same column (dropping
-    # them would turn every post-purge MERGE into a table scan)
-    stats_col = manifest.get("stats_col")
-    stats = {
-        f: st
-        for f, st in manifest.get("stats", {}).items()
-        if f in set(untouched)
-    }
-    if stats_col is not None and new_files:
-        phys_col = (manifest.get("column_mapping") or {}).get(
-            stats_col, stats_col
-        )
-        for r in (
-            spark.read.parquet(*new_files)
-            .groupBy(F.col("_metadata.file_path").alias("__fp"))
-            .agg(F.min(phys_col).alias("mn"), F.max(phys_col).alias("mx"))
-            .collect()
-        ):
-            if all(isinstance(x, (int, float, str)) for x in (r[1], r[2])):
-                stats[r[0].removeprefix("file:")] = [r[1], r[2]]
-    col_stats = {
-        c: {f: st for f, st in per.items() if f in set(untouched)}
-        for c, per in manifest.get("col_stats", {}).items()
-    }
-    new_manifest = {
-        "version": v + 1,
-        "committed_at": time.time(),
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "stats": stats,
-        "stats_col": stats_col,
-        "partitions": partitions,
-        "bases": bases,
-    }
-    if col_stats:
-        new_manifest["col_stats"] = col_stats
-    # a purge is a PARTIAL rewrite (untouched files reused by
-    # reference): the mapping must survive; the rewritten survivors
-    # were physicalized above, so one table-wide map stays valid
-    if manifest.get("column_mapping"):
-        new_manifest["column_mapping"] = manifest["column_mapping"]
-    if untouched and manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    _commit_manifest(new_manifest, _manifest_path(table_dir, v + 1))
-    return v + 1
 
 
 def snapshot_purge_key(
@@ -3128,11 +2950,8 @@ def snapshot_purge_key(
 
     manifests: "dict[int, dict]" = {}
     for v in range(1, head + 1):
-        p = _manifest_path(table_dir, v)
-        if not os.path.exists(p):  # vacuumed-away version
-            continue
-        with open(p) as fh:
-            manifests[v] = json.load(fh)
+        if os.path.exists(_manifest_path(table_dir, v)):  # else vacuumed away
+            manifests[v] = _read_manifest(table_dir, v)
 
     # resolve the key's declared type and its PHYSICAL name(s): physical
     # names are the stable column identity across renames (rename/drop
@@ -3146,7 +2965,7 @@ def snapshot_purge_key(
     all_files: "set[str]" = set()
     for v in sorted(manifests, reverse=True):
         m = manifests[v]
-        sch = StructType.fromJson(json.loads(m["schema"]))
+        sch = _schema_of(m)
         for fld in sch.fields:
             if fld.name == key_col:
                 if key_type is None:
@@ -3225,7 +3044,7 @@ def snapshot_purge_key(
     for v in sorted(manifests, reverse=True):
         m = manifests[v]
         mapping = m.get("column_mapping") or {}
-        for fld in StructType.fromJson(json.loads(m["schema"])).fields:
+        for fld in _schema_of(m).fields:
             declared_phys_types.setdefault(
                 mapping.get(fld.name, fld.name), fld.dataType
             )
@@ -3380,7 +3199,7 @@ def snapshot_purge_key(
         if stats_col is None or not (set(m["files"]) & affected_set):
             continue
         phys_col = (m.get("column_mapping") or {}).get(stats_col, stats_col)
-        sch = StructType.fromJson(json.loads(m["schema"]))
+        sch = _schema_of(m)
         ftype = next(
             (fl.dataType for fl in sch.fields if fl.name == stats_col), None
         )
@@ -3485,29 +3304,20 @@ def snapshot_purge_key(
     }
 
 
-# ---- optimistic transactions: append rebase + conflict classification ------
+# ---- optimistic transactions: append rebase ----------------------------------
 #
 # _commit_manifest is a compare-and-swap (os.link fails if the version
 # exists), which gives LOST-UPDATE safety but makes every loser replay
 # its whole write.  Delta/Iceberg layer a transaction protocol on top:
 # a commit that lost the race re-reads the log, checks that the
 # intervening commits do not CONFLICT with what it did, and re-commits
-# at the next version without redoing the data work.  The two pieces
-# below are that protocol:
-#
-# - snapshot_append: blind appends commute with each other and with any
-#   commit that keeps the table's metadata stable, so a losing appender
-#   can always rebase — the data files written once stay valid, only
-#   the manifest is rebuilt against the new head (reference:
-#   delta-io/delta PROTOCOL.md "Transaction Identifiers" / Iceberg's
-#   fast-append commit.retry).
-# - snapshot_rebase_info: classifies the commits between a reader's
-#   snapshot and the current head so a REWRITING op (upsert / compact /
-#   delete) that lost a race can decide: pure intervening appends never
-#   invalidate a rewrite plan (the rewritten files still exist and are
-#   byte-identical); an intervening commit that REMOVED one of the
-#   files the op rewrote means the op read stale rows -> conflict,
-#   replay from the new head (Delta's write-serializable check).
+# at the next version without redoing the data work.  snapshot_append is
+# that protocol for blind appends: they commute with each other and with
+# any commit that keeps the table's metadata stable, so a losing appender
+# can always rebase — the data files written once stay valid, only the
+# manifest is rebuilt against the new head (reference: delta-io/delta
+# PROTOCOL.md "Transaction Identifiers" / Iceberg's fast-append
+# commit.retry).
 
 
 class SnapshotConflict(Exception):
@@ -3552,7 +3362,7 @@ def snapshot_append(
     atomic manifest link as the data, there is no marker-vs-data crash
     window — a streaming foreachBatch that passes its batchId here is
     exactly-once end to end (:func:`flow_spark.streaming.sinks
-    .append_sink`).  The check re-runs on every commit attempt, so a
+    .append_sink_batch`).  The check re-runs on every commit attempt, so a
     race between two replays of the same batch admits exactly one.
     """
     from pyspark.sql import functions as F
@@ -3565,8 +3375,7 @@ def snapshot_append(
         v = current_version(table_dir)
         if v < 1:
             return 0, None
-        with open(_manifest_path(table_dir, v)) as fh:
-            return v, json.load(fh)
+        return v, _read_manifest(table_dir, v)
 
     def _is_replay(head: "dict | None") -> bool:
         if txn_app is None or head is None:
@@ -3754,61 +3563,6 @@ def snapshot_append(
     )
 
 
-def snapshot_rebase_info(
-    table_dir: str,
-    read_version: int,
-    touched_files: "list[str] | None" = None,
-) -> "dict":
-    """Classify the commits between ``read_version`` and the head.
-
-    For a rewriting transaction (upsert / compact / delete) that planned
-    against ``read_version`` and found the head has moved:
-
-    - ``pure_appends`` True means every intervening commit only ADDED
-      files — the files this transaction read (and rewrote) are intact,
-      so its output is still correct; it may rebase by unioning the
-      intervening commits' ``added_files`` into its new manifest.
-    - ``removed_overlap`` non-empty means an intervening commit removed
-      a file in ``touched_files`` — the transaction read stale rows and
-      MUST replay from the head (this is the check Delta's
-      write-serializable isolation performs on losing a commit race).
-
-    Returns ``{"head_version", "intervening", "pure_appends",
-    "added_files", "removed_files", "removed_overlap"}``.
-    """
-    head_version = current_version(table_dir)
-    added: "list[str]" = []
-    removed: "list[str]" = []
-    intervening: "list[int]" = []
-    try:
-        prev_files = set(snapshot_files(table_dir, read_version))
-        for v in range(read_version + 1, head_version + 1):
-            cur_files = set(snapshot_files(table_dir, v))
-            intervening.append(v)
-            added.extend(sorted(cur_files - prev_files))
-            removed.extend(sorted(prev_files - cur_files))
-            prev_files = cur_files
-    except FileNotFoundError as e:
-        # the reader's snapshot (or an intervening manifest) was
-        # vacuumed away mid-race: the classification is impossible, so
-        # answer with the conflict the caller is asking about rather
-        # than crashing the conflict classifier
-        raise SnapshotConflict(
-            f"manifest vacuumed during rebase classification of "
-            f"{table_dir} (read_version={read_version}): {e}; "
-            "replay the operation from the current head"
-        ) from None
-    overlap = sorted(set(removed) & set(touched_files or []))
-    return {
-        "head_version": head_version,
-        "intervening": intervening,
-        "pure_appends": not removed,
-        "added_files": added,
-        "removed_files": removed,
-        "removed_overlap": overlap,
-    }
-
-
 def snapshot_stats_agg(
     spark: SparkSession,
     table_dir: str,
@@ -3838,8 +3592,7 @@ def snapshot_stats_agg(
 
     if version is None:
         version = current_version(table_dir)
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, version)
     files = manifest.get("files") or []
     mapping = manifest.get("column_mapping") or {}
     phys_col = mapping.get(col, col)
@@ -3852,9 +3605,7 @@ def snapshot_stats_agg(
             F.max(col).cast("long").alias("mx"),
         )
 
-    from pyspark.sql.types import StructType as _ST
-
-    schema = _ST.fromJson(json.loads(manifest["schema"]))
+    schema = _schema_of(manifest)
     logical_type = next(
         (f.dataType.typeName() for f in schema.fields if f.name == col), None
     )
@@ -3894,36 +3645,6 @@ def snapshot_stats_agg(
     )
 
 
-def snapshot_upsert_retry(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_dir: str,
-    key_col: str,
-    max_retries: int = 5,
-    **kwargs,
-) -> int:
-    """MERGE with serializable-by-re-execution retry.
-
-    A rewriting transaction cannot blindly rebase like an append — its
-    output depends on the rows it read (``snapshot_rebase_info``
-    explains the classification).  The always-correct retry is to
-    REPLAY the merge from the new head: each attempt re-prunes, re-reads
-    and re-writes against the then-current version, so whichever serial
-    order the CAS commit admits, the result equals that serial history
-    (Delta retries its transactions the same way).  Failed attempts'
-    files are unreferenced orphans for vacuum.
-    """
-    for _ in range(max(1, max_retries)):
-        try:
-            return snapshot_upsert(spark, batch, table_dir, key_col, **kwargs)
-        except ConcurrentSnapshotWrite:
-            continue
-    raise ConcurrentSnapshotWrite(
-        f"merge into {table_dir} lost {max_retries} commit races — raise "
-        "max_retries or reduce writer contention"
-    )
-
-
 def snapshot_set_constraints(
     spark: SparkSession,
     table_dir: str,
@@ -3949,8 +3670,7 @@ def snapshot_set_constraints(
     version = current_version(table_dir)
     if version < 1:
         raise ValueError("cannot declare constraints on an empty table")
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, version)
     merged = list(
         dict.fromkeys([*(manifest.get("constraints") or []), *constraints])
     )
@@ -3989,8 +3709,7 @@ def snapshot_drop_constraints(
     version = current_version(table_dir)
     if version < 1:
         raise ValueError("empty table")
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, version)
     have = manifest.get("constraints") or []
     keep = (
         [] if constraints is None else [c for c in have if c not in constraints]
@@ -4113,13 +3832,11 @@ def snapshot_read_hidden(
     Returns (df, n_files_selected, n_files_total).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     version = snapshot_resolve(table_dir, version)
     if version is None:
         version = current_version(table_dir)
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_dir, version)
     transforms = manifest.get("partition_transforms") or {}
     parts = manifest.get("partitions", {})
     # source predicate -> derived partition predicates
@@ -4138,7 +3855,7 @@ def snapshot_read_hidden(
             parts.get(f, {}).get(k, v) == v for k, v in derived_equals.items()
         )
     ]
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    schema = _schema_of(manifest)
     if selected:
         df = _read_manifest_subset(spark, manifest, selected, schema)
     else:
@@ -4146,174 +3863,3 @@ def snapshot_read_hidden(
     for src, value in equals.items():
         df = df.filter(F.col(src) == F.lit(value))
     return df, len(selected), len(manifest["files"])
-
-
-def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE HISTORY: one row per committed version, from manifests
-    alone (driver-side walk, no data read) — version, commit time,
-    file counts, added/removed vs parent, schema width, and which
-    features were in force (mapping, DVs, constraints, txn markers).
-    The operational view a 100 TB table's operator reads first.
-    """
-    rows = []
-    prev_files: "set[str]" = set()
-    for v in range(1, current_version(table_dir) + 1):
-        path = _manifest_path(table_dir, v)
-        if not os.path.exists(path):  # vacuumed away
-            prev_files = set()
-            continue
-        with open(path) as fh:
-            m = json.load(fh)
-        files = set(m.get("files") or [])
-        schema_fields = len(json.loads(m["schema"]).get("fields", []))
-        rows.append(
-            (
-                v,
-                float(m.get("committed_at") or 0.0),
-                len(files),
-                len(files - prev_files),
-                len(prev_files - files),
-                schema_fields,
-                bool(m.get("column_mapping")),
-                bool(m.get("dv_dirs")),
-                len(m.get("constraints") or []),
-                json.dumps(m.get("txns") or {}, sort_keys=True),
-                len(m.get("purged") or []),
-            )
-        )
-        prev_files = files
-    return spark.createDataFrame(
-        rows,
-        "version int, committed_at double, n_files int, n_added int, "
-        "n_removed int, n_columns int, column_mapping boolean, "
-        "has_dv boolean, n_constraints int, txns string, n_purges int",
-    )
-
-
-def snapshot_detail(spark: SparkSession, table_dir: str) -> DataFrame:
-    """DESCRIBE DETAIL: one row for the CURRENT version — location,
-    version, file count, total bytes/rows (parquet footers, no data
-    read), schema width, and which features are in force.  The
-    companion to :func:`snapshot_history` (one row per version)."""
-    import pyarrow.parquet as pq
-
-    v = current_version(table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as fh:
-        m = json.load(fh)
-    n_bytes = 0
-    n_rows = 0
-    for f in m["files"]:
-        n_bytes += os.path.getsize(f)
-        n_rows += pq.ParquetFile(f).metadata.num_rows
-    row = (
-        table_dir,
-        v,
-        len(m["files"]),
-        n_bytes,
-        n_rows,
-        len(json.loads(m["schema"]).get("fields", [])),
-        m.get("stats_col"),
-        bool(m.get("column_mapping")),
-        bool(m.get("dv_dirs")),
-        bool(m.get("bloom")),
-        bool(m.get("partition_transforms")),
-        len(m.get("constraints") or []),
-        len(snapshot_tags(table_dir)),
-    )
-    return spark.createDataFrame(
-        [row],
-        "location string, version int, n_files int, size_bytes long, "
-        "n_rows long, n_columns int, stats_col string, "
-        "column_mapping boolean, has_dv boolean, has_bloom boolean, "
-        "hidden_partitioning boolean, n_constraints int, n_tags int",
-    )
-
-
-def snapshot_files_table(
-    spark: SparkSession, table_dir: str, version: "int | str | None" = None
-) -> DataFrame:
-    """Iceberg's ``.files`` metadata table: one row per live data file
-    of a version — path, size, footer row count, the manifest's
-    data-skipping [min, max] for ``stats_col``, recorded partition
-    values, and whether the file sits in the clustered (Z-ordered) set.
-    Driver-side manifest walk + parquet footers, zero data read; at
-    100 TB this is the table an operator samples before deciding
-    whether to compact, re-cluster, or re-stat."""
-    import pyarrow.parquet as pq
-
-    v = snapshot_resolve(table_dir, version)
-    if v is None:
-        v = current_version(table_dir)
-    with open(_manifest_path(table_dir, v)) as fh:
-        m = json.load(fh)
-    stats = m.get("stats") or {}
-    parts = m.get("partitions") or {}
-    clustered = set((m.get("clustered") or {}).get("files") or [])
-    rows = []
-    for f in m["files"]:
-        st = stats.get(f)
-        rows.append(
-            (
-                f,
-                os.path.getsize(f),
-                pq.ParquetFile(f).metadata.num_rows,
-                None if st is None else str(st[0]),
-                None if st is None else str(st[1]),
-                json.dumps(parts.get(f) or {}, sort_keys=True),
-                f in clustered,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "path string, size_bytes long, n_rows long, stats_min string, "
-        "stats_max string, partition_values string, clustered boolean",
-    )
-
-
-def snapshot_maintenance(
-    spark: SparkSession,
-    table_dir: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    keep_versions: int = 2,
-    orphan_grace_seconds: float = 3600,
-) -> "dict":
-    """One-call table upkeep — the nightly job a 100 TB deployment runs:
-
-    1. incremental re-cluster, IF the table has a clustering marker
-       (only files appended since the last pass are rewritten);
-    2. otherwise bin-pack small files (``snapshot_compact``);
-    3. vacuum manifests/files past retention (tags always survive).
-
-    Clustering subsumes compaction for the files it rewrites, so the
-    two never both run in one pass.  Returns the actions taken:
-    ``{"clustered": bool, "compacted": bool, "versions_dropped": n,
-    "files_deleted": m, "version": head}``.
-    """
-    m = _current_manifest(table_dir) or {}
-    out: "dict" = {"clustered": False, "compacted": False}
-    marker = m.get("clustered") or {}
-    live = set(m.get("files") or [])
-    if (
-        marker.get("cols")
-        and (live - set(marker.get("files") or []))
-        # incremental zorder refuses mapped tables (physical-name
-        # resolution of the cluster cols is ambiguous); the nightly job
-        # must keep vacuuming rather than crash — skip the re-cluster
-        # and leave the marker for a manual full OPTIMIZE
-        and not m.get("column_mapping")
-    ):
-        xcol, ycol = marker["cols"]
-        snapshot_optimize_zorder(
-            spark, table_dir, xcol, ycol, incremental=True
-        )
-        out["clustered"] = True
-    elif not marker:
-        before = current_version(table_dir)
-        if snapshot_compact(spark, table_dir, target_bytes) != before:
-            out["compacted"] = True
-    res = snapshot_vacuum(table_dir, keep_versions, orphan_grace_seconds)
-    out.update(res)
-    out["version"] = current_version(table_dir)
-    return out

@@ -32,7 +32,7 @@ from flow_spark.operators.message import events_to_messages
 from flow_spark.operators.routing import MAX_PEERS
 from flow_spark.operators.throttler import throttle_batch
 from flow_spark.plans.config import ConfigError, PipelineConfig, load_pipeline_config
-from flow_spark.plans.topology import sinks_of, to_dot, upstreams_of, validate_dag
+from flow_spark.plans.topology import to_dot, upstreams_of, validate_dag
 
 #: plugin registry — parity with the Go-plugin loader
 #: (pkg/util/plugin/plugin.go:32-62): name -> fn(df, params) -> df
@@ -314,11 +314,18 @@ class Pipeline:
         if scheme in ("tcp", "udp", "unix", "http") and streaming:
             # live network ingest: start the asyncio bridge on the configured
             # port (receiver_tcp.go's accept loop re-homed outside Spark) and
-            # stream its spool.  TCP framing covers all four schemes' record
-            # contract in this engine (SURVEY §2.1 #2-5).
+            # stream its spool.  tcp, udp and unix share the \r\n-framed
+            # record contract; http takes one message per POST, its query
+            # parameters as meta (SURVEY §2.1 #2-5).
             import tempfile
 
-            from flow_spark.sources.bridge import SocketBridge, UnixBridge, spool_stream
+            from flow_spark.sources.bridge import (
+                HttpBridge,
+                SocketBridge,
+                UnixBridge,
+                http_spool_stream,
+                spool_stream,
+            )
 
             spool = tempfile.mkdtemp(prefix=f"flow_spool_{name}_")
             if scheme == "unix":
@@ -330,7 +337,7 @@ class Pipeline:
                 ).start()
             else:
                 host, _, port = rest.rpartition(":")
-                bridge = SocketBridge(
+                bridge = (HttpBridge if scheme == "http" else SocketBridge)(
                     spool,
                     host=host or "127.0.0.1",
                     port=int(port or 0),
@@ -338,7 +345,8 @@ class Pipeline:
                     silent=bool(params.get("silent", False)),
                 ).start()
             self._bridges.append(bridge)
-            return spool_stream(self.spark, bridge.spool_dir)
+            read = http_spool_stream if scheme == "http" else spool_stream
+            return read(self.spark, bridge.spool_dir)
         if scheme == "memory":
             if rest not in inputs:
                 raise ConfigError(f"receiver {name!r}: no input named {rest!r} provided")
@@ -438,7 +446,3 @@ class Pipeline:
             )
 
         return writer
-
-
-def pipeline_sinks(cfg: PipelineConfig) -> list[str]:
-    return sinks_of(cfg)

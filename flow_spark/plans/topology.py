@@ -45,17 +45,6 @@ def validate_dag(cfg: PipelineConfig) -> list[str]:
     return order
 
 
-def sources_of(cfg: PipelineConfig) -> list[str]:
-    """Actors nobody connects TO (the receivers)."""
-    downstream = {p for peers in cfg.connections.values() for p in peers}
-    return [a for a in cfg.actors if a not in downstream]
-
-
-def sinks_of(cfg: PipelineConfig) -> list[str]:
-    """Actors with no outgoing connections."""
-    return [a for a in cfg.actors if not cfg.connections.get(a)]
-
-
 def upstreams_of(cfg: PipelineConfig, name: str) -> list[str]:
     return [a for a, peers in cfg.connections.items() if name in peers]
 

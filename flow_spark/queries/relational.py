@@ -32,8 +32,6 @@ from flow_spark.queries.util import (
     charge_cents,
     dec,
     money_avg,
-    money_sum,
-    one_plus,
     partial_cents_merge,
     revenue_cents,
     revenue_expr,

@@ -18,7 +18,7 @@ _DIM = 64
 _N_PLANES = 8
 
 #: DuckDB expression for the LSH bucket of a DOUBLE[] column `e` —
-#: mirrors operators.similarity.lsh_signature / hyperplane_weight:
+#: mirrors operators.similarity.lsh_signature / _hyperplane_weights:
 #: weight(p, j) = (md5_hash60('lsh' || 'hp{p}_' || j) % 2001 - 1000) / 1000
 _SQL_W = (
     "((CAST(('0x' || substr(md5(concat('lsh', 'hp', {p}, '_', CAST(j - 1 AS VARCHAR))), 1, 15)) AS BIGINT)"

@@ -20,7 +20,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flow_spark.catalog import load_table, stream_table
+from flow_spark.catalog import load_table, session_memo, stream_table
 from flow_spark.queries.registry import register
 from flow_spark.session import _env_int
 
@@ -118,11 +118,11 @@ def _drain_stateful(
     return the sink table.
 
     ``build()`` runs once per (registry name ``drain``, the ``spools`` the
-    stream reads, session, sf_dir) through ``_memo``, so a rebuilt spool
-    gets a new plan.  Building a drain's plan costs hundreds of py4j round
-    trips, 80-150 ms warm (sessionize: 340 calls, 65% of its build in
-    socket ``recv``).  Only the unstarted plan is memoized, never rows or
-    state: each start gets a fresh checkpoint (a reused one would replay
+    stream reads, session, sf_dir) through ``catalog.session_memo``, so a
+    rebuilt spool gets a new plan.  Building a drain's plan costs hundreds
+    of py4j round trips, 80-150 ms warm (sessionize: 340 calls, 65% of its
+    build in socket ``recv``).  Only the unstarted plan is memoized, never
+    rows or state: each start gets a fresh checkpoint (a reused one would replay
     as "no new data" and drain zero rows), so it re-reads all of its
     input, and it takes ``_state_parts``' width at start time.  The query
     runs with ``trigger(availableNow)``; its sink is named by
@@ -134,7 +134,7 @@ def _drain_stateful(
     shuffled them back together in three jobs.  A single partition
     already satisfies clustered and ordered distributions: the read-back
     plans no exchange and runs as one job."""
-    df = _memo(spark, sf_dir, ("plan", drain, *spools), build)
+    df = session_memo(spark, sf_dir, ("plan", drain, *spools), build)
     spark = df.sparkSession
     name = _query_name(prefix)
     with _state_parts(spark):
@@ -198,30 +198,12 @@ def _segment_spool(
     return spool_dir
 
 
-#: (what, applicationId, abs sf_dir) -> what ``build`` made for it
-_MEMO: dict = {}
-
-
-def _memo(spark: SparkSession, sf_dir: str, what, build, valid=None):
-    """``build()``, memoized per (``what``, session, abs ``sf_dir``): the
-    key rule of ``catalog._memo``.  ``what`` names the value: ``("plan",
-    drain, *spools)`` for a stateful drain's unstarted stream
-    (``_drain_stateful``), ``("spools", drain)`` for the spool directories
-    a drain streams.  A spool is a deterministic function of the fixture,
-    and a file-source drain only reads it, so a warm drain re-runs its
-    stream (with a fresh checkpoint) but not the spool's scan and write
-    jobs.  A value ``valid`` rejects (spools whose directories are gone:
-    ``_dirs_exist``) is rebuilt."""
-    import os as _os
-
-    key = (what, spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    value = _MEMO.get(key)
-    if value is None or (valid is not None and not valid(value)):
-        value = _MEMO[key] = build()
-    return value
-
-
 def _dirs_exist(dirs: tuple) -> bool:
+    """Whether memoized spools (``("spools", drain)`` in
+    ``catalog.session_memo``) are still on disk.  A spool is a
+    deterministic function of the fixture and a file-source drain only
+    reads it, so a warm drain re-runs its stream but not the spool's scan
+    and write jobs; spools whose directories are gone are rebuilt."""
     import os as _os
 
     return all(_os.path.isdir(p) for p in dirs)
@@ -1035,7 +1017,7 @@ def stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-batch last-writer-wins == global argmax by (day, orderkey).
     # The snapshot table above is per drain (the MERGE mutates it); the
     # spool is only read, so it is memoized.
-    (spool,) = _memo(
+    (spool,) = session_memo(
         spark,
         sf_dir,
         ("spools", "stream_upsert_cdc"),
@@ -1227,7 +1209,7 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_dir = tempfile.mkdtemp(prefix="stream_cdc_del_tbl_")
     snapshot_write(initial, table_dir, stats_col="k")
-    (spool,) = _memo(
+    (spool,) = session_memo(
         spark,
         sf_dir,
         ("spools", "stream_cdc_deletes"),
@@ -1373,7 +1355,7 @@ def stream_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return lspool, rspool
 
-    spools = _memo(
+    spools = session_memo(
         spark, sf_dir, ("spools", "stream_stream_asof_join"), build_spools, _dirs_exist
     )
 

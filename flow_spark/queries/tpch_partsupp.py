@@ -31,7 +31,6 @@ from flow_spark.queries.util import (
     SQL_REVENUE_CENTS,
     cents_sum_money,
     dec,
-    money_sum,
     one_minus,
     revenue_cents,
     sql_cents_sum_money,

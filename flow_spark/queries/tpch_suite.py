@@ -27,7 +27,6 @@ from flow_spark.queries.util import (
     cents,
     cents_sum_money,
     dec,
-    money_sum,
     one_minus,
     revenue_cents,
     revenue_expr,

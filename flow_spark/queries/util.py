@@ -34,16 +34,6 @@ def one_minus(col: Column | str) -> Column:
     return (F.lit(1) - c.cast("decimal(3,2)")).cast(RATE)
 
 
-def one_plus(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.lit(1) + c.cast("decimal(3,2)")).cast(RATE)
-
-
-def money_sum(expr: Column, scale: int = 2) -> Column:
-    """Exact decimal sum -> round -> double (order-independent)."""
-    return F.round(F.sum(expr), scale).cast("double")
-
-
 def money_avg(expr: Column, scale: int = 4) -> Column:
     """Deterministic mean: exact decimal sum cast to double, / count."""
     return F.round(F.sum(expr).cast("double") / F.count(F.lit(1)), scale)
@@ -73,8 +63,8 @@ SQL_ONE_PLUS_TAX = "CAST(1 + CAST(l_tax AS DECIMAL(3,2)) AS DECIMAL(4,2))"
 #
 # Overflow bound: long holds ±9.2e18.  Revenue in 1e-4 units is ≤1e9 per
 # row, so a single group can hold ~9e9 rows before overflow — at larger
-# fan-in, sum in two levels or fall back to money_sum.  (TPC-H SF100k's
-# biggest per-group partial is far below this.)
+# fan-in, sum in two levels or fall back to an exact decimal SUM.
+# (TPC-H SF100k's biggest per-group partial is far below this.)
 # --------------------------------------------------------------------------
 
 

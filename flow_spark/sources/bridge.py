@@ -20,10 +20,13 @@ per message, which is the same batch-ack trade Kafka producers make.
 from __future__ import annotations
 
 import asyncio
+import base64
 import contextlib
+import json
 import os
 import threading
 import time
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -206,8 +209,12 @@ class HttpBridge(SocketBridge):
     reply code maps the acceptance status (:24-32 — 200 accepted here;
     downstream delivery statuses live in the delivery-result stream).
 
-    Spooled record: "<seq>\t<urlencoded-meta>\t<body>" (meta first so the
-    body may contain tabs); spool_stream detects the 3-field form.
+    Spooled record: "<seq>\t<meta JSON>\t<base64 body>", read back by
+    :func:`http_spool_stream`.  Both encodings keep a record on one spool
+    line whatever the body holds (tabs, newlines).  Query parameters are
+    split on ``&`` and ``=`` before they are url-decoded; a repeated key
+    keeps its first value, as Go's ``url.Values.Get`` does.  An
+    ``http://host:port`` receiver bind in a pipeline starts one.
     """
 
     async def _handle(self, reader: asyncio.StreamReader, writer: asyncio.StreamWriter):
@@ -233,7 +240,11 @@ class HttpBridge(SocketBridge):
                     await writer.drain()
                     continue
                 _, _, query = target.partition("?")
-                record = f"{query}\t{body.decode('utf-8', errors='replace')}"
+                meta: dict[str, str] = {}
+                for k, v in urllib.parse.parse_qsl(query, keep_blank_values=True):
+                    meta.setdefault(k, v)
+                text = body.decode("utf-8", errors="replace").encode("utf-8")
+                record = f"{json.dumps(meta)}\t{base64.b64encode(text).decode()}"
                 try:
                     self._append(record)
                     writer.write(b"HTTP/1.1 200 OK\r\ncontent-length: 0\r\n\r\n")
@@ -256,18 +267,14 @@ def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     raw = spark.readStream.format("text").load(spool_dir)
-    parts = F.split("value", "\t", 3)  # seq, urlencoded meta, body
-    meta_q = F.url_decode(F.regexp_replace(parts.getItem(1), r"\+", "%20"))
+    parts = F.split("value", "\t", 3)  # seq, meta JSON, base64 body
+    body = F.unbase64(parts.getItem(2))
     return raw.select(
         parts.getItem(0).cast("long").alias("event_id"),
         F.current_timestamp().alias("ingest_ts"),
-        parts.getItem(2).cast("binary").alias("body"),
-        parts.getItem(2).alias("body_str"),
-        F.when(
-            F.length(parts.getItem(1)) > 0, F.str_to_map(meta_q, F.lit("&"), F.lit("="))
-        )
-        .otherwise(F.create_map().cast("map<string,string>"))
-        .alias("meta"),
+        body.alias("body"),
+        body.cast("string").alias("body_str"),
+        F.from_json(parts.getItem(1), "map<string,string>").alias("meta"),
     )
 
 

@@ -6,8 +6,8 @@
   sample-derived one from `sample_schema`.
 - text reads expose the flow wire format (one opaque record per line,
   \\r\\n tolerated — receiver_tcp.go:177-191 framing).
-- kafka/jdbc/avro are gated: the connector/module jars aren't in this image, so the
-  helpers raise a clear error unless the classpath provides them.
+- the kafka stream reader is gated: the connector jar isn't in this image,
+  so it raises a clear error unless the classpath provides it.
 """
 
 from __future__ import annotations
@@ -74,47 +74,6 @@ def write_any(df: DataFrame, fmt: str, path: str | None = None, mode: str = "ove
     writer.format(fmt).save(path)
 
 
-def avro_available(spark: SparkSession) -> bool:
-    """True if the spark-avro datasource module is on the classpath.
-
-    The core avro-*.jar ships with Spark, but the DataFrame datasource
-    (org.apache.spark:spark-avro) is a separate module not bundled in
-    this image.
-    """
-    try:
-        spark.read.format("avro").load("/nonexistent-avro-probe")
-        return True
-    except Exception as e:  # noqa: BLE001
-        return "AVRO" not in str(e) and "Failed to find data source" not in str(e)
-
-
-def read_avro(
-    spark: SparkSession, path: str, schema: StructType | str | None = None, **options: Any
-) -> DataFrame:
-    """Avro batch read (row-oriented interchange; no pushdown — prefer
-    parquet for analytics).  Requires the spark-avro module."""
-    if not avro_available(spark):
-        raise NotImplementedError(
-            "spark-avro module not on the classpath; add "
-            "org.apache.spark:spark-avro via spark.jars.packages"
-        )
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.options(**{k: str(v) for k, v in options.items()}).format("avro").load(path)
-
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite", **options: Any) -> None:
-    if not avro_available(df.sparkSession):
-        raise NotImplementedError(
-            "spark-avro module not on the classpath; add "
-            "org.apache.spark:spark-avro via spark.jars.packages"
-        )
-    df.write.mode(mode).options(**{k: str(v) for k, v in options.items()}).format(
-        "avro"
-    ).save(path)
-
-
 def kafka_jar_coordinate(spark: SparkSession) -> str:
     """Exact Maven coordinate of the connector matching THIS runtime.
 
@@ -163,148 +122,4 @@ def read_kafka_stream(
         F.col("value").alias("body"),
         F.col("value").cast("string").alias("body_str"),
         F.create_map(F.lit("topic"), F.col("topic")).alias("meta"),
-    )
-
-
-def _to_kafka_records(df: DataFrame, topic: str) -> DataFrame:
-    """Canonical message columns -> the kafka writer's expected schema.
-
-    key = event_id (string bytes) so replays of the same message land in
-    the same partition (ordering per message id); value = raw body.
-    Sink-side mapping of the flow sink head (actor/sink.go) onto Kafka's
-    at-least-once producer contract.
-    """
-    cols = [
-        F.col("event_id").cast("string").cast("binary").alias("key"),
-        F.col("body").cast("binary").alias("value"),
-        F.lit(topic).alias("topic"),
-    ]
-    return df.select(*cols)
-
-
-def write_kafka_batch(
-    df: DataFrame, bootstrap: str, topic: str, **options: Any
-) -> None:
-    """Batch kafka writer (gated on the connector jar, like the reader)."""
-    spark = df.sparkSession
-    if not kafka_available(spark):
-        raise NotImplementedError(
-            f"kafka connector jar not on the classpath; add "
-            f"{kafka_jar_coordinate(spark)} via spark.jars.packages, or point "
-            f"SPARK_GRAFT_EXTRA_JARS at a local copy of the jar"
-        )
-    (
-        _to_kafka_records(df, topic)
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .options(**{k: str(v) for k, v in options.items()})
-        .save()
-    )
-
-
-def write_kafka_stream(
-    df: DataFrame,
-    bootstrap: str,
-    topic: str,
-    checkpoint: str,
-    **options: Any,
-):
-    """Streaming kafka sink: at-least-once with the checkpoint dir as the
-    progress log (exactly-once needs an idempotent/transactional consumer
-    downstream — same contract the flow TCP sink offers, SURVEY.md §3.2).
-    Returns the started StreamingQuery."""
-    spark = df.sparkSession
-    if not kafka_available(spark):
-        raise NotImplementedError(
-            f"kafka connector jar not on the classpath; add "
-            f"{kafka_jar_coordinate(spark)} via spark.jars.packages, or point "
-            f"SPARK_GRAFT_EXTRA_JARS at a local copy of the jar"
-        )
-    return (
-        _to_kafka_records(df, topic)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("checkpointLocation", checkpoint)
-        .options(**{k: str(v) for k, v in options.items()})
-        .start()
-    )
-
-
-def jdbc_driver_available(spark: SparkSession, driver: str) -> bool:
-    """True if the JDBC driver class is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(driver)  # type: ignore[union-attr]
-        return True
-    except Exception:  # noqa: BLE001 - py4j raises opaque Java errors
-        return False
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    driver: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 32,
-    **options: Any,
-) -> DataFrame:
-    """Gated JDBC reader. At scale a JDBC scan MUST be partitioned —
-    without partition_column Spark reads through ONE connection on one
-    task, so this helper requires the caller to either supply the
-    partitioning spec or explicitly pass num_partitions=1 to acknowledge
-    a single-connection read."""
-    if not jdbc_driver_available(spark, driver):
-        raise NotImplementedError(
-            f"JDBC driver {driver} not on the classpath; add the driver jar "
-            "via spark.jars"
-        )
-    if partition_column is None and num_partitions != 1:
-        raise ValueError(
-            "unpartitioned JDBC read: pass partition_column/lower_bound/"
-            "upper_bound, or num_partitions=1 to accept a single-connection scan"
-        )
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("driver", driver)
-    )
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partition_column requires lower_bound and upper_bound")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    return reader.options(**{k: str(v) for k, v in options.items()}).load()
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    driver: str,
-    mode: str = "append",
-    batch_size: int = 10_000,
-    **options: Any,
-) -> None:
-    """Gated JDBC writer (batched inserts; one connection per partition)."""
-    if not jdbc_driver_available(df.sparkSession, driver):
-        raise NotImplementedError(
-            f"JDBC driver {driver} not on the classpath; add the driver jar "
-            "via spark.jars"
-        )
-    (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("driver", driver)
-        .option("batchsize", str(batch_size))
-        .options(**{k: str(v) for k, v in options.items()})
-        .mode(mode)
-        .save()
     )

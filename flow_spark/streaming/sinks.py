@@ -108,40 +108,19 @@ def file_sink(
     )
 
 
-def idempotent_sink(
-    name: str,
-    df: DataFrame,
-    checkpoint_dir: str,
-    write: Callable[[DataFrame, int], None],
-    ledger: set[int] | None = None,
-):
-    """Exactly-once foreachBatch: replays after failure re-deliver the same
-    (batch_id, data) — the writer consults a committed-batch ledger and
-    skips batch ids it already wrote.  In production the ledger is the
-    target system (a committed-batches table, Kafka transactional ids);
-    here it's injectable so tests can assert replay behavior.
-    """
-    seen: set[int] = ledger if ledger is not None else set()
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if epoch_id in seen:
-            return
-        write_with_backoff(lambda d: write(d, epoch_id), batch)
-        seen.add(epoch_id)  # after the write: failure -> retry next run
-
-    return (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{checkpoint_dir}/{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def append_sink_batch(table_dir: str, txn_app: str = "append_sink"):
-    """The foreachBatch handler behind :func:`append_sink`, exposed so
-    tests (and callers composing their own writer) can drive replay
-    semantics directly — the convention of file_sink_batch /
-    socket_sink_batch."""
+    """Streaming ingest -> snapshot table, exactly-once: a foreachBatch
+    handler (``df.writeStream.foreachBatch(append_sink_batch(dir))``)
+    whose micro-batches commit via
+    :func:`~flow_spark.operators.snapshots.snapshot_append` with
+    ``txn_version=batch_id``.  The idempotence marker rides in the same
+    atomic manifest link as the data files, so a replayed batch id is
+    skipped before any data is written.
+
+    ``txn_app`` MUST be unique per logical stream (Delta's txnAppId
+    contract): two streams sharing one name on one table share one
+    batch-id watermark, and the later one's low batch ids would be
+    skipped as replays."""
     from flow_spark.operators.snapshots import snapshot_append
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -150,94 +129,6 @@ def append_sink_batch(table_dir: str, txn_app: str = "append_sink"):
         )
 
     return handle
-
-
-def append_sink(
-    df: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    txn_app: str = "append_sink",
-):
-    """Streaming ingest -> snapshot table, exactly-once with NO side-
-    channel marker: each micro-batch commits via
-    :func:`~flow_spark.operators.snapshots.snapshot_append` with
-    ``txn_version=batch_id``, so the idempotence marker rides in the
-    same atomic manifest link as the data files.  A replayed batch id
-    (crash between the table commit and the source checkpoint advance)
-    is detected from the manifest itself and skipped before any data
-    is written — unlike the ``_streaming_commits`` marker protocol of
-    :func:`upsert_sink`, there is no commit-vs-marker crash window at
-    all.  Concurrent batch writers (or a zombie executor replaying an
-    old epoch) race safely: the replay check re-runs on every commit
-    attempt, so exactly one copy of each batch lands.
-
-    This is the plain-event ingest half of the lakehouse write path
-    (appends, monotone batch ids); CDC upserts stay on
-    :func:`upsert_sink`.  Returns the DataStreamWriter (caller picks
-    trigger and starts).
-
-    ``txn_app`` MUST be unique per logical stream (Delta's txnAppId
-    contract): two independent streams sharing the default name on one
-    table share one batch-id watermark, and the later-starting stream's
-    low batch ids would be silently skipped as replays of the other's.
-    """
-    return df.writeStream.foreachBatch(
-        append_sink_batch(table_dir, txn_app)
-    ).option("checkpointLocation", checkpoint_dir)
-
-
-def enrich_sink_batch(
-    dim_dir: str,
-    table_dir: str,
-    on: "str | list[str]",
-    txn_app: str = "enrich_sink",
-):
-    """foreachBatch handler: left-join each micro-batch against the
-    CURRENT head of a snapshot dimension table, then append exactly-once.
-
-    The dimension is RE-RESOLVED on every batch — Delta's stream-static
-    join semantics, where the static side is not frozen at query start:
-    a MERGE/append landing on the dimension mid-stream applies to every
-    later micro-batch (the standard slowly-changing-dimension enrichment
-    contract).  Spark's native stream-static join pins the static plan
-    at query start for plain parquet; going through the manifest read
-    here gives the Delta behavior on top of raw parquet files.
-
-    Exactly-once rides on :func:`append_sink`'s manifest-native txn
-    marker (batch_id in the same atomic commit as the data); like
-    there, ``txn_app`` must be unique per logical stream writing to
-    the same table.  At 100 TB the dimension read is one manifest
-    resolve + a broadcast-or-shuffle join per batch, with the usual
-    stats/bloom pruning intact.
-    """
-    from flow_spark.operators.snapshots import snapshot_append, snapshot_read
-
-    keys = [on] if isinstance(on, str) else list(on)
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        dim = snapshot_read(spark, dim_dir)  # current head, per batch
-        enriched = batch.join(dim, keys, "left")
-        snapshot_append(
-            enriched, table_dir, txn_app=txn_app, txn_version=int(batch_id)
-        )
-
-    return handle
-
-
-def enrich_sink(
-    df: DataFrame,
-    dim_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    on: "str | list[str]",
-    txn_app: str = "enrich_sink",
-):
-    """Streaming enrichment against a LIVE snapshot dimension — see
-    :func:`enrich_sink_batch`.  Returns the DataStreamWriter."""
-    return df.writeStream.foreachBatch(
-        enrich_sink_batch(dim_dir, table_dir, on, txn_app)
-    ).option("checkpointLocation", checkpoint_dir)
 
 
 def upsert_sink(

@@ -109,12 +109,10 @@ def test_throttler_admits_at_most_rps_per_second(spark, sf_dir):
 
 
 def test_multimodal_decode_stubs():
-    from flow_spark.operators.multimodal import decode_audio, decode_image
+    from flow_spark.operators.multimodal import decode_image
 
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"RIFF")
 
 
 def test_multimodal_feature_schema(spark, sf_dir):

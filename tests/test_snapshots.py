@@ -1552,40 +1552,23 @@ def test_streaming_cdc_null_key_tombstone_rejected(spark, tmp_path):
         q.awaitTermination(120)
 
 
-def test_timestamp_time_travel_and_dv_vacuum(spark, tmp_path):
-    """snapshot_version_at resolves TIMESTAMP AS OF between commits;
-    vacuum reclaims DV sidecars once no kept manifest references them
+def test_dv_vacuum_reclaims_unreferenced_sidecars(spark, tmp_path):
+    """Vacuum reclaims DV sidecars once no kept manifest references them
     (and never while one does)."""
     import os
-    import time as _time
-
-    import pytest
-    from pyspark.sql import functions as F
 
     from flow_spark.operators.snapshots import (
         snapshot_delete,
         snapshot_read,
         snapshot_vacuum,
-        snapshot_version_at,
         snapshot_write,
     )
 
     t = str(tmp_path / "tbl")
-    t0 = _time.time()
-    with pytest.raises(FileNotFoundError):
-        snapshot_version_at(t, t0)
     snapshot_write(spark.range(10).selectExpr("id AS k"), t)
-    t1 = _time.time()
-    _time.sleep(0.02)
     snapshot_delete(spark, t, "k >= 5")
-    t2 = _time.time()
-    _time.sleep(0.02)
     snapshot_write(spark.range(100, 103).selectExpr("id AS k"), t)
-    assert snapshot_version_at(t, t1) == 1
-    assert snapshot_version_at(t, t2) == 2
-    assert snapshot_read(spark, t, snapshot_version_at(t, t2)).count() == 5
-    with pytest.raises(FileNotFoundError):
-        snapshot_version_at(t, t0)
+    assert snapshot_read(spark, t, 2).count() == 5
 
     dvroot = os.path.join(t, "_dv")
     assert len(os.listdir(dvroot)) == 1
@@ -1595,41 +1578,6 @@ def test_timestamp_time_travel_and_dv_vacuum(spark, tmp_path):
     # retention shrinks to v3 only (no dv_dirs): sidecar reclaimed
     snapshot_vacuum(t, keep_versions=1, orphan_grace_seconds=0)
     assert os.listdir(dvroot) == []
-
-
-def test_purge_deletes_materializes_vectors(spark, tmp_path):
-    """REORG/PURGE: only vectored files are rewritten (others reused by
-    reference), the committed version carries no vectors, and content
-    matches the merge-on-read view exactly."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from flow_spark.operators.snapshots import (
-        _manifest_path,
-        snapshot_delete,
-        snapshot_files,
-        snapshot_purge_deletes,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(100).select(F.col("id").alias("k")).repartitionByRange(4, "k")
-    snapshot_write(df, t)
-    v1_files = set(snapshot_files(t, 1))
-    assert len(v1_files) == 4
-    v2 = snapshot_delete(spark, t, "k IN (3, 4)")  # both in the first range file
-    before = sorted(r.k for r in snapshot_read(spark, t, v2).collect())
-    v3 = snapshot_purge_deletes(spark, t)
-    after = sorted(r.k for r in snapshot_read(spark, t, v3).collect())
-    assert after == before == [k for k in range(100) if k not in (3, 4)]
-    v3_files = set(snapshot_files(t, v3))
-    assert len(v1_files & v3_files) == 3  # three untouched files reused
-    with open(_manifest_path(t, v3)) as fh:
-        assert "dv_dirs" not in _json.load(fh)
-    # purging a vector-free table is a no-op
-    assert snapshot_purge_deletes(spark, t) == v3
 
 
 def test_bloom_rejects_non_integral_key_and_sink_requires_order(spark, tmp_path):
@@ -1799,11 +1747,11 @@ def test_shallow_clone_divergence_and_vacuum_safety(spark, tmp_path):
 def test_column_mapping_survives_every_write_path(spark, tmp_path):
     """Every path that writes data files into a mapped table must write
     PHYSICAL names and carry the mapping through its commit, or reads
-    NULL-fill the renamed column: compaction (partial rewrite), DV
-    purge (partial rewrite), WAP stage/audit/publish, and streaming
-    delete via DV.  snapshot_optimize_zorder is the designated way OUT
-    of mapping (full rewrite -> unmapped), and partition-spec evolution
-    refuses a mapped table."""
+    NULL-fill the renamed column: compaction (partial rewrite), WAP
+    stage/audit/publish, and streaming delete via DV.
+    snapshot_optimize_zorder is the designated way OUT of mapping (full
+    rewrite -> unmapped), and partition-spec evolution refuses a mapped
+    table."""
     import json as _json
 
     import pytest
@@ -1815,7 +1763,6 @@ def test_column_mapping_survives_every_write_path(spark, tmp_path):
         snapshot_delete,
         snapshot_optimize_zorder,
         snapshot_publish,
-        snapshot_purge_deletes,
         snapshot_read,
         snapshot_rename_column,
         snapshot_stage,
@@ -1843,15 +1790,10 @@ def test_column_mapping_survives_every_write_path(spark, tmp_path):
         assert _json.load(fh)["column_mapping"] == {"bal": "cents"}
     assert total(v_c) == base_sum
 
-    # merge-on-read delete + purge: DV anti-join and the purge rewrite
-    # both see the mapped column correctly
+    # merge-on-read delete: the DV anti-join sees the mapped column
     snapshot_delete(spark, t, F.col("bal") > 3 * 150)
     kept = sum(i * 3 for i in range(151))
     assert total() == kept
-    v_p = snapshot_purge_deletes(spark, t)
-    assert total(v_p) == kept
-    with open(_manifest_path(t, v_p)) as fh:
-        assert _json.load(fh)["column_mapping"] == {"bal": "cents"}
 
     # WAP: stage logical rows, audit sees logical names, publish keeps
     # the mapping and the appended rows read back correctly
@@ -2332,43 +2274,6 @@ def test_snapshot_append_conflicts_on_metadata_change(
     assert current_version(t) == 2
 
 
-def test_snapshot_rebase_info_classifies_races(spark, tmp_path):
-    """Pure intervening appends never invalidate a rewrite plan; an
-    intervening commit that removed a rewritten file must force replay."""
-    from flow_spark.operators.snapshots import (
-        snapshot_append,
-        snapshot_compact,
-        snapshot_rebase_info,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(spark.range(10).repartition(3).selectExpr("id AS k"), t)
-    v1_files = snapshot_files(t, 1)
-    snapshot_append(spark.range(100, 110).selectExpr("id AS k"), t)
-
-    info = snapshot_rebase_info(t, 1, touched_files=v1_files)
-    assert info["pure_appends"] and not info["removed_overlap"]
-    assert info["intervening"] == [2]
-    assert set(info["added_files"]) == set(snapshot_files(t, 2)) - set(v1_files)
-
-    # a compaction rewrites (removes) v1's small files
-    snapshot_compact(spark, t, target_bytes=256 * 1024 * 1024)
-    info = snapshot_rebase_info(t, 1, touched_files=v1_files)
-    assert not info["pure_appends"]
-    assert set(info["removed_overlap"]) == set(v1_files)
-    # the compaction rewrote v2's small files too — a reader of those is
-    # equally invalidated, and the classification names exactly its files
-    v2_only = sorted(set(snapshot_files(t, 2)) - set(v1_files))
-    info2 = snapshot_rebase_info(t, 2, touched_files=v2_only)
-    assert not info2["pure_appends"]
-    assert info2["removed_overlap"] == v2_only
-    # a transaction planned against the head has nothing intervening
-    head = current_version(t)
-    info3 = snapshot_rebase_info(t, head, touched_files=snapshot_files(t, head))
-    assert info3["intervening"] == [] and info3["pure_appends"]
-    assert info3["removed_overlap"] == []
-
-
 def test_snapshot_stats_agg_metadata_only(spark, tmp_path):
     """The fast path answers COUNT/MIN/MAX from footers with ZERO Spark
     jobs, and matches the real scan exactly."""
@@ -2464,7 +2369,7 @@ def test_snapshot_txn_markers_survive_interleaved_commits(spark, tmp_path):
 
 
 def test_append_sink_exactly_once_replay(spark, tmp_path):
-    """append_sink's foreachBatch handler: re-delivery of a batch id
+    """append_sink_batch: re-delivery of a batch id
     (source-checkpoint crash replay) lands exactly one copy."""
     from flow_spark.streaming.sinks import append_sink_batch
 
@@ -2479,43 +2384,6 @@ def test_append_sink_exactly_once_replay(spark, tmp_path):
     handle(b1, 1)
     got = sorted(r.k for r in snapshot_read(spark, t).collect())
     assert got == [100, 101, 102, 103, 104, 200, 201, 202]
-
-
-def test_snapshot_upsert_retry_replays_after_race(spark, tmp_path, monkeypatch):
-    """A merge that loses its commit race replays against the winner's
-    head: the final table contains BOTH the competitor's appended rows
-    and the merge's updates — the serial history in commit order."""
-    import flow_spark.operators.snapshots as snap
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(spark.range(10).selectExpr("id AS k", "id AS val"), t)
-    real_commit = snap._commit_manifest
-    fired = {"n": 0}
-
-    def racing_commit(manifest, final):
-        if not fired["n"]:
-            fired["n"] += 1
-            monkeypatch.setattr(snap, "_commit_manifest", real_commit)
-            snap.snapshot_append(
-                spark.range(100, 103).selectExpr("id AS k", "id AS val"), t
-            )
-            monkeypatch.setattr(snap, "_commit_manifest", racing_commit)
-        return real_commit(manifest, final)
-
-    monkeypatch.setattr(snap, "_commit_manifest", racing_commit)
-    v = snap.snapshot_upsert_retry(
-        spark,
-        spark.range(3).selectExpr("id AS k", "id + 900 AS val"),
-        t,
-        "k",
-    )
-    monkeypatch.setattr(snap, "_commit_manifest", real_commit)
-    assert fired["n"] == 1
-    assert v == current_version(t)
-    rows = {r.k: r.val for r in snapshot_read(spark, t).collect()}
-    assert {k: rows[k] for k in range(3)} == {0: 900, 1: 901, 2: 902}
-    assert all(rows[k] == k for k in (100, 101, 102))  # competitor kept
-    assert len(rows) == 13
 
 
 def test_persistent_constraints_enforced_on_all_writes(spark, tmp_path):
@@ -2801,32 +2669,6 @@ def test_truncate_transform_and_collisions(spark, tmp_path):
         snapshot_write_partitioned(bad, t2, ["bucket(4, k)"])
 
 
-def test_snapshot_history_describes_commits(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from flow_spark.operators.snapshots import (
-        snapshot_append,
-        snapshot_delete,
-        snapshot_history,
-        snapshot_set_constraints,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(spark.range(10).repartition(2).selectExpr("id AS k"), t)
-    snapshot_append(
-        spark.range(20, 25).selectExpr("id AS k"), t, txn_app="ing", txn_version=4
-    )
-    snapshot_set_constraints(spark, t, ["k >= 0"])
-    snapshot_delete(spark, t, F.col("k") == 3)
-    h = {r.version: r for r in snapshot_history(spark, t).collect()}
-    assert set(h) == {1, 2, 3, 4}
-    assert h[1].n_added == h[1].n_files >= 1 and h[1].n_removed == 0
-    assert h[2].n_removed == 0 and h[2].n_added >= 1  # append shares files
-    assert '"ing": 4' in h[2].txns
-    assert h[3].n_constraints == 1 and h[3].n_added == 0  # metadata-only
-    assert h[4].has_dv and h[4].n_removed == 0  # DV delete keeps files
-
-
 def test_incremental_zorder_rewrites_only_new_files(spark, tmp_path):
     """After a full clustering pass, an incremental pass rewrites ONLY
     the files appended since — clustered files are reused byte-
@@ -2872,37 +2714,6 @@ def test_incremental_zorder_rewrites_only_new_files(spark, tmp_path):
         m = _json.load(fh)
     assert set(m["col_stats"]["x"]) == files4
     assert set(m["clustered"]["files"]) == files4
-
-
-def test_snapshot_maintenance_runs_the_right_job(spark, tmp_path):
-    """Unclustered tables bin-pack; clustered tables re-cluster
-    incrementally; vacuum reclaims past retention either way."""
-    from flow_spark.operators.snapshots import (
-        snapshot_append,
-        snapshot_maintenance,
-        snapshot_optimize_zorder,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(
-        spark.range(500).repartition(6).selectExpr("id AS x", "id % 7 AS y"), t
-    )
-    snapshot_append(spark.range(500, 600).selectExpr("id AS x", "id % 7 AS y"), t)
-    res = snapshot_maintenance(spark, t, keep_versions=1, orphan_grace_seconds=0)
-    assert res["compacted"] and not res["clustered"]
-    assert res["versions_dropped"] >= 1
-    n1 = snapshot_read(spark, t).count()
-    assert n1 == 600
-    # now cluster it once; maintenance after an append re-clusters
-    snapshot_optimize_zorder(spark, t, "x", "y", target_rows_per_file=400)
-    snapshot_append(spark.range(900, 950).selectExpr("id AS x", "id % 7 AS y"), t)
-    res = snapshot_maintenance(spark, t, keep_versions=1, orphan_grace_seconds=0)
-    assert res["clustered"] and not res["compacted"]
-    assert snapshot_read(spark, t).count() == 650
-    # fully maintained table: a second pass does nothing destructive
-    res = snapshot_maintenance(spark, t, keep_versions=1, orphan_grace_seconds=0)
-    assert not res["clustered"] and not res["compacted"]
-    assert snapshot_read(spark, t).count() == 650
 
 
 def test_append_inherits_stats_col(spark, tmp_path):
@@ -3191,9 +3002,9 @@ def test_purge_of_clone_leaves_source_untouched(spark, tmp_path):
     the shared source files, and the source table still serves every
     row (each table owns its own erasure)."""
     from flow_spark.operators.snapshots import (
+        _read_manifest,
         snapshot_clone,
         snapshot_files,
-        snapshot_history,
         snapshot_purge_key,
     )
 
@@ -3215,11 +3026,15 @@ def test_purge_of_clone_leaves_source_untouched(spark, tmp_path):
         assert not os.path.realpath(f).startswith(os.path.realpath(src) + os.sep) or (
             f in set(snapshot_files(src, current_version(src)))
         )
-    # DESCRIBE HISTORY surfaces the purge on the clone only
-    h_clone = {r.version: r.n_purges for r in snapshot_history(spark, clone).collect()}
-    h_src = {r.version: r.n_purges for r in snapshot_history(spark, src).collect()}
-    assert any(n > 0 for n in h_clone.values())
-    assert all(n == 0 for n in h_src.values())
+    # the purge audit note lands in the clone's manifests only
+    def purges(t):
+        return [
+            len(_read_manifest(t, v).get("purged") or [])
+            for v in range(1, current_version(t) + 1)
+        ]
+
+    assert any(n > 0 for n in purges(clone))
+    assert all(n == 0 for n in purges(src))
 
 
 def test_purge_key_dv_remap_multi_file_order(spark, tmp_path):
@@ -3266,92 +3081,6 @@ def test_purge_key_detects_concurrent_commit(spark, tmp_path, monkeypatch):
 
     with _pytest.raises(S.SnapshotConflict):
         S.snapshot_purge_key(spark, t, "k", [3])
-
-
-def test_enrich_sink_sees_dimension_updates_between_batches(spark, tmp_path):
-    """Stream-static enrichment with Delta semantics: the snapshot
-    dimension is re-resolved EVERY batch, so an update landing between
-    micro-batches applies to later batches (Spark's native stream-static
-    join over plain parquet would pin the file list at query start)."""
-    from flow_spark.streaming.sinks import enrich_sink_batch
-
-    dim = str(tmp_path / "dim")
-    out = str(tmp_path / "out")
-    snapshot_write(
-        spark.createDataFrame([(1, "bronze"), (2, "silver")], ["cust", "tier"]),
-        dim,
-    )
-    snapshot_write(
-        spark.createDataFrame([], "cust long, evt string, tier string"), out
-    )
-    handle = enrich_sink_batch(dim, out, on="cust")
-    handle(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["cust", "evt"]), 0)
-    # dimension changes mid-stream: tier 2 upgraded, cust 3 appears
-    snapshot_write(
-        spark.createDataFrame(
-            [(1, "bronze"), (2, "gold"), (3, "steel")], ["cust", "tier"]
-        ),
-        dim,
-    )
-    handle(spark.createDataFrame([(1, "d"), (3, "e")], ["cust", "evt"]), 1)
-    handle(spark.createDataFrame([(1, "d"), (3, "e")], ["cust", "evt"]), 1)  # replay
-    got = sorted(
-        (r.cust, r.evt, r.tier) for r in snapshot_read(spark, out).collect()
-    )
-    assert got == [
-        (1, "a", "bronze"),
-        (1, "d", "bronze"),
-        (2, "b", "silver"),   # batch 0 saw the OLD tier
-        (3, "c", None),       # cust 3 unknown at batch 0
-        (3, "e", "steel"),    # batch 1 sees the update
-    ]
-
-
-def test_enrich_sink_live_stream_checkpoint_resume(spark, tmp_path):
-    """Live writeStream integration: availableNow run 1 enriches the
-    first spool file, the dimension is updated, and the checkpoint-
-    resumed run 2 processes ONLY the new file — against the new head."""
-    from flow_spark.streaming.sinks import enrich_sink
-
-    dim = str(tmp_path / "dim")
-    out = str(tmp_path / "out")
-    spool = tmp_path / "spool"
-    ckpt = str(tmp_path / "ckpt")
-    spool.mkdir()
-    snapshot_write(
-        spark.createDataFrame([(1, "bronze"), (2, "silver")], ["cust", "tier"]),
-        dim,
-    )
-    snapshot_write(
-        spark.createDataFrame([], "cust long, evt string, tier string"), out
-    )
-    schema = "cust long, evt string"
-    spark.createDataFrame([(1, "a"), (2, "b")], ["cust", "evt"]).coalesce(
-        1
-    ).write.parquet(str(spool / "f1"))
-
-    def run_once():
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(spool))
-        q = enrich_sink(stream, dim, out, ckpt, on="cust").trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination(120)
-
-    run_once()
-    snapshot_write(
-        spark.createDataFrame([(1, "bronze"), (2, "gold")], ["cust", "tier"]),
-        dim,
-    )
-    spark.createDataFrame([(2, "c")], ["cust", "evt"]).coalesce(1).write.parquet(
-        str(spool / "f2")
-    )
-    run_once()
-    got = sorted(
-        (r.cust, r.evt, r.tier) for r in snapshot_read(spark, out).collect()
-    )
-    assert got == [(1, "a", "bronze"), (2, "b", "silver"), (2, "c", "gold")]
 
 
 def test_purge_key_changefeed_stays_consistent(spark, tmp_path):
@@ -3472,33 +3201,6 @@ def test_vacuum_dry_run_touches_nothing(spark, tmp_path):
     ]
 
 
-def test_detail_and_files_metadata_tables(spark, tmp_path):
-    """DESCRIBE DETAIL + the .files metadata table agree with the
-    manifests and footers."""
-    from flow_spark.operators.snapshots import (
-        snapshot_detail,
-        snapshot_files_table,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(
-        spark.range(100).repartition(4, "id").selectExpr("id AS k"),
-        t,
-        stats_col="k",
-    )
-    d = snapshot_detail(spark, t).collect()[0]
-    assert (d.version, d.n_files, d.n_rows, d.n_columns) == (1, 4, 100, 1)
-    assert d.stats_col == "k" and not d.has_dv
-    ft = snapshot_files_table(spark, t).collect()
-    assert len(ft) == 4
-    assert sum(r.n_rows for r in ft) == 100
-    # the data-skipping stats surface per file and cover the domain
-    lows = [int(r.stats_min) for r in ft]
-    highs = [int(r.stats_max) for r in ft]
-    assert min(lows) == 0 and max(highs) == 99
-    assert all(not r.clustered for r in ft)
-
-
 def test_purge_key_preserves_string_partition_column_type(spark, tmp_path):
     """A numeric-looking STRING partition value ('1996') must stay a
     string through the purge rewrite: basePath reads type-INFER path
@@ -3546,55 +3248,6 @@ def test_hidden_year_pruning_before_year_1000(spark, tmp_path):
     res, n_sel, n_tot = snapshot_read_hidden(spark, t, {"d": "0987-06-01"})
     assert [r.k for r in res.collect()] == [1]
     assert n_sel == 1 and n_tot == 2
-
-
-def test_maintenance_skips_recluster_on_mapped_table(spark, tmp_path):
-    """The nightly one-call job must not crash when a clustering marker
-    coexists with column mapping — it skips the re-cluster and still
-    compact/vacuums."""
-    from flow_spark.operators.snapshots import (
-        snapshot_append,
-        snapshot_maintenance,
-        snapshot_optimize_zorder,
-        snapshot_rename_column,
-    )
-
-    t = str(tmp_path / "tbl")
-    snapshot_write(
-        spark.range(100).selectExpr("id AS x", "id % 7 AS y", "id AS k"), t
-    )
-    snapshot_optimize_zorder(spark, t, "x", "y", shift=0, target_rows_per_file=50)
-    snapshot_rename_column(t, "k", "key")
-    snapshot_append(
-        spark.range(100, 110).selectExpr("id AS x", "id % 7 AS y", "id AS key"),
-        t,
-    )
-    out = snapshot_maintenance(spark, t, keep_versions=10)
-    assert out["clustered"] is False  # skipped, not crashed
-    assert sorted(r.key for r in snapshot_read(spark, t).collect()) == list(
-        range(110)
-    )
-
-
-def test_rebase_info_conflict_on_vacuumed_manifest(spark, tmp_path):
-    """Classifying a race against a vacuumed-away snapshot answers
-    SnapshotConflict, not a raw FileNotFoundError."""
-    from flow_spark.operators.snapshots import (
-        SnapshotConflict,
-        snapshot_rebase_info,
-        snapshot_vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    for lo in (0, 10, 20, 30):
-        snapshot_write(
-            spark.range(lo, lo + 10).repartition(1).selectExpr("id AS k"), t
-        )
-    snapshot_vacuum(t, keep_versions=1, orphan_grace_seconds=0)
-    import pytest as _pytest
-
-    with _pytest.raises(SnapshotConflict, match="vacuumed"):
-        snapshot_rebase_info(t, 1, None)
 
 
 def test_purge_source_refuses_while_clones_exist(spark, tmp_path):

@@ -65,69 +65,6 @@ def test_kafka_gated(spark):
     assert "SPARK_GRAFT_EXTRA_JARS" in str(ei.value)
 
 
-def test_kafka_writer_gated(spark):
-    from flow_spark.sources.formats import (
-        kafka_available,
-        kafka_jar_coordinate,
-        write_kafka_batch,
-    )
-
-    if kafka_available(spark):  # pragma: no cover - not in this image
-        pytest.skip("kafka connector present")
-    df = spark.range(1).selectExpr(
-        "id AS event_id", "CAST('x' AS BINARY) AS body"
-    )
-    with pytest.raises(NotImplementedError) as ei:
-        write_kafka_batch(df, "localhost:9092", "t")
-    assert kafka_jar_coordinate(spark) in str(ei.value)
-
-
-def test_kafka_record_mapping(spark):
-    """The key/value/topic projection is jar-independent — verify the wire
-    schema (key = message id bytes for per-id partition affinity)."""
-    from flow_spark.sources.formats import _to_kafka_records
-
-    df = spark.createDataFrame(
-        [(7, bytearray(b"payload"))], "event_id LONG, body BINARY"
-    )
-    row = _to_kafka_records(df, "events").collect()[0]
-    assert bytes(row.key) == b"7"
-    assert bytes(row.value) == b"payload"
-    assert row.topic == "events"
-    assert [f.name for f in _to_kafka_records(df, "t").schema.fields] == [
-        "key", "value", "topic"
-    ]
-
-
-def test_jdbc_gated_and_partition_guard(spark):
-    from flow_spark.sources.formats import jdbc_driver_available, read_jdbc
-
-    assert not jdbc_driver_available(spark, "org.postgresql.Driver")
-    with pytest.raises(NotImplementedError, match="JDBC driver"):
-        read_jdbc(
-            spark, "jdbc:postgresql://h/db", "t", "org.postgresql.Driver",
-            partition_column="id", lower_bound=0, upper_bound=100,
-        )
-    # the scale guard trips before the driver gate is even relevant:
-    # java.sql.DriverManager ships with the JDK, so use a driver name that
-    # exists to reach the guard
-    avail = jdbc_driver_available(spark, "java.lang.String")
-    assert avail  # sanity: classpath probe works
-    with pytest.raises(ValueError, match="unpartitioned"):
-        read_jdbc(spark, "jdbc:x://h/db", "t", "java.lang.String")
-
-
-def test_avro_gated(spark):
-    from flow_spark.sources.formats import avro_available, read_avro, write_avro
-
-    if avro_available(spark):  # pragma: no cover - not in this image
-        pytest.skip("spark-avro module present")
-    with pytest.raises(NotImplementedError, match="avro"):
-        read_avro(spark, "/tmp/nope.avro")
-    with pytest.raises(NotImplementedError, match="avro"):
-        write_avro(spark.range(1), "/tmp/nope.avro")
-
-
 def test_corrupt_file_skip(spark, tmp_path):
     """A 100 TB ingest will meet truncated/garbage files; with
     spark.sql.files.ignoreCorruptFiles the scan skips them and keeps the

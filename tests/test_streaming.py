@@ -337,42 +337,6 @@ def test_session_window_true_streaming(spark, tmp_path):
     assert got == [(1, 2), (1, 3), (2, 1)]
 
 
-def test_idempotent_sink_skips_committed_batches(spark, tmp_path):
-    """The exactly-once pattern: a batch id already in the ledger is not
-    rewritten when the stream reruns over the same checkpoint."""
-    from flow_spark.streaming.sinks import idempotent_sink
-
-    (tmp_path / "i").mkdir()
-    spark.createDataFrame([(i,) for i in range(10)], "v long").write.mode(
-        "append"
-    ).parquet(str(tmp_path / "i"))
-
-    writes: list[tuple[int, int]] = []
-    ledger: set[int] = set()
-
-    def run():
-        stream = spark.readStream.schema("v long").parquet(str(tmp_path / "i"))
-        q = idempotent_sink(
-            "idem",
-            stream,
-            str(tmp_path / "ick"),
-            write=lambda d, bid: writes.append((bid, d.count())),
-            ledger=ledger,
-        )
-        q.awaitTermination(120)
-
-    run()
-    first = list(writes)
-    assert sum(n for _, n in first) == 10
-    # simulate a redelivery: wipe the CHECKPOINT but keep the ledger — every
-    # batch replays, the ledger suppresses the double-write
-    import shutil
-
-    shutil.rmtree(str(tmp_path / "ick"))
-    run()
-    assert writes == first, "replayed batch was written twice"
-
-
 def test_rate_source_pipeline(spark, tmp_path):
     """rate:// receiver: built-in load generator through the YAML builder
     (the dev stand-in for a firehose source)."""
@@ -866,73 +830,6 @@ def test_streaming_asof_enrichment(spark, tmp_path):
     assert dict(((k, t), rr) for k, t, _a, rr in out) == {
         (1, 15): 100, (2, 9): None, (1, 25): 120, (2, 11): 50
     }
-
-
-def test_streaming_incremental_neardup(spark, sf_dir, tmp_path):
-    """Continuous-ingestion near-dup: two micro-batches stream through
-    foreachBatch + incremental_neardup_batch with a persistent band
-    store.  Batch 2 contains exact copies of batch-1 docs under new ids —
-    they must drop (cross-batch recall via the store), fresh docs must
-    survive, and the streamed result must equal running the same operator
-    sequentially in batch mode (streaming/batch parity)."""
-    import shutil
-
-    import pyspark.sql.functions as SF
-
-    from flow_spark.operators.dedup import incremental_neardup_batch
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(SF.col("doc_id") < 40)
-        .select("doc_id", "text")
-    )
-    half1 = docs.filter(SF.col("doc_id") < 20)
-    # batch 2: 10 fresh docs + copies of 5 batch-1 texts under new ids
-    fresh = docs.filter(SF.col("doc_id").between(20, 29))
-    copies = half1.filter(SF.col("doc_id") < 5).select(
-        (SF.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    half2 = fresh.unionByName(copies)
-
-    src_dir = tmp_path / "in"
-    src_dir.mkdir()
-    # one file per micro-batch, ordered arrival via maxFilesPerTrigger=1
-    half1.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-    half2.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b2"))
-    for i, b in enumerate(["b1", "b2"]):
-        part = next((tmp_path / b).glob("part-*.parquet"))
-        shutil.copy(part, src_dir / f"{i:05d}.parquet")
-
-    store = str(tmp_path / "bands")
-    out_dir = str(tmp_path / "out")
-
-    def apply_batch(batch_df, batch_id):
-        kept = incremental_neardup_batch(batch_df, store)
-        kept.write.mode("append").parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir))
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-
-    # exact copies must be caught by the cross-batch band store
-    assert not any(d >= 100000 for d in got)
-    # batch parity: same operator run sequentially on the same halves
-    store2 = str(tmp_path / "bands2")
-    expected = {
-        r.doc_id for r in incremental_neardup_batch(half1, store2).collect()
-    } | {r.doc_id for r in incremental_neardup_batch(half2, store2).collect()}
-    assert got == expected and len(got) > 0
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
