@@ -128,6 +128,16 @@ def _commit_manifest(manifest: dict, final: str) -> None:
             "initial_defaults"
         ):
             manifest["initial_defaults"] = prev_manifest["initial_defaults"]
+        # a commit that keeps any head file keeps what the head records
+        # about those files: their deletion vectors (DV rows are path-
+        # keyed; entries for dropped files anti-join nothing) and the
+        # retired physical names they may still carry.  Paths that
+        # compute either key (write, publish, partitioned write, delete)
+        # or must not take the head's (rollback) set it themselves.
+        if set(manifest.get("files") or ()) & set(prev_manifest.get("files") or ()):
+            for key in ("dv_dirs", "retired_physical"):
+                if key not in manifest and prev_manifest.get(key):
+                    manifest[key] = prev_manifest[key]
     tmp = f"{final}.{uuid.uuid4().hex[:12]}.tmp"
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
@@ -152,6 +162,33 @@ def current_version(table_dir: str) -> int:
         if f.startswith("v") and f.endswith(".json")
     ]
     return max(versions, default=0)
+
+
+def _head(
+    table_dir: str, version: "int | None" = None, empty_ok: bool = False
+) -> "tuple[int, dict | None]":
+    """``(version, manifest)`` of ``version``, or of the head when None.
+
+    A table with no committed versions raises ``FileNotFoundError``, or
+    gives ``(0, None)`` when ``empty_ok``."""
+    v = current_version(table_dir) if version is None else version
+    if v < 1:
+        if empty_ok:
+            return 0, None
+        raise FileNotFoundError(f"no committed versions in {table_dir}")
+    return v, _read_manifest(table_dir, v)
+
+
+def _commit(table_dir: str, head_version: int, manifest: dict) -> int:
+    """Commit ``manifest`` as the version after ``head_version``, the head
+    it was built on: stamp ``version`` and ``committed_at``, publish it
+    through :func:`_commit_manifest` (which adds what the commit
+    inherits from that head) and return the new version."""
+    version = head_version + 1
+    os.makedirs(os.path.join(table_dir, MANIFEST_DIR), exist_ok=True)
+    manifest = {**manifest, "version": version, "committed_at": time.time()}
+    _commit_manifest(manifest, _manifest_path(table_dir, version))
+    return version
 
 
 def _footer_stats(files: "list[str]", col: str, schema) -> "dict | None":
@@ -226,11 +263,7 @@ def snapshot_write(
     """
     from pyspark.sql import functions as F
 
-    os.makedirs(os.path.join(table_dir, MANIFEST_DIR), exist_ok=True)
-    prev_version = current_version(table_dir)
-    prev_manifest: "dict | None" = None
-    if prev_version >= 1:
-        prev_manifest = _read_manifest(table_dir, prev_version)
+    prev_version, prev_manifest = _head(table_dir, empty_ok=True)
     # column mapping (snapshot_rename_column): a mapped table's FILES
     # carry physical names forever, so new files must be written with
     # physical names too — one global logical->physical map stays valid
@@ -375,10 +408,7 @@ def snapshot_write(
                 # would not round-trip through the manifest)
                 if all(isinstance(v, (int, float, str)) for v in (r[1], r[2])):
                     stats[r[0].removeprefix("file:")] = [r[1], r[2]]
-    version = prev_version + 1
     manifest = {
-        "version": version,
-        "committed_at": time.time(),
         "files": list(reuse_files or []) + files,
         "schema": df.schema.json(),
         "stats": stats,
@@ -386,18 +416,13 @@ def snapshot_write(
         "partitions": partitions,
         "bases": bases,
     }
-    # reused files keep needing their deletion vectors (DV rows are
-    # path-keyed; entries for dropped files anti-join nothing)
-    if reuse_files and prev_manifest and prev_manifest.get("dv_dirs"):
-        manifest["dv_dirs"] = prev_manifest["dv_dirs"]
     if mapping:
         # the mapping outlives every rewrite: new files were written
         # with physical names above, so it stays valid table-wide
         manifest["column_mapping"] = mapping
     if retired:
         manifest["retired_physical"] = sorted(retired)
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
-    return version
+    return _commit(table_dir, prev_version, manifest)
 
 
 def snapshot_files(table_dir: str, version: int) -> list[str]:
@@ -593,13 +618,6 @@ def _from_read_under_to_mapping(
     return out
 
 
-def _current_manifest(table_dir: str) -> "dict | None":
-    v = current_version(table_dir)
-    if v < 1:
-        return None
-    return _read_manifest(table_dir, v)
-
-
 def _inherited_layout(
     manifest: "dict | None", reuse_files: "list[str]"
 ) -> "tuple[dict, dict]":
@@ -650,11 +668,7 @@ def snapshot_read(
     without the all-footers cost of mergeSchema — the manifest is the
     schema authority, exactly as in lakehouse formats.
     """
-    version = snapshot_resolve(table_dir, version)
-    v = version if version is not None else current_version(table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
-    manifest = _read_manifest(table_dir, v)
+    _, manifest = _head(table_dir, snapshot_resolve(table_dir, version))
     schema = _schema_of(manifest)
     files = manifest["files"]
     if key_range is not None:
@@ -792,13 +806,12 @@ def snapshot_upsert(
     """
     from pyspark.sql import functions as F
 
-    cur_v = current_version(table_dir)
-    if cur_v < 1:
+    cur_v, cur_manifest = _head(table_dir, empty_ok=True)
+    if cur_manifest is None:
         return snapshot_write(
             batch.dropDuplicates([key_col]), table_dir, stats_col=key_col
         )
 
-    cur_manifest = _read_manifest(table_dir, cur_v)
     cur_files = cur_manifest["files"]
     cur_schema = _schema_of(cur_manifest)
     del_list = sorted(set(delete_keys or ()))
@@ -1018,28 +1031,20 @@ def snapshot_compact(
     """Compact the latest version's small files into ~target-size files,
     committed as a new version with IDENTICAL rows.
 
-    The lakehouse OPTIMIZE step: grouping uses the same greedy bin-pack
-    as operators/compaction.py (files already >= target stay untouched
+    The lakehouse OPTIMIZE step: small files are grouped by
+    :func:`_compaction_groups` (files already >= target stay untouched
     and are reused by reference); each group is rewritten by one
     coalesced write.  Readers of old versions are unaffected — their
     manifests still name the original files (vacuum reclaims them only
     once no live manifest references them).  Returns the new version.
     """
-    from flow_spark.operators.compaction import plan_compaction
-
-    v = current_version(table_dir)
-    files = snapshot_files(table_dir, v)
-    sizes = [(f, os.path.getsize(f)) for f in files]
+    v, cur_manifest = _head(table_dir)
+    sizes = [(f, os.path.getsize(f)) for f in cur_manifest["files"]]
     small = [(f, s) for f, s in sizes if s < target_bytes]
     keep = [f for f, s in sizes if s >= target_bytes]
     if len(small) <= 1:
         return v  # nothing to compact
-    plan = plan_compaction(
-        spark.createDataFrame(small, "path string, size long"), target_bytes
-    )
-    groups: dict[int, list[str]] = {}
-    for r in plan.collect():  # bounded by file count
-        groups.setdefault(r.group, []).append(r.path)
+    groups = _compaction_groups(small, target_bytes)
     write_dir = os.path.join(table_dir, DATA_DIR, uuid.uuid4().hex[:12])
     # group reads use the manifest schema: a group mixing files from
     # before and after a column was added rewrites under the FULL schema
@@ -1047,7 +1052,6 @@ def snapshot_compact(
     # the narrower schema and lose the evolved column's data.  Partitioned
     # files read through the manifest's basePath grouping, so their path
     # columns land in the compacted files' PAYLOAD with real values.
-    cur_manifest = _read_manifest(table_dir, v)
     cur_schema = _schema_of(cur_manifest)
     for gi, gfiles in sorted(groups.items()):
         _physicalize(
@@ -1082,10 +1086,7 @@ def snapshot_compact(
         ):
             if all(isinstance(x, (int, float, str)) for x in (r[1], r[2])):
                 stats[r[0].removeprefix("file:")] = [r[1], r[2]]
-    version = v + 1
     manifest = {
-        "version": version,
-        "committed_at": time.time(),
         "files": keep + new_files,
         "schema": prev["schema"],
         "stats": stats,
@@ -1098,16 +1099,27 @@ def snapshot_compact(
         # physical names, and the rewritten groups were re-written
         # physicalized above — the mapping must survive the commit
         manifest["column_mapping"] = prev["column_mapping"]
-    if keep and prev.get("retired_physical"):
-        # kept files may still carry retired physical columns
-        manifest["retired_physical"] = prev["retired_physical"]
-    # kept (uncompacted) files still need their deletion vectors; the
+    # kept files inherit their deletion vectors and retired names; the
     # rewritten groups were read DV-filtered, so their new files are
     # clean and no DV path can match them
-    if keep and prev.get("dv_dirs"):
-        manifest["dv_dirs"] = prev["dv_dirs"]
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
-    return version
+    return _commit(table_dir, v, manifest)
+
+
+def _compaction_groups(
+    files: "list[tuple[str, int]]", target_bytes: int
+) -> "dict[int, list[str]]":
+    """Greedy bin-pack of ``(path, size)`` pairs into ~target groups.
+
+    Files are taken by size descending, then path; a file's group is
+    ``floor(exclusive running size sum / target)``.  A group's total is
+    below target + one file, a file larger than target sits alone, and
+    no file is ever split.  Driver arithmetic over the file list."""
+    groups: "dict[int, list[str]]" = {}
+    before = 0
+    for path, size in sorted(files, key=lambda fs: (-fs[1], fs[0])):
+        groups.setdefault(before // target_bytes, []).append(path)
+        before += size
+    return groups
 
 
 def snapshot_vacuum(
@@ -1286,7 +1298,7 @@ def snapshot_stage(df: DataFrame, table_dir: str, branch: str = "audit") -> list
     # publish commit lists them next to the mapped files, and every
     # read scans with the physical-name schema; the marker schema stays
     # LOGICAL (it becomes the published manifest's schema)
-    _physicalize(df, _current_manifest(table_dir)).write.mode(
+    _physicalize(df, _head(table_dir, empty_ok=True)[1]).write.mode(
         "error"
     ).parquet(write_dir)
     files = sorted(
@@ -1315,7 +1327,9 @@ def snapshot_staged_read(
     LOGICAL column names — auditors never see physical mapping)."""
     with open(_staged_marker(table_dir, branch)) as fh:
         files = json.load(fh)["files"]
-    return _logicalize(spark.read.parquet(*files), _current_manifest(table_dir))
+    return _logicalize(
+        spark.read.parquet(*files), _head(table_dir, empty_ok=True)[1]
+    )
 
 
 def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
@@ -1330,18 +1344,13 @@ def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
     marker_path = _staged_marker(table_dir, branch)
     with open(marker_path) as fh:
         marker = json.load(fh)
-    prev = current_version(table_dir)
-    prev_manifest: "dict | None" = None
-    if prev >= 1:
-        prev_manifest = _read_manifest(table_dir, prev)
+    prev, prev_manifest = _head(table_dir, empty_ok=True)
     prev_files = prev_manifest["files"] if prev_manifest else []
     # inherited files keep their partition metadata (staged files are
-    # written plain by snapshot_stage and need none)
+    # written plain by snapshot_stage and need none) and their deletion
+    # vectors (_commit_manifest)
     partitions, bases = _inherited_layout(prev_manifest, prev_files)
-    version = prev + 1
     manifest = {
-        "version": version,
-        "committed_at": time.time(),
         "files": prev_files + marker["files"],
         "schema": marker["schema"],
         "stats": {},
@@ -1349,10 +1358,6 @@ def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
         "partitions": partitions,
         "bases": bases,
     }
-    # inherited files keep their deletion vectors too — dropping them
-    # here would resurrect merge-on-read-deleted rows on publish
-    if prev_files and prev_manifest and prev_manifest.get("dv_dirs"):
-        manifest["dv_dirs"] = prev_manifest["dv_dirs"]
     # the same retirement/hijack discipline as snapshot_write (review:
     # publish was a bypass): a staged column matching a retired physical
     # name still present in inherited files would resolve stale bytes,
@@ -1383,7 +1388,7 @@ def snapshot_publish(table_dir: str, branch: str = "audit") -> int:
             manifest["column_mapping"] = mapping
         if retired:
             manifest["retired_physical"] = sorted(retired)
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
+    version = _commit(table_dir, prev, manifest)
     os.unlink(marker_path)
     return version
 
@@ -1398,22 +1403,21 @@ def snapshot_rollback(table_dir: str, to_version: int) -> int:
     target version's file set again.  The target manifest's files,
     schema, stats and partition layout all carry forward verbatim —
     rolling back a hive-partitioned table keeps its partition columns
-    readable (the ADVICE round-3 interop contract).
+    readable (the ADVICE round-3 interop contract).  So do its deletion
+    vectors and retired names, even when it has none: the head's would
+    re-delete rows the target still has, or retire a column it reads.
 
     Raises :class:`ConcurrentSnapshotWrite` on a commit race and
     ``FileNotFoundError`` if ``to_version`` was never committed.
     """
-    cur = current_version(table_dir)
     target = _read_manifest(table_dir, to_version)
-    version = cur + 1
     manifest = {
         **target,
-        "version": version,
-        "committed_at": time.time(),
+        "dv_dirs": target.get("dv_dirs", []),
+        "retired_physical": target.get("retired_physical", []),
         "restored_version": to_version,
     }
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
-    return version
+    return _commit(table_dir, current_version(table_dir), manifest)
 
 
 def snapshot_abort_staged(table_dir: str, branch: str = "audit") -> int:
@@ -1504,8 +1508,7 @@ def snapshot_optimize_zorder(
 
     from flow_spark.functions.layout import morton_interleave16
 
-    v = current_version(table_dir)
-    cur_manifest = _read_manifest(table_dir, v)
+    v, cur_manifest = _head(table_dir)
     if not cur_manifest["files"]:
         raise ValueError(
             f"snapshot_optimize_zorder: version {v} of {table_dir} is empty"
@@ -1568,8 +1571,6 @@ def snapshot_optimize_zorder(
         prev_cs = cur_manifest.get("col_stats") or {}
         partitions, bases = _inherited_layout(cur_manifest, reuse)
         manifest = {
-            "version": v + 1,
-            "committed_at": time.time(),
             "files": reuse,
             "schema": cur_manifest["schema"],
             "stats": {},
@@ -1582,12 +1583,7 @@ def snapshot_optimize_zorder(
             "bases": bases,
             "clustered": {"cols": [xcol, ycol], "files": reuse},
         }
-        if cur_manifest.get("dv_dirs"):
-            manifest["dv_dirs"] = cur_manifest["dv_dirs"]
-        if cur_manifest.get("retired_physical"):
-            manifest["retired_physical"] = cur_manifest["retired_physical"]
-        _commit_manifest(manifest, _manifest_path(table_dir, v + 1))
-        return v + 1
+        return _commit(table_dir, v, manifest)
     if not counts:
         raise ValueError(
             f"snapshot_optimize_zorder: version {v} of {table_dir} has no rows"
@@ -1642,10 +1638,9 @@ def snapshot_optimize_zorder(
                 if f in (prev_cs.get(c) or {}):
                     col_stats[c][f] = prev_cs[c][f]
     partitions, bases = _inherited_layout(cur_manifest, reuse)
-    version = v + 1
+    # reused files keep their deletion vectors and retired names
+    # (_commit_manifest); the rewritten subset materialized its deletes
     manifest = {
-        "version": version,
-        "committed_at": time.time(),
         "files": reuse + files,
         "schema": cur_manifest["schema"],
         "stats": {},
@@ -1655,15 +1650,7 @@ def snapshot_optimize_zorder(
         "bases": bases,
         "clustered": {"cols": [xcol, ycol], "files": reuse + files},
     }
-    if reuse and cur_manifest.get("dv_dirs"):
-        # reused files still need their deletion vectors (the rewritten
-        # subset materialized its deletes; stale path entries anti-join
-        # nothing)
-        manifest["dv_dirs"] = cur_manifest["dv_dirs"]
-    if reuse and cur_manifest.get("retired_physical"):
-        manifest["retired_physical"] = cur_manifest["retired_physical"]
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
-    return version
+    return _commit(table_dir, v, manifest)
 
 
 # ---- multi-table atomic commits --------------------------------------------
@@ -1907,8 +1894,8 @@ def snapshot_write_partitioned(
 
     from pyspark.sql import functions as F
 
-    os.makedirs(os.path.join(table_dir, MANIFEST_DIR), exist_ok=True)
-    head_manifest = _current_manifest(table_dir) or {}
+    prev_version, prev_manifest = _head(table_dir, empty_ok=True)
+    head_manifest = prev_manifest or {}
     ents = _parse_partition_spec(spec)
     for e in ents:
         if e["source"] not in df.columns:
@@ -1965,9 +1952,9 @@ def snapshot_write_partitioned(
     # persistent constraints enforce on partitioned writes too (the
     # basePath read recovers the spec columns a constraint may mention);
     # read them from the SAME head manifest the transform/mapping checks
-    # used — a second _current_manifest read here would race a
-    # concurrent commit into checking constraints from a different
-    # version than the one validated above
+    # used — a second head read here would race a concurrent commit
+    # into checking constraints from a different version than the one
+    # validated above
     persistent = head_manifest.get("constraints") or []
     if persistent and files:
         chk = (
@@ -2000,14 +1987,10 @@ def snapshot_write_partitioned(
             vals[k] = unquote(v)
         partitions[f] = vals
         bases[f] = write_dir
-    prev_version = current_version(table_dir)
-    dv_dirs = None
     retired: list = []
-    if prev_version >= 1 and reuse_files:
-        prev_manifest = _read_manifest(table_dir, prev_version)
+    if prev_manifest is not None and reuse_files:
         prev_parts = prev_manifest.get("partitions", {})
         prev_bases = prev_manifest.get("bases", {})
-        dv_dirs = prev_manifest.get("dv_dirs")
         prev_cols = _schema_of(prev_manifest).fieldNames()
         retired = sorted(
             set(prev_manifest.get("retired_physical") or [])
@@ -2026,10 +2009,7 @@ def snapshot_write_partitioned(
             partitions.setdefault(f, prev_parts.get(f, {}))
             if f in prev_bases:
                 bases[f] = prev_bases[f]
-    version = prev_version + 1
     manifest = {
-        "version": version,
-        "committed_at": time.time(),
         "files": list(reuse_files or []) + files,
         "schema": df.schema.json(),
         "stats": {},
@@ -2039,12 +2019,9 @@ def snapshot_write_partitioned(
     }
     if transforms:
         manifest["partition_transforms"] = transforms
-    if dv_dirs:  # reused files keep needing their deletion vectors
-        manifest["dv_dirs"] = dv_dirs
     if retired:  # reused files may still carry retired physical columns
         manifest["retired_physical"] = retired
-    _commit_manifest(manifest, _manifest_path(table_dir, version))
-    return version
+    return _commit(table_dir, prev_version, manifest)
 
 
 def snapshot_read_pruned(
@@ -2166,16 +2143,9 @@ def snapshot_clone(source_dir: str, target_dir: str) -> int:
     """
     if current_version(target_dir) >= 1:
         raise FileExistsError(f"{target_dir} already has committed versions")
-    src_v = current_version(source_dir)
-    if src_v < 1:
-        raise FileNotFoundError(f"no committed versions in {source_dir}")
-    manifest = _read_manifest(source_dir, src_v)
-    os.makedirs(os.path.join(target_dir, MANIFEST_DIR), exist_ok=True)
-    manifest = dict(manifest)
-    manifest["version"] = 1
-    manifest["committed_at"] = time.time()
+    src_v, manifest = _head(source_dir)
     manifest["cloned_from"] = {"table": source_dir, "version": src_v}
-    _commit_manifest(manifest, _manifest_path(target_dir, 1))
+    _commit(target_dir, 0, manifest)
     # back-reference so the SOURCE knows its borrowers: an erasure on
     # the source must reach every copy, and without this record the
     # source has no way to even name them (best-effort local registry;
@@ -2211,15 +2181,9 @@ def _rename_meta_commit(table_dir: str, mutate) -> int:
     """Commit a METADATA-ONLY schema-evolution version: same files, same
     stats values, new logical schema / column mapping.  ``mutate`` edits
     the manifest dict in place."""
-    v = current_version(table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
-    manifest = dict(_read_manifest(table_dir, v))
+    v, manifest = _head(table_dir)
     mutate(manifest)
-    manifest["version"] = v + 1
-    manifest["committed_at"] = time.time()
-    _commit_manifest(manifest, _manifest_path(table_dir, v + 1))
-    return v + 1
+    return _commit(table_dir, v, manifest)
 
 
 def _constraints_referencing(manifest: dict, col: str) -> "list[str]":
@@ -2549,8 +2513,7 @@ def snapshot_build_bloom(
     from flow_spark.functions.hashing import portable_hash64
     from flow_spark.operators.dedup import MH_P, mh_coeffs
 
-    v = version if version is not None else current_version(table_dir)
-    manifest = _read_manifest(table_dir, v)
+    v, manifest = _head(table_dir, version)
     all_files = manifest["files"]
     # the driver-side probe hashes Python str(value) and MUST render
     # identically to the executor-side CAST(col AS STRING): true for
@@ -2716,10 +2679,6 @@ def snapshot_build_bloom(
         return snapshot_build_bloom(
             spark, table_dir, col, bits="auto", k=k, version=version
         )
-    new_version = v + 1
-    manifest = dict(manifest)
-    manifest["version"] = new_version
-    manifest["committed_at"] = time.time()
     manifest["bloom"] = {
         "col": col,
         "bits": bits,
@@ -2727,8 +2686,7 @@ def snapshot_build_bloom(
         "filters": filters,
         "ndv": ndv,  # geometry-independent: future rebuilds size without a scan
     }
-    _commit_manifest(manifest, _manifest_path(table_dir, new_version))
-    return new_version
+    return _commit(table_dir, v, manifest)
 
 
 def bloom_probe_positions(value, bits: int, k: int) -> "list[int]":
@@ -2761,8 +2719,7 @@ def snapshot_bloom_candidates(
     """
     import base64
 
-    v = version if version is not None else current_version(table_dir)
-    manifest = _read_manifest(table_dir, v)
+    v, manifest = _head(table_dir, version)
     bloom = manifest.get("bloom")
     if not bloom:
         raise ValueError(f"version {v} of {table_dir} has no bloom index")
@@ -2790,8 +2747,7 @@ def snapshot_read_point(
     are eliminated here — the index can only over-scan, never miss)."""
     from pyspark.sql import functions as F
 
-    v = version if version is not None else current_version(table_dir)
-    manifest = _read_manifest(table_dir, v)
+    v, manifest = _head(table_dir, version)
     col = manifest["bloom"]["col"]  # KeyError if unindexed: same contract
     files, _total = snapshot_bloom_candidates(table_dir, value, v)
     schema = _schema_of(manifest)
@@ -2834,10 +2790,7 @@ def snapshot_delete(
     """
     from pyspark.sql import functions as F
 
-    cur_v = current_version(table_dir)
-    if cur_v < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
-    manifest = _read_manifest(table_dir, cur_v)
+    cur_v, manifest = _head(table_dir)
     schema = _schema_of(manifest)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     dv_dir = os.path.join(table_dir, "_dv", uuid.uuid4().hex[:12])
@@ -2850,16 +2803,14 @@ def snapshot_delete(
         .write.mode("error")
         .parquet(dv_dir)
     )
-    new_version = cur_v + 1
-    new_manifest = dict(manifest)
-    new_manifest["version"] = new_version
-    new_manifest["committed_at"] = time.time()
-    new_manifest["dv_dirs"] = list(manifest.get("dv_dirs") or []) + [dv_dir]
     # a bloom index keyed on data files stays VALID under merge-on-read
     # deletes for pruning (it can only over-approximate membership), so
     # it carries forward with the files it was built from.
-    _commit_manifest(new_manifest, _manifest_path(table_dir, new_version))
-    return new_version
+    return _commit(
+        table_dir,
+        cur_v,
+        {**manifest, "dv_dirs": list(manifest.get("dv_dirs") or []) + [dv_dir]},
+    )
 
 
 def snapshot_purge_key(
@@ -2924,9 +2875,7 @@ def snapshot_purge_key(
 
     if not values:
         raise ValueError("values must be non-empty")
-    head = current_version(table_dir)
-    if head < 1:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
+    head, _ = _head(table_dir)
     staged_dir = os.path.join(table_dir, STAGED_DIR)
     if os.path.isdir(staged_dir) and any(
         f.endswith(".json") for f in os.listdir(staged_dir)
@@ -3367,15 +3316,8 @@ def snapshot_append(
     """
     from pyspark.sql import functions as F
 
-    os.makedirs(os.path.join(table_dir, MANIFEST_DIR), exist_ok=True)
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version must be set together")
-
-    def _head() -> "tuple[int, dict | None]":
-        v = current_version(table_dir)
-        if v < 1:
-            return 0, None
-        return v, _read_manifest(table_dir, v)
 
     def _is_replay(head: "dict | None") -> bool:
         if txn_app is None or head is None:
@@ -3383,7 +3325,7 @@ def snapshot_append(
         last = (head.get("txns") or {}).get(txn_app)
         return last is not None and int(last) >= int(txn_version)
 
-    base_version, base = _head()
+    base_version, base = _head(table_dir, empty_ok=True)
     if _is_replay(base):
         return base_version
     if stats_col is None:
@@ -3479,7 +3421,7 @@ def snapshot_append(
 
     # -- commit loop: rebuild the manifest against the current head ------
     for _ in range(max(1, max_retries)):
-        head_version, head = _head()
+        head_version, head = _head(table_dir, empty_ok=True)
         if _is_replay(head):
             # another writer committed this same transaction while we
             # were writing: our files are unreferenced orphans (vacuum
@@ -3529,8 +3471,6 @@ def snapshot_append(
         stats.update(own_stats)
         partitions, bases = _inherited_layout(head, head_files)
         manifest = {
-            "version": head_version + 1,
-            "committed_at": time.time(),
             "files": head_files + files,
             "schema": df.schema.json(),
             "stats": stats,
@@ -3540,21 +3480,14 @@ def snapshot_append(
         }
         if txn_app is not None:
             manifest["txns"] = {txn_app: int(txn_version)}
-        if head and head.get("dv_dirs"):
-            manifest["dv_dirs"] = head["dv_dirs"]
         if head and head.get("col_stats"):
             # secondary per-column indexes survive for head files only —
             # this append's files have no entries and stay candidates
             manifest["col_stats"] = head["col_stats"]
         if mapping:
             manifest["column_mapping"] = mapping
-        if head and head.get("retired_physical"):
-            manifest["retired_physical"] = head["retired_physical"]
         try:
-            _commit_manifest(
-                manifest, _manifest_path(table_dir, head_version + 1)
-            )
-            return head_version + 1
+            return _commit(table_dir, head_version, manifest)
         except ConcurrentSnapshotWrite:
             continue
     raise ConcurrentSnapshotWrite(
@@ -3590,9 +3523,7 @@ def snapshot_stats_agg(
     """
     from pyspark.sql import functions as F
 
-    if version is None:
-        version = current_version(table_dir)
-    manifest = _read_manifest(table_dir, version)
+    version, manifest = _head(table_dir, version)
     files = manifest.get("files") or []
     mapping = manifest.get("column_mapping") or {}
     phys_col = mapping.get(col, col)
@@ -3667,10 +3598,9 @@ def snapshot_set_constraints(
 
     if not constraints:
         raise ValueError("constraints must be a non-empty list")
-    version = current_version(table_dir)
-    if version < 1:
+    version, manifest = _head(table_dir, empty_ok=True)
+    if manifest is None:
         raise ValueError("cannot declare constraints on an empty table")
-    manifest = _read_manifest(table_dir, version)
     merged = list(
         dict.fromkeys([*(manifest.get("constraints") or []), *constraints])
     )
@@ -3690,12 +3620,7 @@ def snapshot_set_constraints(
         raise ConstraintViolation(
             f"constraint declaration rejected, violating rows: {violated}"
         )
-    manifest = dict(manifest)
-    manifest["version"] = version + 1
-    manifest["committed_at"] = time.time()
-    manifest["constraints"] = merged
-    _commit_manifest(manifest, _manifest_path(table_dir, version + 1))
-    return version + 1
+    return _commit(table_dir, version, {**manifest, "constraints": merged})
 
 
 def snapshot_drop_constraints(
@@ -3706,20 +3631,14 @@ def snapshot_drop_constraints(
     ones) via a metadata-only commit.  The explicit empty list in the
     new manifest overrides the inheritance in :func:`_commit_manifest`,
     so later commits stop enforcing."""
-    version = current_version(table_dir)
-    if version < 1:
+    version, manifest = _head(table_dir, empty_ok=True)
+    if manifest is None:
         raise ValueError("empty table")
-    manifest = _read_manifest(table_dir, version)
     have = manifest.get("constraints") or []
     keep = (
         [] if constraints is None else [c for c in have if c not in constraints]
     )
-    manifest = dict(manifest)
-    manifest["version"] = version + 1
-    manifest["committed_at"] = time.time()
-    manifest["constraints"] = keep
-    _commit_manifest(manifest, _manifest_path(table_dir, version + 1))
-    return version + 1
+    return _commit(table_dir, version, {**manifest, "constraints": keep})
 
 
 # ---- named refs (Iceberg tags) ----------------------------------------------
@@ -3833,10 +3752,7 @@ def snapshot_read_hidden(
     """
     from pyspark.sql import functions as F
 
-    version = snapshot_resolve(table_dir, version)
-    if version is None:
-        version = current_version(table_dir)
-    manifest = _read_manifest(table_dir, version)
+    _, manifest = _head(table_dir, snapshot_resolve(table_dir, version))
     transforms = manifest.get("partition_transforms") or {}
     parts = manifest.get("partitions", {})
     # source predicate -> derived partition predicates

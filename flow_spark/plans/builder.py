@@ -314,14 +314,16 @@ class Pipeline:
         if scheme in ("tcp", "udp", "unix", "http") and streaming:
             # live network ingest: start the asyncio bridge on the configured
             # port (receiver_tcp.go's accept loop re-homed outside Spark) and
-            # stream its spool.  tcp, udp and unix share the \r\n-framed
-            # record contract; http takes one message per POST, its query
-            # parameters as meta (SURVEY §2.1 #2-5).
+            # stream its spool.  tcp and unix share the \r\n-framed record
+            # contract; udp scans each datagram into newline-separated
+            # records and acks nothing; http takes one message per POST, its
+            # query parameters as meta (SURVEY §2.1 #2-5).
             import tempfile
 
             from flow_spark.sources.bridge import (
                 HttpBridge,
                 SocketBridge,
+                UdpBridge,
                 UnixBridge,
                 http_spool_stream,
                 spool_stream,
@@ -337,7 +339,8 @@ class Pipeline:
                 ).start()
             else:
                 host, _, port = rest.rpartition(":")
-                bridge = (HttpBridge if scheme == "http" else SocketBridge)(
+                kind = {"http": HttpBridge, "udp": UdpBridge}.get(scheme, SocketBridge)
+                bridge = kind(
                     spool,
                     host=host or "127.0.0.1",
                     port=int(port or 0),

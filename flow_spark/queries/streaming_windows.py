@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from flow_spark.catalog import load_table, session_memo, stream_table
 from flow_spark.queries.registry import register
-from flow_spark.session import _env_int
 
 
 def _drain(q, timeout: int = 1800) -> None:
@@ -49,7 +48,7 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 #: held by ``_state_parts`` from narrowing the session to restoring it
 _STATE_PARTS_LOCK = threading.Lock()
 
-#: the widest default state width (see ``_state_parts``)
+#: the widest state width (see ``_state_parts``)
 MAX_STATE_PARTS = 8
 
 
@@ -62,7 +61,7 @@ def _state_parts(spark: SparkSession):
 
     Every state partition pays a state-store load and commit plus an
     ``applyInPandasWithState`` Python round trip PER micro-batch, whatever
-    rows it holds, so the width sets each batch's fixed cost.  The default
+    rows it holds, so the width sets each batch's fixed cost.  The width
     is one wave of tasks: ``min(MAX_STATE_PARTS, defaultParallelism)``.
     A width above the task slots runs every batch in two or more waves.
     On a 4-core ``local[4]`` session width 8 ran the warm GCRA state stage
@@ -76,18 +75,16 @@ def _state_parts(spark: SparkSession):
     sessionize/TWA/funnel/GCRA at sf0.1 ran 1.6-2.4x faster at 8 than at
     32 (15/16 ABBA pairings).
 
-    ``SPARK_GRAFT_STATE_PARTS`` overrides the default, for example to size
-    the state to a large key volume.  The width never changes results:
-    state is bucketed per key (``stateful.STATE_BUCKETS``), and a
-    restarted checkpoint keeps the width recorded in its offset log.
+    The width never changes results: state is bucketed per key
+    (``stateful.STATE_BUCKETS``), and a restarted checkpoint keeps the
+    width recorded in its offset log.
 
     One lock spans narrow -> start -> restore: two overlapping starts
     could otherwise restore in the wrong order and leave the session
     narrowed.  A batch query another thread plans inside that window still
     gets the narrow width.
     """
-    default = min(MAX_STATE_PARTS, spark.sparkContext.defaultParallelism)
-    width = str(_env_int("SPARK_GRAFT_STATE_PARTS", default, 1))
+    width = str(min(MAX_STATE_PARTS, spark.sparkContext.defaultParallelism))
     conf = spark.conf
     with _STATE_PARTS_LOCK:
         prev = conf.get("spark.sql.shuffle.partitions")

@@ -5,16 +5,18 @@ receiver contract (accept \r\n-framed records over TCP, reply a status per
 message — receiver_tcp.go:177-191 framing, :24-42 status wire strings) is
 implemented as a thin asyncio process OUTSIDE Spark: clients -> bridge ->
 spool files -> `readStream` (SURVEY.md §3.2/§4.2.3).  The ack inverts:
-the bridge replies OK once the record is durably spooled (accepted for
-delivery); end-to-end delivery verdicts remain the engine's
-delivery-result stream.
+the bridge replies OK once the record is accepted into its in-memory
+buffer, BEFORE it reaches a spool file; end-to-end delivery verdicts
+remain the engine's delivery-result stream.
 
 At scale the spool is Kafka (sources/formats.py::read_kafka_stream plugs
-in unchanged); the file spool keeps the harness dependency-free.  Spool
-files are written to a temp name and atomically renamed so Spark's file
-source never reads a partial file — that rename is the durability point,
-and batching (`flush_every`) amortizes it: one fsync per N messages, not
-per message, which is the same batch-ack trade Kafka producers make.
+in unchanged); the file spool keeps the harness dependency-free.  The
+buffer is written out every `flush_every` records (and on `flush()` /
+`stop()`), to a temp name then atomically renamed, so Spark's file
+source never reads a partial file.  Nothing calls fsync, and nothing
+flushes on a timer: a crash loses the buffered (already acked) records,
+and at a low message rate acked records wait in the buffer until the
+Nth arrives.
 """
 
 from __future__ import annotations
@@ -160,6 +162,45 @@ class SocketBridge:
                 self._loop.call_soon_threadsafe(self._loop.stop)
         if self._thread is not None:
             self._thread.join(timeout=10)
+
+
+class UdpBridge(SocketBridge, asyncio.DatagramProtocol):
+    """Datagram flavor — receiver_udp.go:49-61: each datagram is scanned
+    into newline-separated records (a trailing \r dropped, blank lines
+    skipped), each spooled like a TCP record.  Fire-and-forget: nothing
+    is sent back."""
+
+    def datagram_received(self, data: bytes, addr) -> None:
+        for line in data.split(b"\n"):
+            record = line.rstrip(b"\r")
+            if record:
+                self._append(record.decode("utf-8", errors="replace"))
+
+    def start(self) -> "UdpBridge":
+        started = threading.Event()
+
+        def run() -> None:
+            self._loop = asyncio.new_event_loop()
+            asyncio.set_event_loop(self._loop)
+            transport, _ = self._loop.run_until_complete(
+                self._loop.create_datagram_endpoint(
+                    lambda: self, local_addr=(self.host, self.port)
+                )
+            )
+            self.port = transport.get_extra_info("sockname")[1]
+            started.set()
+            try:
+                self._loop.run_forever()
+            finally:
+                transport.close()  # the socket closes on the next loop turn
+                self._loop.run_until_complete(asyncio.sleep(0))
+                self._loop.close()
+
+        self._thread = threading.Thread(target=run, daemon=True, name="flow-udp-bridge")
+        self._thread.start()
+        if not started.wait(10):
+            raise RuntimeError("udp bridge failed to start")
+        return self
 
 
 class UnixBridge(SocketBridge):

@@ -451,22 +451,10 @@ class SnapshotCDCDataSource(DataSource):
         return "snapshot_cdc"
 
     def _fields(self) -> "tuple[str, list[tuple[str, str]]]":
-        import json as _json
+        from flow_spark.operators.snapshots import _head, _schema_of
 
-        from pyspark.sql.types import StructType
-
-        from flow_spark.operators.snapshots import (
-            _manifest_path,
-            current_version,
-        )
-
-        table_dir = self.options["table_dir"]
         key = self.options["key"]
-        v = current_version(table_dir)
-        if v < 1:
-            raise ValueError(f"no committed versions in {table_dir}")
-        with open(_manifest_path(table_dir, v)) as fh:
-            schema = StructType.fromJson(_json.loads(_json.load(fh)["schema"]))
+        schema = _schema_of(_head(self.options["table_dir"])[1])
         types = {f.name: f.dataType.simpleString() for f in schema.fields}
         if key not in types:
             raise ValueError(f"key column {key!r} not in table schema")

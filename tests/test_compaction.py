@@ -1,111 +1,35 @@
-"""Compaction planner: pack real written small files into ~target groups
-and prove the rewrite preserves every row.
-"""
+"""Compaction packing (``snapshots._compaction_groups``): the greedy
+exclusive-cumsum bin-pack that ``snapshot_compact`` groups small files
+with.  Pure driver arithmetic, so no JVM; ``test_snapshots.py`` checks
+that compaction keeps every row."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from flow_spark.catalog import load_table
-from flow_spark.operators.compaction import compaction_summary, plan_compaction
-
-
-def _list_files(root: str):
-    out = []
-    for dirpath, _dirs, names in os.walk(root):
-        for n in names:
-            if n.endswith(".parquet"):
-                p = os.path.join(dirpath, n)
-                out.append((p, os.path.getsize(p)))
-    return out
-
-
-@pytest.fixture()
-def small_files(spark, sf_dir, tmp_path):
-    """Write events over-parallel (the real-world cause of small files)."""
-    out = str(tmp_path / "smallfiles")
-    ev = load_table(spark, sf_dir, "events").repartition(24)
-    ev.write.partitionBy("event_type").parquet(out)
-    return out
-
-
-def test_plan_respects_target_and_partitions(spark, small_files):
-    listing = _list_files(small_files)
-    assert len(listing) > 40  # over-parallel write really fragmented it
-    files = spark.createDataFrame(listing, "path string, size long").withColumn(
-        "ptn", F.regexp_extract("path", r"event_type=([^/]+)", 1)
-    )
-    target = 64 * 1024
-    plan = plan_compaction(files, target, partition_col="ptn")
-    summary = compaction_summary(plan, partition_col="ptn").collect()
-    max_file = max(s for _, s in listing)
-    for row in summary:
-        # greedy bound: a group never exceeds target + one file
-        assert row.total_bytes < target + max_file
-    # a partition's bytes end up in ceil(bytes/target)-ish groups, not 1-per-file
-    by_ptn = {}
-    for p, s in listing:
-        ptn = p.split("event_type=")[1].split("/")[0]
-        by_ptn[ptn] = by_ptn.get(ptn, 0) + s
-    groups_per_ptn = {}
-    for row in summary:
-        groups_per_ptn[row.ptn] = groups_per_ptn.get(row.ptn, 0) + 1
-    for ptn, total in by_ptn.items():
-        assert groups_per_ptn[ptn] <= max(1, total // target + 2)
-
-
-def test_rewrite_preserves_rows(spark, small_files):
-    listing = _list_files(small_files)
-    files = spark.createDataFrame(listing, "path string, size long")
-    plan = plan_compaction(files, 64 * 1024)
-    one_group = [r.path for r in plan.filter(F.col("group") == 0).collect()]
-    assert one_group
-    n_direct = spark.read.parquet(*one_group).count()
-    import pyarrow.parquet as pq
-
-    n_meta = sum(pq.ParquetFile(p).metadata.num_rows for p in one_group)
-    assert n_direct == n_meta
-
-
-def test_oversize_file_sits_alone(spark):
-    files = spark.createDataFrame(
-        [("big", 1000), ("a", 10), ("b", 10), ("c", 10)], "path string, size long"
-    )
-    plan = {r.path: r.group for r in plan_compaction(files, 100).collect()}
-    # the oversize file fills group 0 by itself; the small ones share the next
-    assert plan["big"] == 0
-    assert plan["a"] == plan["b"] == plan["c"] == 10  # floor(1000/100)
-
-
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from flow_spark.operators.snapshots import _compaction_groups
 
-@pytest.mark.slow
+
+def test_oversize_file_sits_alone():
+    groups = _compaction_groups([("big", 1000), ("a", 10), ("b", 10), ("c", 10)], 100)
+    # the oversize file fills group 0 by itself; the small ones share the next
+    assert groups == {0: ["big"], 10: ["a", "b", "c"]}  # floor(1000/100)
+
+
 @given(
     sizes=st.lists(st.integers(min_value=1, max_value=500), min_size=1, max_size=30),
     target=st.integers(min_value=10, max_value=300),
 )
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_packing_invariants(spark, sizes, target):
-    files = spark.createDataFrame(
-        [(f"f{i}", s) for i, s in enumerate(sizes)], "path string, size long"
-    )
-    rows = plan_compaction(files, target).collect()
-    assert len(rows) == len(sizes)  # every file assigned exactly once
-    by_group = {}
-    for r in rows:
-        by_group.setdefault(r.group, []).append(r.size)
+@settings(max_examples=15, deadline=None)
+def test_packing_invariants(sizes, target):
+    groups = _compaction_groups([(f"f{i}", s) for i, s in enumerate(sizes)], target)
+    paths = sorted(p for ps in groups.values() for p in ps)
+    assert paths == sorted(f"f{i}" for i in range(len(sizes)))  # each file once
+    size_of = {f"f{i}": s for i, s in enumerate(sizes)}
     max_file = max(sizes)
-    for g, ss in by_group.items():
+    for ps in groups.values():
         # greedy bound: group total < target + one file
-        assert sum(ss) < target + max_file
+        assert sum(size_of[p] for p in ps) < target + max_file
     # group ids are the exclusive-cumsum quotients: contiguous from 0
-    assert min(by_group) == 0
+    assert min(groups) == 0

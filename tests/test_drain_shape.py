@@ -55,14 +55,18 @@ def _state_widths(spark, sf_dir) -> set[int]:
     return widths
 
 
-def test_state_runs_in_one_wave(spark, sf_dir, monkeypatch):
+def test_state_runs_in_one_wave(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PARTS", raising=False)
-    one_wave = min(streaming_windows.MAX_STATE_PARTS, spark.sparkContext.defaultParallelism)
-    assert _state_widths(spark, sf_dir) == {one_wave}
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTS", "3")
-    assert _state_widths(spark, sf_dir) == {3}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # a driver-built session keeps Spark's default width of 200
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        one_wave = min(
+            streaming_windows.MAX_STATE_PARTS, spark.sparkContext.defaultParallelism
+        )
+        assert _state_widths(spark, sf_dir) == {one_wave}
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 @pytest.mark.parametrize("name", ["stream_gcra_throttle", "stream_twa"])

@@ -56,10 +56,11 @@ def test_reference_tcp_example_runs_live(spark, tmp_path):
 
 
 def test_reference_udp2tcp_example_delivers_over_socket(spark, tmp_path):
-    """udp2tcp-config.yml end-to-end with a REAL outbound socket: receiver
-    bridge ingests wire records, the default sink writer dispatches on the
-    sink's tcp:// bind (sink_head_factory parity) and delivers each body
-    \r\n-framed to a live downstream listener."""
+    """udp2tcp-config.yml end-to-end with REAL sockets: the udp:// receiver
+    takes datagrams (each newline-scanned into records, no ack), the
+    default sink writer dispatches on the sink's tcp:// bind
+    (sink_head_factory parity) and delivers each body \r\n-framed to a
+    live downstream listener."""
     import time
 
     from test_streaming import _CaptureServer
@@ -70,7 +71,7 @@ def test_reference_udp2tcp_example_delivers_over_socket(spark, tmp_path):
         spark,
         yaml_text,
         cli_overrides={
-            "actors.udp_rcv.params.bind": "tcp://127.0.0.1:0",
+            "actors.udp_rcv.params.bind": "udp://127.0.0.1:0",
             "actors.tcp_sink.params.bind": f"tcp://127.0.0.1:{srv.addr[1]}",
         },
     )
@@ -81,20 +82,26 @@ def test_reference_udp2tcp_example_delivers_over_socket(spark, tmp_path):
         # only after the records are spooled, or a query that starts
         # sooner than the client sends finds nothing and stops
         p.run_streaming(sink_writer=lambda name, df: staged.append((name, df)))
-        port = p._bridges[0].port
-        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
-            s.sendall(b"one\r\ntwo\r\n")
-            f = s.makefile("rb")
-            assert [f.readline().rstrip(b"\r\n") for _ in range(2)] == [b"OK"] * 2
-        p._bridges[0].flush()
+        bridge = p._bridges[0]
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
+            s.sendto(b"one\r\ntwo\n", ("127.0.0.1", bridge.port))
+            s.sendto(b"three", ("127.0.0.1", bridge.port))
+        deadline = time.time() + 15
+        while time.time() < deadline and bridge._seq < 3:
+            time.sleep(0.05)
+        bridge.flush()
         write = p.default_sink_writer(str(tmp_path / "ckpt"))
         queries = [write(name, df) for name, df in staged]
         for q in queries:
             q.processAllAvailable()
         deadline = time.time() + 15
-        while time.time() < deadline and srv.data().count(b"\r\n") < 2:
+        while time.time() < deadline and srv.data().count(b"\r\n") < 3:
             time.sleep(0.05)
-        assert sorted(r for r in srv.data().split(b"\r\n") if r) == [b"one", b"two"]
+        assert sorted(r for r in srv.data().split(b"\r\n") if r) == [
+            b"one",
+            b"three",
+            b"two",
+        ]
     finally:
         for q in queries:
             q.stop()

@@ -54,16 +54,9 @@ KEEP = {
     # marks where an image decoder plugs into extract_features' batch
     # loop; pillow/opencv are not installed
     "decode_image",
-    # test-only operator modules (compaction planner, row provenance,
-    # bucketed joins) with eleven tests between them; their removal is
-    # left to a change of its own (ROADMAP item 5)
-    "plan_compaction",
-    "compaction_summary",
-    "read_with_provenance",
-    "provenance_manifest",
-    "stable_example_id",
-    "write_bucketed",
-    "colocated_join",
+    # snapshot_compact's file packing; reached only through
+    # snapshot_compact above, and test_compaction.py checks it alone
+    "_compaction_groups",
 }
 
 _WORD = re.compile(r"[A-Za-z_]\w*")
@@ -108,9 +101,13 @@ def unreached(root: Path = ROOT) -> list[tuple[str, int, str]]:
     defs: dict[str, list[tuple[str, int, ast.AST]]] = {}
     roots: set[str] = set()
     docs: set[int] = set()
+    # every tree stays alive: ``docs`` holds node ids, and a freed tree's
+    # ids get reused by the nodes of the next file parsed
+    trees: list[ast.AST] = []
     for path in sorted((root / "flow_spark").rglob("*.py")):
         rel = str(path.relative_to(root))
         tree = ast.parse(path.read_text())
+        trees.append(tree)
         docs |= _docstrings(tree)
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):

@@ -36,17 +36,6 @@ def test_cpus_knob_fails_by_name(monkeypatch):
         session.get_spark("knob-check")
 
 
-def test_state_parts_knob_fails_by_name(spark, monkeypatch):
-    from flow_spark.queries.streaming_windows import _state_parts
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTS", "8.5")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PARTS"):
-        with _state_parts(spark):
-            pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_overlapping_state_parts_restore_the_session(spark):
     """A second stateful start waits for the first one's restore, so the
     two restores cannot run out of order and leave the session narrowed."""

@@ -1400,6 +1400,90 @@ def test_deletion_vectors_survive_merge_and_compaction(spark, tmp_path):
         assert m["files"]
 
 
+def test_deletion_vectors_across_commit_paths(spark, tmp_path):
+    """Each commit path carries the head's deletion vectors exactly when it
+    keeps head files: a rollback past a delete brings the rows back; an
+    append, a compaction and an incremental z-order pass after a delete
+    keep them deleted; a full rewrite drops ``dv_dirs``, so vacuum
+    reclaims the sidecar."""
+    from flow_spark.operators.snapshots import (
+        _read_manifest,
+        snapshot_append,
+        snapshot_compact,
+        snapshot_delete,
+        snapshot_optimize_zorder,
+        snapshot_rollback,
+        snapshot_vacuum,
+    )
+
+    t = str(tmp_path / "tbl")
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, numPartitions=4).selectExpr(
+            "CAST(id AS INT) AS k", "id * 3 AS v"
+        )
+
+    def keys():
+        return sorted(r.k for r in snapshot_read(spark, t).collect())
+
+    def dv_dirs():
+        return _read_manifest(t, current_version(t)).get("dv_dirs")
+
+    v1 = snapshot_write(rows(0, 100), t)
+    snapshot_delete(spark, t, "k < 10")
+    assert keys() == list(range(10, 100))
+    snapshot_rollback(t, v1)
+    assert keys() == list(range(100))
+    assert not dv_dirs()
+
+    snapshot_delete(spark, t, "k < 10")
+    snapshot_append(rows(100, 110), t)
+    assert keys() == list(range(10, 110)) and dv_dirs()
+    # the appended files are the small ones: they are packed, the
+    # deleted-from files are kept and keep their vectors
+    big = max(os.path.getsize(f) for f in snapshot_files(t, current_version(t)))
+    v = snapshot_compact(spark, t, target_bytes=big)
+    assert v == current_version(t) and len(snapshot_files(t, v)) < 8
+    assert keys() == list(range(10, 110)) and dv_dirs()
+
+    snapshot_optimize_zorder(spark, t, "k", "v", target_rows_per_file=40)
+    assert keys() == list(range(10, 110)) and not dv_dirs()
+    snapshot_delete(spark, t, "k >= 100")
+    snapshot_append(rows(200, 210), t)
+    snapshot_optimize_zorder(
+        spark, t, "k", "v", target_rows_per_file=40, incremental=True
+    )
+    expected = list(range(10, 100)) + list(range(200, 210))
+    assert keys() == expected and dv_dirs()
+
+    snapshot_write(snapshot_read(spark, t), t)
+    assert keys() == expected and not dv_dirs()
+    snapshot_vacuum(t, keep_versions=1, orphan_grace_seconds=0)
+    assert os.listdir(os.path.join(t, "_dv")) == []
+    assert keys() == expected
+
+
+def test_rollback_past_drop_column_keeps_the_column_writable(spark, tmp_path):
+    """A rollback takes the target's retired physical names, not the
+    head's: a column the target still has must not count as retired, or
+    every later write of it is refused."""
+    from flow_spark.operators.snapshots import (
+        snapshot_append,
+        snapshot_drop_column,
+        snapshot_rollback,
+    )
+
+    t = str(tmp_path / "tbl")
+    v1 = snapshot_write(spark.createDataFrame([(1, 10)], "k int, z int"), t)
+    snapshot_drop_column(t, "z")
+    snapshot_rollback(t, v1)
+    snapshot_append(spark.createDataFrame([(2, 20)], "k int, z int"), t)
+    assert sorted(tuple(r) for r in snapshot_read(spark, t).collect()) == [
+        (1, 10),
+        (2, 20),
+    ]
+
+
 def test_deletion_vectors_with_bloom_and_changes(spark, tmp_path):
     """DV composes with the rest of the layer: bloom index built AFTER a
     delete excludes deleted rows' keys; the changefeed between versions
